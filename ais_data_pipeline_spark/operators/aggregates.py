@@ -1,21 +1,36 @@
 """Aggregation operators (reference A1-A6) plus the grouped layer the
 reference lacks (SURVEY §2.5 "Absent": Spark built-ins, exposed here).
 
-The per-column profiling aggregates deliberately batch EVERY column into
-ONE ``agg`` so the whole profile is a single partial+final aggregation
-pass over the data — one scan, no shuffle beyond the final combine,
-exactly how a 100 TB profile must run.
+The per-column profiling aggregates batch EVERY column into ONE ``agg``
+so each profile is a single partial+final aggregation pass over the
+data — one scan, no shuffle beyond the final combine, exactly how a
+100 TB profile must run. Keep HyperLogLog (``approx_count_distinct``)
+out of an aggregate that something waits on when it can ride a pass
+that runs anyway: it is an imperative aggregate, so Spark drops
+whole-stage code generation for the whole ``agg`` it appears in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def row_count(df: DataFrame) -> int:
-    """Reference A1."""
-    return df.count()
+def distinct_count_aggs(columns: list[str], approx: bool = False) -> list[Column]:
+    """One ``<column>__nd`` distinct count per column — the aggregates
+    behind ``distinct_ratios``, for a caller that adds them to a pass it
+    already runs (an ``Observation`` on a write) beside its own row
+    count; ``ratios_from`` turns the result into ratios."""
+    cd = F.approx_count_distinct if approx else F.count_distinct
+    return [cd(F.col(c)).alias(f"{c}__nd") for c in columns]
+
+
+def ratios_from(metrics, columns: list[str], n_rows: int) -> dict[str, float]:
+    """Distinct ratios from a ``distinct_count_aggs`` result (a Row or an
+    ``Observation``'s dict) over ``n_rows`` rows; no rows reads as one,
+    so every ratio is 0."""
+    n = n_rows or 1
+    return {c: metrics[f"{c}__nd"] / n for c in columns}
 
 
 def distinct_ratios(df: DataFrame, columns: list[str], approx: bool = False) -> dict[str, float]:
@@ -26,12 +41,10 @@ def distinct_ratios(df: DataFrame, columns: list[str], approx: bool = False) -> 
     the right call at 100 TB since the consumer is a 0.1/0.01 threshold
     rule that tolerates approximation (SURVEY §2.5 A2).
     """
-    cd = F.approx_count_distinct if approx else F.count_distinct
-    aggs = [cd(F.col(c)).alias(f"{c}__nd") for c in columns]
-    aggs.append(F.count(F.lit(1)).alias("__n"))
-    row = df.agg(*aggs).first()
-    n = row["__n"] or 1
-    return {c: row[f"{c}__nd"] / n for c in columns}
+    row = df.agg(
+        *distinct_count_aggs(columns, approx), F.count(F.lit(1)).alias("__n")
+    ).first()
+    return ratios_from(row, columns, row["__n"])
 
 
 def min_max(df: DataFrame, columns: list[str]) -> dict[str, tuple]:
@@ -43,36 +56,6 @@ def min_max(df: DataFrame, columns: list[str]) -> dict[str, tuple]:
         aggs.append(F.max(F.col(c)).alias(f"{c}__max"))
     row = df.agg(*aggs).first()
     return {c: (row[f"{c}__min"], row[f"{c}__max"]) for c in columns}
-
-
-def null_counts(df: DataFrame, columns: list[str] | None = None) -> dict[str, int]:
-    """Null count per column, one pass (profiling support for the
-    downcast ladder's null-flag inputs, reference T6)."""
-    columns = columns or df.columns
-    aggs = [F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in columns]
-    row = df.agg(*aggs).first()
-    return row.asDict()
-
-
-def count_matching(df: DataFrame, predicate: Column) -> int:
-    """Reference A6: ``filter(...).count()``."""
-    return df.filter(predicate).count()
-
-
-def column_sum(df: DataFrame, column: str):
-    """Reference A4."""
-    return df.agg(F.sum(column).alias("s")).first()["s"]
-
-
-def column_max(df: DataFrame, column: str):
-    """Reference A5."""
-    return df.agg(F.max(column).alias("m")).first()["m"]
-
-
-def grouped(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    """Grouped aggregation — map-side partial agg + one shuffle on the
-    keys; the workhorse the reference never had."""
-    return df.groupBy(*keys).agg(*aggs)
 
 
 def salted_grouped(
@@ -107,15 +90,6 @@ def salted_grouped(
     )
 
 
-def profile_summary(df: DataFrame, sample_rows: int = 50_000) -> Row:
-    """One-pass dataset profile over a bounded sample (reference M4's
-    sampling idea without the head() ordering bias — SURVEY §2.6 note)."""
-    return df.limit(sample_rows).agg(
-        F.count(F.lit(1)).alias("rows"),
-        *[F.approx_count_distinct(c).alias(f"{c}__nd") for c in df.columns],
-    ).first()
-
-
 def zscore_per_group(
     df: DataFrame,
     key_cols: list[str],
@@ -143,27 +117,3 @@ def zscore_per_group(
         return pdf
 
     return df.groupBy(*key_cols).applyInPandas(normalize, schema)
-
-
-def profile_stats(
-    df: DataFrame,
-    ratio_cols: list[str],
-    range_cols: list[str],
-    approx: bool = False,
-) -> tuple[dict[str, float], dict[str, tuple]]:
-    """Distinct ratios AND min/max ranges in ONE batched aggregation —
-    the fused form of ``distinct_ratios`` + ``min_max`` for callers
-    needing both (the tightening planner): one pass over the input
-    instead of two, which at 100 TB halves the profiling scan cost
-    (and over a cached frame halves the cache traversals)."""
-    cd = F.approx_count_distinct if approx else F.count_distinct
-    aggs = [cd(F.col(c)).alias(f"{c}__nd") for c in ratio_cols]
-    aggs.append(F.count(F.lit(1)).alias("__n"))
-    for c in range_cols:
-        aggs.append(F.min(F.col(c)).alias(f"{c}__min"))
-        aggs.append(F.max(F.col(c)).alias(f"{c}__max"))
-    row = df.agg(*aggs).first()
-    n = row["__n"] or 1
-    ratios = {c: row[f"{c}__nd"] / n for c in ratio_cols}
-    ranges = {c: (row[f"{c}__min"], row[f"{c}__max"]) for c in range_cols}
-    return ratios, ranges

@@ -7,12 +7,15 @@ ratios and cast low-cardinality columns to categorical at thresholds
 0.10 (strings) / 0.01 (numerics) (A2/T2/T3), measure min/max and
 downcast integers with out-of-range rows quarantined (A3/T4-T6/P4/K4).
 
-Spark-first shape: a driver-side planner that runs a handful of batched
-aggregation actions (ONE agg per profile kind — single pass each) and
-then emits ordinary DataFrame casts for Catalyst to execute. Zero custom
-optimizer rules (SURVEY §4 conclusion). At 100 TB the distinct profile
-uses HyperLogLog sketches and the sample estimator reads a bounded
-number of rows — profiling cost is independent of table size.
+Spark-first shape: a driver-side planner that runs batched aggregation
+actions (one agg per profile kind — single pass each) and then emits
+ordinary DataFrame casts for Catalyst to execute. Zero custom optimizer
+rules (SURVEY §4 conclusion). The pass a caller waits on profiles only
+what the cast plan depends on; string distinct ratios decide no cast,
+so callers measure them on a pass that already runs and apply
+``categorical_strings`` afterwards. At 100 TB the distinct profile uses
+HyperLogLog sketches and the sample estimator reads a bounded number of
+rows — profiling cost is independent of table size.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ais_data_pipeline_spark.functions.numeric import smallest_int_type
-from ais_data_pipeline_spark.operators.aggregates import profile_stats
+from ais_data_pipeline_spark.operators.aggregates import distinct_ratios, min_max
 from ais_data_pipeline_spark.operators.filters import fits_int32_or_null
 
 #: Reference thresholds (notebooks/preprocessing_with_polars.ipynb:1862,2726).
@@ -69,47 +72,54 @@ class TighteningPlan:
 
 def plan_tightening(
     df: DataFrame,
-    string_threshold: float = STRING_CATEGORICAL_THRESHOLD,
     numeric_threshold: float = NUMERIC_CATEGORICAL_THRESHOLD,
     approx: bool = True,
 ) -> TighteningPlan:
-    """Profile ``df`` and decide categorical/downcast treatment.
+    """Profile ``df`` and decide everything the written schema depends
+    on: downcasts, quarantine columns and numeric categoricals.
 
-    ONE batched aggregation total: distinct ratios (string+integer
-    columns) and integer min/max ranges fuse into a single agg
-    (``aggregates.profile_stats``) — a single pass over the input
-    where the reference runs one pass per profile kind.
+    One min/max aggregate over the integer columns decides the
+    downcasts; it carries no HyperLogLog, so it runs whole-stage
+    code-generated. A narrowed column is never categorical, so distinct
+    ratios are measured — in a second, small aggregate — only for the
+    integer columns that do not narrow, and only when one exists.
+    ``categorical_strings`` is left empty: it decides no cast, and the
+    caller fills it from ratios measured on a pass it already runs.
     """
-    string_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
     int_cols = [
         f.name
         for f in df.schema.fields
         if isinstance(f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
     ]
     plan = TighteningPlan()
-    if not (string_cols or int_cols):
+    if not int_cols:
         return plan
-    ratios, ranges = profile_stats(
-        df, string_cols + int_cols, int_cols, approx=approx
-    )
-    for c in string_cols:
-        if ratios.get(c, 1.0) <= string_threshold:
-            plan.categorical_strings.append(c)
-
-    if int_cols:
-        for c in int_cols:
-            lo, hi = ranges[c]
-            target = smallest_int_type(lo, hi, allow_boolean=True)
-            current = df.schema[c].dataType
-            if _width(target) < _width(current):
-                plan.downcasts[c] = target
-            if isinstance(current, T.LongType) and (
-                (lo is not None and lo < -(2**31)) or (hi is not None and hi > 2**31 - 1)
-            ):
-                plan.quarantine_columns.append(c)
-            if ratios.get(c, 1.0) <= numeric_threshold and c not in plan.downcasts:
-                plan.categorical_numerics.append(c)
+    ranges = min_max(df, int_cols)
+    for c in int_cols:
+        lo, hi = ranges[c]
+        target = smallest_int_type(lo, hi, allow_boolean=True)
+        current = df.schema[c].dataType
+        if _width(target) < _width(current):
+            plan.downcasts[c] = target
+        if isinstance(current, T.LongType) and (
+            (lo is not None and lo < -(2**31)) or (hi is not None and hi > 2**31 - 1)
+        ):
+            plan.quarantine_columns.append(c)
+    wide = [c for c in int_cols if c not in plan.downcasts]
+    if wide:
+        ratios = distinct_ratios(df, wide, approx=approx)
+        plan.categorical_numerics = [c for c in wide if ratios[c] <= numeric_threshold]
     return plan
+
+
+def categorical_strings(
+    ratios: dict[str, float], threshold: float = STRING_CATEGORICAL_THRESHOLD
+) -> list[str]:
+    """The string columns of ``ratios`` (column → distinct ratio) that
+    count as categorical (reference T2). The decision casts nothing —
+    ``apply_tightening`` keeps them StringType — so the ratios can come
+    from any pass over the same rows, such as the write's Observation."""
+    return [c for c, r in ratios.items() if r <= threshold]
 
 
 def _width(t: T.DataType) -> int:

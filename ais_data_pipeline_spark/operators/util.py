@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -22,8 +24,16 @@ def in_values_cond(col_name: str, values) -> "F.Column":
     ``In`` expression — same pushed-filter form (``PushedFilters:
     [In(col, …)]``), same NULL semantics (a NULL literal in the list
     never matches, exactly like ``isin``). Values may be str, int,
-    float, bool, or None. Empty list → ``false`` (isin() with an empty
-    list is the same constant-false filter)."""
+    finite float, bool, or None; a NaN or infinite float raises
+    ``ValueError``. Empty list → ``false`` (isin() with an empty list
+    is the same constant-false filter).
+
+    A string containing a quote or backslash renders as its UTF-8 bytes
+    in a hex literal cast to string, which parses to the same value
+    whether or not ``spark.sql.parser.escapedStringLiterals`` is set
+    (the escapes a quoted literal would need read differently under
+    the two settings); the cast folds to a plain literal before
+    pushdown."""
     if not values:
         return F.lit(False)
     rendered = []
@@ -35,9 +45,15 @@ def in_values_cond(col_name: str, values) -> "F.Column":
         elif isinstance(v, int):
             rendered.append(f"{v}L")
         elif isinstance(v, float):
+            if not math.isfinite(v):
+                raise ValueError(f"in_values_cond: non-finite float {v!r}")
             rendered.append(repr(v) + "D")
         else:
-            rendered.append("'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'")
+            v = str(v)
+            if "'" in v or "\\" in v:
+                rendered.append(f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)")
+            else:
+                rendered.append(f"'{v}'")
     quoted = "`" + col_name.replace("`", "``") + "`"
     return F.expr(f"{quoted} IN ({', '.join(rendered)})")
 

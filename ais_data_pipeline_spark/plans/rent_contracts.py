@@ -11,7 +11,9 @@ Spark shape: one lazy DataFrame plan mutated by the profiling pass
 (driver-side decisions, executor-side batched aggs), then a single
 partitioned zstd parquet write plus the quarantine side-write. Bounded
 memory at any scale — nothing ever collects to the driver except the
-profile aggregates.
+profile aggregates. The profile the writes wait on is the min/max pass
+the casts depend on; the string distinct ratios (which decide no cast)
+ride the main write's Observation.
 
 Invariants reproduced (SURVEY §5): 27-column output (no ``_ar``, no
 ``actual_area``), unparseable dates → null, rows_out + rows_quarantined
@@ -22,13 +24,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ais_data_pipeline_spark.observability import Stopwatch, log
+from ais_data_pipeline_spark.operators.aggregates import distinct_count_aggs, ratios_from
 from ais_data_pipeline_spark.operators.profiling import (
+    TighteningPlan,
     apply_tightening,
+    categorical_strings,
     estimate_size,
     int32_admission_predicate,
     plan_tightening,
@@ -48,6 +54,7 @@ class PipelineResult:
     columns_out: list[str] = field(default_factory=list)
     est_size: dict = field(default_factory=dict)
     elapsed_sec: float = 0.0
+    plan: TighteningPlan = field(default_factory=TighteningPlan)
 
 
 def run_pipeline(
@@ -87,16 +94,12 @@ def run_pipeline(
     else:
         tagged, good, bad = None, df, None
 
-    # profiling pass → categorical/downcast decisions (2 batched aggs)
+    # profiling pass → downcast/numeric-categorical decisions (one
+    # min/max agg, plus a distinct-ratio agg only for integer columns
+    # that do not narrow)
     plan = plan_tightening(good)
-    log(
-        "tightening_plan",
-        categorical_strings=plan.categorical_strings,
-        categorical_numerics=plan.categorical_numerics,
-        downcasts={c: str(t) for c, t in plan.downcasts.items()},
-        quarantine_columns=plan.quarantine_columns,
-    )
     tightened = apply_tightening(good, plan)
+    string_cols = [f.name for f in good.schema.fields if isinstance(f.dataType, T.StringType)]
     result.columns_out = tightened.columns
     if estimate:
         result.est_size = estimate_size(tightened)
@@ -116,7 +119,13 @@ def run_pipeline(
 
     def write_main() -> None:
         (
-            tightened.observe(obs_out, F.count(F.lit(1)).alias("n"))
+            tightened.observe(
+                obs_out,
+                F.count(F.lit(1)).alias("n"),
+                # HyperLogLog sketches of the string columns: they decide
+                # only plan.categorical_strings, which casts nothing
+                *distinct_count_aggs(string_cols, approx=True),
+            )
             .write.mode("overwrite")
             .option("compression", "zstd")
             .parquet(out_path)
@@ -132,15 +141,31 @@ def run_pipeline(
             .parquet(quarantine_path)
         )
 
+    # the pool threads take the caller's local properties (job group,
+    # scheduler pool), so the writes' jobs stay in the caller's group;
+    # one wrap per thunk, since each write sets its own SQL execution id
+    # in the copy it gets
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(write_main)]
+        futs = [pool.submit(inheritable_thread_target(spark)(write_main))]
         if bad is not None:
-            futs.append(pool.submit(write_bad))
+            futs.append(pool.submit(inheritable_thread_target(spark)(write_bad)))
         for f in futs:
             f.result()
-    result.rows_out = obs_out.get["n"]
+    metrics = obs_out.get
+    result.rows_out = metrics["n"]
     if bad is not None:
         result.rows_quarantined = obs_bad.get["n"]
+    plan.categorical_strings = categorical_strings(
+        ratios_from(metrics, string_cols, result.rows_out)
+    )
+    result.plan = plan
+    log(
+        "tightening_plan",
+        categorical_strings=plan.categorical_strings,
+        categorical_numerics=plan.categorical_numerics,
+        downcasts={c: str(t) for c, t in plan.downcasts.items()},
+        quarantine_columns=plan.quarantine_columns,
+    )
     if tagged is not None:
         tagged.unpersist()
     result.rows_in = result.rows_out + result.rows_quarantined

@@ -606,9 +606,9 @@ def _dedup_batch_parts(
         # via a plain NOT-IN filter instead of embedding a broadcast
         # exchange, which Spark executes as its own async job (r19; the
         # per-batch broadcast jobs were the dominant scheduler cost).
-        # A NULL id never matches the anti-join, so the filter keeps it
-        # too.
-        drop_ids = [r["doc"] for r in drops.collect()]
+        # A NULL id never matches the anti-join, so it leaves the list:
+        # a NULL inside NOT IN would make the filter drop every row.
+        drop_ids = [r["doc"] for r in drops.collect() if r["doc"] is not None]
         n_drops = len(drop_ids)
         survivors = batch_df.filter(_keep_cond(id_col, drop_ids))
     else:

@@ -8205,3 +8205,31 @@ def test_robots_txt_rules(spark):
         7: (False, None), 8: (True, None), 9: (False, None),
         10: (True, None), 11: (True, None),
     }
+
+
+def test_in_values_cond_literals_under_both_escape_settings(spark):
+    """The literal IN list matches strings with quotes and backslashes
+    under both settings of ``spark.sql.parser.escapedStringLiterals``
+    (the escapes a quoted literal needs read differently under each),
+    keeps NULL from matching, and rejects non-finite floats instead of
+    rendering unparsable ``nanD``/``infD``."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.operators.util import in_values_cond
+
+    keys = ["plain", "it's", "C:\\dir\\", "\\'", "tab\\t", "naïve 'é'"]
+    df = local_df(spark, [(k,) for k in keys + ["other", "its", None]], "k string")
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    try:
+        for setting in ("false", "true"):
+            spark.conf.set(conf, setting)
+            hit = df.filter(in_values_cond("k", keys + [None]))
+            assert sorted(r["k"] for r in hit.collect()) == sorted(keys), setting
+    finally:
+        spark.conf.set(conf, old)
+
+    nums = local_df(spark, [(1.5,), (2.0,), (None,)], "x double")
+    assert [r["x"] for r in nums.filter(in_values_cond("x", [1.5, -0.25])).collect()] == [1.5]
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            in_values_cond("x", [1.5, bad])

@@ -122,6 +122,127 @@ def test_pipeline_downcast_decisions(spark, fixture_csv, tmp_path):
     # amounts fit int32 after quarantine → narrowed
     assert dt["contract_amount"] in ("int", "string")
 
+    # the reported plan — string ratios taken on the write's Observation
+    # — equals the fused single-aggregate profile of the admitted rows
+    from ais_data_pipeline_spark.operators.profiling import int32_admission_predicate
+    from ais_data_pipeline_spark.operators.projections import exclude_substring
+    from ais_data_pipeline_spark.operators.transforms import parse_date_lenient
+    from ais_data_pipeline_spark.plans.rent_contracts import DATE_COLUMNS
+    from ais_data_pipeline_spark.sources.csv import read_csv
+
+    parsed = parse_date_lenient(
+        exclude_substring(read_csv(spark, fixture_csv, schema=SCHEMA), "_ar"), DATE_COLUMNS
+    )
+    longs = [f.name for f in parsed.schema.fields if isinstance(f.dataType, T.LongType)]
+    good = parsed.filter(int32_admission_predicate(longs))
+    assert res.plan == _fused_plan(good)
+    assert res.plan.categorical_strings == ["contract_reg_type_en", "area_name_en"]
+
+
+def _fused_plan(df):
+    """Reference decisions: the single fused profile aggregate that
+    ``plan_tightening`` used to run (HyperLogLog distinct counts of every
+    string and integer column plus integer min/max, one ``agg``), with
+    the 0.10/0.01 thresholds and the downcast/quarantine rules inline."""
+    from ais_data_pipeline_spark.functions.numeric import smallest_int_type
+    from ais_data_pipeline_spark.operators.profiling import TighteningPlan
+
+    width = {T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4, T.LongType: 8}
+    strings = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
+    ints = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
+    ]
+    aggs = [F.approx_count_distinct(c).alias(f"{c}__nd") for c in strings + ints]
+    aggs.append(F.count(F.lit(1)).alias("__n"))
+    for c in ints:
+        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
+    row = df.agg(*aggs).first()
+    n = row["__n"] or 1
+    plan = TighteningPlan()
+    plan.categorical_strings = [c for c in strings if row[f"{c}__nd"] / n <= 0.10]
+    for c in ints:
+        lo, hi = row[f"{c}__min"], row[f"{c}__max"]
+        current = df.schema[c].dataType
+        target = smallest_int_type(lo, hi, allow_boolean=True)
+        if width.get(type(target), 16) < width.get(type(current), 16):
+            plan.downcasts[c] = target
+        if isinstance(current, T.LongType) and (
+            (lo is not None and lo < -(2**31)) or (hi is not None and hi > 2**31 - 1)
+        ):
+            plan.quarantine_columns.append(c)
+        if row[f"{c}__nd"] / n <= 0.01 and c not in plan.downcasts:
+            plan.categorical_numerics.append(c)
+    return plan
+
+
+def test_plan_tightening_decisions_match_fused_profile(spark, monkeypatch):
+    """The split profile — a min/max aggregate, a distinct-ratio
+    aggregate only over integer columns that do not narrow, string
+    ratios measured elsewhere — decides exactly what the fused single
+    aggregate decided, and skips the second aggregate when every
+    integer column narrows."""
+    from ais_data_pipeline_spark.operators import profiling
+    from ais_data_pipeline_spark.operators.aggregates import distinct_ratios
+
+    calls = []
+
+    def recorded(df, columns, approx=False):
+        calls.append(list(columns))
+        return distinct_ratios(df, columns, approx)
+
+    monkeypatch.setattr(profiling, "distinct_ratios", recorded)
+    df = spark.range(2000).selectExpr(
+        "concat('v', id % 5) AS s_low",
+        "concat('u', id) AS s_high",
+        "id % 100 AS l_narrow",
+        "id * 10000000 AS l_wide",  # beyond int32: quarantined
+        # two values at the int32 extremes: no narrower type, 2/2000 distinct
+        "CAST(CASE WHEN id % 2 = 0 THEN -2147483648 ELSE 2147483647 END AS INT) AS i_lowcard",
+        "CAST(id * 1000003 AS INT) AS i_high",  # needs int32, all distinct
+    )
+    plan = profiling.plan_tightening(df)
+    assert calls == [["l_wide", "i_lowcard", "i_high"]]
+    plan.categorical_strings = profiling.categorical_strings(
+        distinct_ratios(df, ["s_low", "s_high"], approx=True)
+    )
+    assert plan == _fused_plan(df)
+    assert plan.categorical_strings == ["s_low"]
+    assert plan.categorical_numerics == ["i_lowcard"]
+    assert plan.quarantine_columns == ["l_wide"]
+    assert plan.downcasts == {"l_narrow": T.ByteType()}
+
+    calls.clear()
+    narrow = df.select("s_low", "s_high", "l_narrow")
+    plan = profiling.plan_tightening(narrow)
+    assert calls == []
+    plan.categorical_strings = profiling.categorical_strings(
+        distinct_ratios(narrow, ["s_low", "s_high"], approx=True)
+    )
+    assert plan == _fused_plan(narrow)
+
+
+def test_pipeline_jobs_stay_in_caller_job_group(spark, fixture_csv, tmp_path):
+    """Every job of one ``run_pipeline`` call — the overlapped writes on
+    its thread pool included — carries the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "rent-contracts-under-test"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(
+            spark, fixture_csv, str(tmp_path / "m"), str(tmp_path / "q"), schema=SCHEMA
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    grouped = sorted(tracker.getJobIdsForGroup(group))
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(grouped) >= 3  # the profile aggregate and both writes
+    assert grouped == list(range(grouped[0], grouped[-1] + 1))
+
 
 def test_snapshot_time_travel(spark, tmp_path):
     """Versioned table: append/overwrite commits, historical reads,
@@ -247,8 +368,14 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
     """r19: batches at or under ``pushdown_limit`` collect their drop
     set once and filter consumers by literal NOT-IN values; larger
     batches keep the r18 pinned-drop-set + broadcast-anti shape. Force
-    the LARGE regime (pushdown_limit=0) on the same data — kept rows,
-    accounting, and every index table must be bit-identical."""
+    the LARGE regime (pushdown_limit=-1: no batch, not even an empty
+    one, is small) on the same batches — kept rows, accounting, and
+    every index table must be bit-identical. Batch 1 carries a NULL-id
+    exact copy of an index doc (a NULL in the collected drop set once
+    made NOT IN drop every survivor) and a duplicate id whose one row
+    is an exact copy (both rows go, as with the anti-join); batch 2 is
+    empty."""
+    from ais_data_pipeline_spark.localrel import local_df
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
@@ -257,19 +384,41 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
 
     docs = read_table(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % 3 == 0)
-    batch = docs.filter(F.col("doc_id") % 3 == 1)
+    hist_texts = [r["text"] for r in hist.orderBy("doc_id").limit(2).collect()]
+    batches = [
+        docs.filter(F.col("doc_id") % 3 == 1),
+        local_df(
+            spark,
+            [
+                (None, hist_texts[0], "en", "b", 0),
+                (900_001, "fresh words that no history document has ever used", "en", "b", 0),
+                (900_002, hist_texts[1], "en", "b", 0),
+                (900_002, "another fresh sentence seen only in this batch", "en", "b", 0),
+            ],
+            docs.schema,
+        ),
+        docs.limit(0),
+    ]
+
+    def null_last(t):
+        return tuple((v is None, v or 0) for v in t)
 
     results = {}
-    for tag, lim in (("small", 10_000), ("large", 0)):
+    for tag, lim in (("small", 10_000), ("large", -1)):
         base = str(tmp_path / tag)
         index, out = base + "/idx", base + "/out"
         build_dedup_index(hist, index)
-        counts = dedup_and_append_batch(
-            batch, 0, index, out, threshold=0.5, pushdown_limit=lim
+        counts = [
+            dedup_and_append_batch(b, k, index, out, threshold=0.5, pushdown_limit=lim)
+            for k, b in enumerate(batches)
+        ]
+        kept = sorted(
+            ((r["src_batch"], r["doc_id"]) for r in spark.read.parquet(out).collect()),
+            key=null_last,
         )
-        kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
         hashes = sorted(
-            r["doc"] for r in spark.read.parquet(index + "/hashes").collect()
+            ((r["doc"],) for r in spark.read.parquet(index + "/hashes").collect()),
+            key=null_last,
         )
         buckets = sorted(
             (r["doc"], r["band"], r["bucket"])
@@ -277,6 +426,9 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
         )
         results[tag] = (counts, kept, hashes, buckets)
     assert results["small"] == results["large"]
+    counts, kept = results["small"][:2]
+    assert counts[1:] == [(4, 2), (0, 0)]
+    assert [d for b, d in kept if b == 1] == [900_001, None]
 
 
 def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
