@@ -22,13 +22,15 @@ Drop rule (deterministic, oracle-expressible — no iteration):
   parameters to ``minhash_near_dup``, whose brute-force oracle proves
   banding recall on this corpus.
 
-Scale shape: the index side is never shuffled — batch hashes / band
-rows / candidate id-lists are tiny and BROADCAST, so every index probe
-is one pruned-or-streamed scan of the index table with a broadcast-hash
-join. Index appends are ``src_batch=`` partition directories written
-with dynamic partition overwrite: a replayed micro-batch overwrites its
-own partition, making the sink idempotent (the same
-checkpoint+idempotence recipe as ``ingest.run_upsert_sink``).
+Scale shape: the index side is never shuffled — the batch's features,
+band rows and candidate pairs are the BROADCAST side, so every index
+probe is one pruned-or-streamed scan of the index table with a
+broadcast-hash join, and the drop set is deduplicated once, after the
+union of all legs, never per leg. Index appends are ``src_batch=``
+partition directories written with dynamic partition overwrite: a
+replayed micro-batch overwrites its own partition, making the sink
+idempotent (the same checkpoint+idempotence recipe as
+``ingest.run_upsert_sink``).
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ from ais_data_pipeline_spark.operators.dedup import (
     shingle_hashes_from_tokens,
     tokens_lower,
 )
-from ais_data_pipeline_spark.operators.util import in_values_cond
+from ais_data_pipeline_spark.operators.util import gated_broadcast, in_values_cond
 
 # explicit read schemas: index partitions may be legitimately empty
 # (a batch where nothing survived), and schema inference fails there
@@ -210,9 +212,7 @@ def build_dedup_index(
     # the four table writes are independent jobs over the two pinned
     # frames — overlap them (guide §2.6, same shape as the batch
     # append path)
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = [
+    _overlap(docs.sparkSession, [
         lambda: _write_slice(
             feats.select("doc", "text_hash"),
             os.path.join(root, "hashes"),
@@ -231,9 +231,22 @@ def build_dedup_index(
             bloom_col="bucket", single_file=False,
         ),
         lambda: _write_bucket_stats(bands_df, root, HISTORY_BATCH),
-    ]
+    ])
+
+
+def _overlap(spark: SparkSession, writes: list) -> None:
+    """Run independent writes concurrently and re-raise the first
+    failure. Each thunk is wrapped on its own so its pool thread takes
+    the caller's local properties (job group, scheduler pool) and its
+    jobs stay in the caller's group; one wrap per thunk, since each
+    write sets its own SQL execution id in the copy it gets."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for fut in [pool.submit(w) for w in writes]:
+        futs = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+        for fut in futs:
             fut.result()
 
 
@@ -299,28 +312,25 @@ def _hot_buckets(
     )
 
 
-def _jaccard_drops(
-    pairs: DataFrame,  # (doc, other) candidate pairs, doc = batch side
-    batch_sh: DataFrame,  # (doc, shingles)
-    other_sh: DataFrame,  # (other, other_shingles)
+def _near_drops(
+    pairs: DataFrame,  # (doc, other_shingles), doc = the batch doc to drop
+    batch_sh: DataFrame,  # (doc, shingles) of the batch
     threshold: float,
 ) -> DataFrame:
     """Batch docs whose exact Jaccard vs a candidate clears the
     threshold — the verify half of LSH dedup, on stored shingle
-    hashes (array_intersect on longs, same as minhash_near_dup)."""
-    scored = (
+    hashes (array_intersect on longs, same as minhash_near_dup). Every
+    verify leg broadcasts the same ``batch_sh``, so the legs share one
+    exchange. Duplicate pairs give duplicate docs; callers dedupe."""
+    n_inter = F.size(F.array_intersect("shingles", "other_shingles"))
+    jaccard = n_inter.cast("double") / (
+        F.size("shingles") + F.size("other_shingles") - n_inter
+    ).cast("double")
+    return (
         pairs.join(F.broadcast(batch_sh), "doc")
-        .join(F.broadcast(other_sh), "other")
-        .withColumn("n_inter", F.size(F.array_intersect("shingles", "other_shingles")))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (
-                F.size("shingles") + F.size("other_shingles") - F.col("n_inter")
-            ).cast("double"),
-        )
+        .filter(jaccard >= threshold)
+        .select("doc")
     )
-    return scored.filter(F.col("jaccard") >= threshold).select("doc").distinct()
 
 
 def dedup_batch_against_index(
@@ -359,12 +369,12 @@ def _dedup_batch_parts(
     pushdown_limit: int = 10_000,
     exclude_batch: int | None = None,
     pin_drops: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, bool, int, int]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, bool, int, int, list | None]:
     """Survivors of one batch under the drop rule in the module
-    docstring. The batch (small) is always the broadcast side; the
-    index tables are scanned once each with the batch's hash / bucket
-    sets pushed through broadcast joins — no index shuffle, no
-    full-corpus recompute.
+    docstring. The batch is the broadcast side (its within-batch
+    self-join only while it fits the broadcast threshold); the index
+    tables are scanned once each and streamed through broadcast joins
+    — no index shuffle, no full-corpus recompute.
 
     ``exclude_batch`` (the sink passes its batch_id) drops that
     batch's OWN ``src_batch=`` partitions from every index read: after
@@ -375,26 +385,31 @@ def _dedup_batch_parts(
     batch forever (round-10 review: silent recall loss masked by the
     clean-replay test). Partition pruning makes the filter free.
 
-    When the batch's distinct hash / bucket sets fit under
-    ``pushdown_limit``, they additionally push into the index scans as
-    literal IN-filters: the hashes and buckets tables are written with
+    When the batch is small (``n_in <= pushdown_limit``), its hash set
+    — and its bucket set, when that too fits under ``pushdown_limit``
+    — additionally pushes into the index scans as literal IN-filters:
+    the hashes and buckets tables are written with
     parquet bloom filters on those columns, so the reader skips whole
     row groups holding none of the probed values — for a dup-free
     batch the "scan" touches footers and bloom bitsets, not data
     pages. That is what keeps probe IO sub-linear in corpus size, on
     top of staying shuffle-free.
 
-    Job shape (r19, guide §1.2 step 1 — the per-micro-batch job floor
-    was the leg's dominant cost): ONE materialize pins everything the
-    batch derives — features, the exact-keep representative (the
-    keep-min groupBy + broadcast join folded into the same job), and
-    the PER-ROW minhash band array (``minhash_band_structs_sql``; the
-    old shape paid a second materialize + a signature shuffle per
-    batch). Band rows are then a narrow explode of the pinned frame
-    per consumer. The batch's distinct hash AND bucket probe sets
-    collect in one unioned job, and ``n_in`` rides the materialize as
-    an Observation — 3 driver jobs per batch before the writes, down
-    from 7.
+    Job shape (the per-micro-batch job floor is the leg's dominant
+    cost): ONE materialize pins everything the batch derives —
+    features, the exact-keep representative (the keep-min groupBy +
+    broadcast join folded into the same job), and the PER-ROW minhash
+    band array (``minhash_band_structs_sql``) — with ``n_in`` riding it
+    as an Observation. Band rows are then a narrow explode of the
+    pinned frame per consumer. A small batch then runs two more
+    queries: one shuffle-free collect of (hash, bucket array) rows,
+    deduplicated into both probe sets on the driver, and the drop-set
+    collect. The drop-set DAG has no distinct() and no shuffle: the
+    index tables stream past broadcasts of the batch side, the legs
+    share one band-row broadcast and one (doc, shingles) verify
+    broadcast (ReuseExchange), and AQE runs each of its four or five
+    exchanges as one job. A large batch skips the probe-set collect
+    and pins one distinct drop set instead.
 
     Returns ``(survivors, enriched, bands_b, drops, bands_filtered,
     n_in, n_drops, drop_ids)`` so the append path can REUSE the
@@ -483,60 +498,67 @@ def _dedup_batch_parts(
             .filter(F.col("n") > max_bucket_size)
             .select("band", "bucket")
         )
+        # no distinct(): the anti-join ignores duplicate keys
         hot = hot_w.union(
             _hot_buckets(spark, index_path, max_bucket_size, exclude_batch)
-        ).distinct()
+        )
         bands_b = bands_b.join(
             F.broadcast(hot), ["band", "bucket"], "left_anti"
         ).transform(materialize)
 
-    # the batch's distinct hash AND bucket probe sets collect in ONE
-    # unioned job (r19; two scheduler rounds per batch became one) —
-    # both sides are cheap scans of the pinned frame, each capped at
-    # pushdown_limit+1 exactly like the old per-set collects. Buckets
-    # ride as strings (BIGINT→string→int round-trips exactly).
-    lim = pushdown_limit + 1
-    probe_rows = (
-        feats.select(F.lit(0).alias("__t"), F.col("text_hash").alias("__v"))
-        .distinct()
-        .limit(lim)
-        .unionAll(
-            bands_b.select(
-                F.lit(1).alias("__t"), F.col("bucket").cast("string").alias("__v")
-            )
-            .distinct()
-            .limit(lim)
-        )
-        .collect()
-    )
-    batch_hashes = [r["__v"] for r in probe_rows if r["__t"] == 0]
-    batch_buckets = [
-        int(r["__v"]) for r in probe_rows if r["__t"] == 1 and r["__v"] is not None
-    ]
+    small = 0 <= n_in <= pushdown_limit
+    batch_hashes: list | None = None
+    batch_buckets: list | None = None
+    if small:
+        # Small batch: its probe sets come from ONE shuffle-free collect
+        # of the pinned frame — (text_hash, this row's bucket array) —
+        # deduplicated here on the driver, not by two distinct()
+        # shuffles. The hashes always fit under the limit (at most n_in
+        # of them). The buckets are collected before any hot-bucket
+        # pruning, so under a cap they are a superset of bands_b's: the
+        # IN-filter only prunes the scan, and the join below still
+        # matches the composite key.
+        hashes, buckets = set(), set()
+        for h, bks in enriched.select(
+            "text_hash", F.col("__bands.bucket")
+        ).collect():
+            if h is not None:  # a NULL never matches the probe join
+                hashes.add(h)
+            buckets.update(bks or ())
+        batch_hashes = sorted(hashes)
+        if len(buckets) <= pushdown_limit:
+            batch_buckets = sorted(buckets)
 
-    # (2) exact, vs index: probe the (huge) hash table with the batch's
-    # hash set — as a pushed IN-filter when small (bloom row-group
-    # skipping), else a broadcast semi-join — then anti the (tiny)
-    # match-list back
-    hist_hashes = spark.read.schema(_HASHES_SCHEMA).parquet(
-        os.path.join(root, "hashes")
-    )
-    if exclude_batch is not None:
-        hist_hashes = hist_hashes.filter(F.col("src_batch") != exclude_batch)
-    if len(batch_hashes) <= pushdown_limit:
-        probed_hashes = hist_hashes.filter(in_values_cond("text_hash", batch_hashes))
-    else:
-        probed_hashes = hist_hashes.join(
-            F.broadcast(feats.select("text_hash").distinct()), "text_hash", "left_semi"
-        )
-    hit_hashes = probed_hashes.select("text_hash").distinct()
-    exact_x = feats.join(F.broadcast(hit_hashes), "text_hash", "left_semi").select(
-        "doc"
+    def index_scan(table: str, schema: str) -> DataFrame:
+        df = spark.read.schema(schema).parquet(os.path.join(root, table))
+        if exclude_batch is not None:
+            df = df.filter(F.col("src_batch") != exclude_batch)
+        return df
+
+    # Drop-set DAG. The batch side is always broadcast and the index
+    # tables are streamed: no index shuffle and no distinct() — a
+    # semi- or anti-join does not care about duplicate keys, so the
+    # drop set is deduplicated once, at the end. The legs share their
+    # broadcasts (same bands_b relation, same (doc, shingles) verify
+    # side), so Spark's ReuseExchange plans about four exchanges.
+    batch_sh = feats.select("doc", "shingles")
+
+    # (2) exact, vs index: the hash table scan (IN-filtered when small:
+    # bloom row-group skipping) against the broadcast batch hashes
+    hist_hashes = index_scan("hashes", _HASHES_SCHEMA)
+    if batch_hashes is not None:
+        hist_hashes = hist_hashes.filter(in_values_cond("text_hash", batch_hashes))
+    exact_x = (
+        hist_hashes.select("text_hash")
+        .join(F.broadcast(feats.select("doc", "text_hash")), "text_hash")
+        .select("doc")
     )
 
     # (3) near-dup, within batch: shared band bucket -> a < b pairs,
-    # exact-Jaccard verify, drop the larger id
-    a, b = bands_b.alias("a"), bands_b.alias("b")
+    # exact-Jaccard verify, drop the larger id. The gate keeps a large
+    # batch's self-join shuffled instead of broadcasting it whole.
+    a = bands_b.alias("a")
+    b = gated_broadcast(bands_b, n_in * bands).alias("b")
     cands_w = (
         a.join(
             b,
@@ -544,80 +566,70 @@ def _dedup_batch_parts(
             & (F.col("a.bucket") == F.col("b.bucket")),
         )
         .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("b.doc").alias("doc"), F.col("a.doc").alias("other"))
-        .distinct()
+        .select(F.col("a.doc").alias("doc"), F.col("b.doc").alias("__later"))
     )
-    batch_sh = feats.select("doc", "shingles")
-    other_sh_w = feats.select(
-        F.col("doc").alias("other"), F.col("shingles").alias("other_shingles")
+    # the smaller id's shingles become the "other" side; the rename
+    # stays on the stream side so the broadcast matches the verify's
+    near_w = _near_drops(
+        cands_w.join(F.broadcast(batch_sh), "doc").select(
+            F.col("__later").alias("doc"),
+            F.col("shingles").alias("other_shingles"),
+        ),
+        batch_sh,
+        threshold,
     )
-    near_w = _jaccard_drops(cands_w, batch_sh, other_sh_w, threshold)
 
-    # (4) near-dup, vs index: probe the bucket table with the broadcast
-    # batch band rows, verify against the stored shingles of just the
-    # candidate index docs
-    hist_buckets = spark.read.schema(_BUCKETS_SCHEMA).parquet(
-        os.path.join(root, "buckets")
-    )
-    if exclude_batch is not None:
-        hist_buckets = hist_buckets.filter(F.col("src_batch") != exclude_batch)
-    if len(batch_buckets) <= pushdown_limit:
-        # scan-level prune on the 64-bit bucket value alone (composite
-        # (band,bucket) isn't IN-pushable); the join below still
-        # matches on the full composite key
+    # (4) near-dup, vs index: the bucket table scan (IN-filtered on the
+    # 64-bit bucket alone when small — the composite (band, bucket)
+    # isn't IN-pushable) against the broadcast batch band rows, then
+    # the shingle table scan against the broadcast candidate pairs
+    hist_buckets = index_scan("buckets", _BUCKETS_SCHEMA)
+    if batch_buckets is not None:
         hist_buckets = hist_buckets.filter(in_values_cond("bucket", batch_buckets))
-    # referenced twice (semi-join + verify) but left LAZY: with the
-    # IN-pruned scan the recompute is cheap, and the final plan keeps
-    # the bucket scan visible (pushdown plan-gated in pytest)
     cands_x = (
         hist_buckets.withColumnRenamed("doc", "other")
         .join(F.broadcast(bands_b), ["band", "bucket"])
         .select("doc", "other")
-        .distinct()
     )
-    hist_sh_scan = spark.read.schema(_SHINGLES_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    if exclude_batch is not None:
-        hist_sh_scan = hist_sh_scan.filter(F.col("src_batch") != exclude_batch)
-    hist_sh = (
-        hist_sh_scan
-        .join(F.broadcast(cands_x.select(F.col("other").alias("doc")).distinct()),
-              "doc", "left_semi")
+    near_x = _near_drops(
+        index_scan("shingles", _SHINGLES_SCHEMA)
         .select(F.col("doc").alias("other"), F.col("shingles").alias("other_shingles"))
+        .join(F.broadcast(cands_x), "other")
+        .select("doc", "other_shingles"),
+        batch_sh,
+        threshold,
     )
-    near_x = _jaccard_drops(cands_x, batch_sh, hist_sh, threshold)
 
-    # ``pin_drops``: the append path anti-joins the drop set against
-    # batch_df, feats AND bands_b, and an un-pinned union would re-run
-    # all four probe legs per consumer — materialize it once (tiny:
-    # dropped ids only), with the drop count riding the same job (r19;
-    # the count-after-pin was one more scheduler round per batch). The
-    # single-consumer probe (public dedup_batch_against_index) keeps it
-    # lazy so the returned plan still EXPOSES the broadcast-probe shape
-    # (plan-gated in pytest).
-    drops = exact_w.union(exact_x).union(near_w).union(near_x).distinct()
+    drops = exact_w.union(exact_x).union(near_w).union(near_x)
     n_drops = -1
     drop_ids: list | None = None
-    if pin_drops and 0 <= n_in <= pushdown_limit:
+    if pin_drops and small:
         # Small batch (n_in bounds the drop set): run the probe DAG as
         # ONE collect and hand every consumer the drop set as literal
         # values — each of the five downstream writes then anti-joins
         # via a plain NOT-IN filter instead of embedding a broadcast
-        # exchange, which Spark executes as its own async job (r19; the
-        # per-batch broadcast jobs were the dominant scheduler cost).
-        # A NULL id never matches the anti-join, so it leaves the list:
+        # exchange, which Spark executes as its own async job (r19).
+        # A NULL id never matches the anti-join, so it leaves the set:
         # a NULL inside NOT IN would make the filter drop every row.
-        drop_ids = [r["doc"] for r in drops.collect() if r["doc"] is not None]
+        drop_ids = sorted({r["doc"] for r in drops.collect()} - {None})
         n_drops = len(drop_ids)
         survivors = batch_df.filter(_keep_cond(id_col, drop_ids))
     else:
         if pin_drops:
+            # the append path anti-joins the drop set against batch_df,
+            # feats AND bands_b: pin it once (dropped ids only), with
+            # the count riding the same job. NULL ids leave it for the
+            # same reason as above, so n_drops counts removable ids.
             from ais_data_pipeline_spark.checkpointing import (
                 materialize_counted,
             )
 
-            drops, n_drops = materialize_counted(drops)
+            drops, n_drops = materialize_counted(
+                drops.filter(F.col("doc").isNotNull()).distinct()
+            )
+        # without pin_drops (the public single-consumer probe) the drop
+        # set stays lazy, so the returned plan still EXPOSES the
+        # broadcast-probe shape (plan-gated in pytest)
         survivors = batch_df.join(
             F.broadcast(drops.withColumnRenamed("doc", id_col)),
             id_col,
@@ -634,8 +646,6 @@ def _keep_cond(col_name: str, drop_ids: list) -> "F.Column":
     the same ids: non-matching rows pass, NULL ids pass (a NULL key
     never matches an anti-join probe). The IN list parses as ONE SQL
     expression — not one py4j literal call per element."""
-    from ais_data_pipeline_spark.operators.util import in_values_cond
-
     if not drop_ids:
         return F.lit(True)
     c = F.col(col_name)
@@ -1166,9 +1176,11 @@ def dedup_and_append_batch(
             # must not probe this batch's own attempt-1 slices
         )
     )
-    # File-sizing estimate by set arithmetic (exact when batch ids are
-    # unique — the keyed-batch contract; a duplicate-id batch only
-    # shifts the single-file decision, never the data). The RETURNED
+    # File-sizing estimate by set arithmetic: an UPPER bound on every
+    # slice below, which the single-file funnel relies on. Each
+    # non-NULL drop id removes at least one row, so it is exact when
+    # batch ids are unique and over-estimates when a dropped id repeats
+    # (only the single-file decision shifts, never the data). The RETURNED
     # n_kept is the exact written count, riding the survivors write as
     # an Observation (r19; closes the r18 ADVICE exactness caveat).
     n_kept_est = n_in - n_drops
@@ -1203,11 +1215,9 @@ def dedup_and_append_batch(
     # §2.6; r19 folds the survivors write in, it used to serialize
     # ahead of the pool). bucket_stats reuses the surviving-band-row
     # bound instead of its own materialize+count (2 fewer jobs/batch).
-    from concurrent.futures import ThreadPoolExecutor
-
     obs_kept = Observation()
     surv_obs = survivors.observe(obs_kept, F.count(F.lit(1)).alias("n"))
-    writes = [
+    _overlap(batch_df.sparkSession, [
         lambda: _write_slice(
             surv_obs, out_path, batch_id, approx_rows=n_kept_est
         ),
@@ -1236,9 +1246,6 @@ def dedup_and_append_batch(
             # slice (≤2M band rows) without the old materialize+count
             approx_rows=n_kept_est * bands,
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for fut in [pool.submit(w) for w in writes]:
-            fut.result()  # propagate the first failure
+    ])
     n_kept = int(obs_kept.get["n"])
     return n_in, n_kept

@@ -10,44 +10,8 @@ contract with exactly-once bookkeeping for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def stream_landing_zone(
-    spark: SparkSession,
-    landing_path: str,
-    schema: T.StructType,
-    fmt: str = "csv",
-    header: bool = True,
-) -> DataFrame:
-    """Open the landing zone as an unbounded file source."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", header)
-    return reader.load(landing_path)
-
-
-def run_available_now(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Drain everything currently in the source into partitioned
-    parquet, then stop — the scheduled-batch-equivalent trigger.
-    Incremental across runs via the checkpoint."""
-    writer = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    q = writer.start()
-    q.awaitTermination()
 
 
 def run_with_quarantine(
@@ -109,12 +73,6 @@ def run_with_quarantine(
         .start()
     )
     q.awaitTermination()
-
-
-def stamp_ingest_date(df: DataFrame, col: str = "ingest_date") -> DataFrame:
-    """K2 parity for the streaming path: stamp the UTC ingest date so
-    the sink partitions match the batch layout."""
-    return df.withColumn(col, F.to_date(F.current_timestamp()))
 
 
 def run_upsert_sink(

@@ -44,27 +44,6 @@ def windowed_counts(
     )
 
 
-def session_windows_streaming(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Native session windows (gap-based) for streaming input."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sess"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.date_format("sess.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("sess.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def check_window_key_skew(
     df: DataFrame,
     key_col: str,

@@ -364,18 +364,170 @@ def test_incremental_dedup_replay_idempotent(spark, sf_dir, tmp_path):
     assert kept == [11, 22]
 
 
-def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path):
-    """r19: batches at or under ``pushdown_limit`` collect their drop
-    set once and filter consumers by literal NOT-IN values; larger
-    batches keep the r18 pinned-drop-set + broadcast-anti shape. Force
-    the LARGE regime (pushdown_limit=-1: no batch, not even an empty
-    one, is small) on the same batches — kept rows, accounting, and
-    every index table must be bit-identical. Batch 1 carries a NULL-id
-    exact copy of an index doc (a NULL in the collected drop set once
-    made NOT IN drop every survivor) and a duplicate id whose one row
-    is an exact copy (both rows go, as with the anti-join); batch 2 is
-    empty."""
+def _regime_batches(spark, docs):
+    """History (``doc_id % 3 == 0``) and four batches that between them
+    drive every drop leg — exact and near, within the batch and against
+    the index — plus the accounting edge cases:
+
+    - batch 0: the sf0.01 ``doc_id % 3 == 1`` slice;
+    - batch 1: a NULL-id exact copy of an index doc (a NULL in the
+      collected drop set once made NOT IN drop every survivor), an
+      exact copy within the batch, a within-batch one-token edit and a
+      one-token edit of an index doc;
+    - batch 2: a duplicate id whose one row is an exact copy of an
+      index doc (both rows go, as with the anti-join), and a fresh doc;
+    - batch 3: empty.
+
+    Batch 1 keeps the NULL-id row, 900_001 and 900_003; batch 2 keeps
+    900_201."""
     from ais_data_pipeline_spark.localrel import local_df
+
+    hist = docs.filter(F.col("doc_id") % 3 == 0)
+    hist_texts = [r["text"] for r in hist.orderBy("doc_id").limit(3).collect()]
+    fresh = "quick amber foxes leap over sleepy violet hounds beneath a silent harvest moon tonight again"
+    row = lambda i, t: (i, t, "en", "b", len(t))  # noqa: E731
+    batches = [
+        docs.filter(F.col("doc_id") % 3 == 1),
+        local_df(
+            spark,
+            [
+                row(None, hist_texts[0]),
+                row(900_001, "fresh words that no history document has ever used"),
+                row(900_003, fresh),
+                row(900_004, fresh.replace("tonight again", "tonight too")),
+                row(900_005, hist_texts[2].rsplit(" ", 1)[0] + " zebra"),
+                row(900_006, "fresh words that no history document has ever used"),
+            ],
+            docs.schema,
+        ),
+        local_df(
+            spark,
+            [
+                row(900_201, "another fresh sentence seen only in this batch"),
+                row(900_202, hist_texts[1]),
+                row(900_202, "a different fresh sentence under a reused id"),
+            ],
+            docs.schema,
+        ),
+        docs.limit(0),
+    ]
+    return hist, batches
+
+
+def _sorted_rows(df):
+    rows = (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect())
+    return sorted(rows, key=repr)
+
+
+def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path):
+    """r19: batches at or under ``pushdown_limit`` collect their probe
+    and drop sets and filter by literal IN / NOT-IN values; larger
+    batches probe through broadcast joins and pin a distinct drop set.
+    Force the LARGE regime (pushdown_limit=-1: no batch, not even an
+    empty one, is small) on the same batches, with and without a
+    hot-bucket cap — kept rows, accounting, and every index table must
+    be bit-identical. Under the cap the small regime's collected bucket
+    set is a superset of the hot-pruned band rows, which must not
+    change what the composite-key join matches."""
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_dedup_index,
+        dedup_and_append_batch,
+    )
+
+    hist, batches = _regime_batches(spark, read_table(spark, sf_dir, "documents"))
+    for cap in (None, 3):
+        results = {}
+        for tag, lim in (("small", 10_000), ("large", -1)):
+            base = str(tmp_path / f"{tag}-{cap}")
+            index, out = base + "/idx", base + "/out"
+            build_dedup_index(hist, index)
+            counts = [
+                dedup_and_append_batch(
+                    b, k, index, out, threshold=0.5, pushdown_limit=lim,
+                    max_bucket_size=cap,
+                )
+                for k, b in enumerate(batches)
+            ]
+            tables = [
+                _sorted_rows(spark.read.parquet(p))
+                for p in [out] + [
+                    f"{index}/{t}" for t in ("hashes", "shingles", "buckets", "bucket_stats")
+                ]
+            ]
+            kept = sorted(
+                ((r["src_batch"], r["doc_id"]) for r in spark.read.parquet(out).collect()),
+                key=repr,
+            )
+            results[tag] = (counts, kept, tables)
+        assert results["small"] == results["large"], cap
+        counts, kept = results["small"][:2]
+        assert counts[1:] == [(6, 3), (3, 1), (0, 0)], cap
+        assert [d for b, d in kept if b == 1] == [900_001, 900_003, None], cap
+        assert [d for b, d in kept if b == 2] == [900_201], cap
+
+
+def test_incremental_dedup_single_file_estimate_is_upper_bound(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The single-file funnel sizes each of the five slice writes of a
+    batch from ``n_kept_est = n_in - n_drops`` (times the band count for
+    the band and stats slices). That estimate must bound the rows each
+    write really produces, in both regimes: duplicate ids make it
+    over-estimate, and a NULL id (never removable by the anti-join)
+    must not make it under-estimate."""
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    hist, batches = _regime_batches(spark, read_table(spark, sf_dir, "documents"))
+    write_slice = mod._write_slice
+    for tag, lim in (("small", 10_000), ("large", -1)):
+        base = str(tmp_path / tag)
+        index, out = base + "/idx", base + "/out"
+        mod.build_dedup_index(hist, index)
+        written = []
+
+        def recording(df, path, src_batch, *args, approx_rows=None, **kwargs):
+            write_slice(df, path, src_batch, *args, approx_rows=approx_rows, **kwargs)
+            part = f"{path}/src_batch={src_batch}"
+            n = spark.read.parquet(part).count() if os.path.isdir(part) else 0
+            written.append((os.path.basename(path), src_batch, approx_rows, n))
+
+        monkeypatch.setattr(mod, "_write_slice", recording)
+        for k, b in enumerate(batches):
+            mod.dedup_and_append_batch(b, k, index, out, threshold=0.5, pushdown_limit=lim)
+        monkeypatch.setattr(mod, "_write_slice", write_slice)
+        assert len(written) == 5 * len(batches), tag
+        assert all(est >= n for _, _, est, n in written), (tag, written)
+        # the duplicate-id batch over-estimates: one drop id, two rows
+        assert any(k == 2 and est > n for _, k, est, n in written), (tag, written)
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a job group no earlier call used: (its jobs,
+    jobs it left without a group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"incremental-dedup-under-test-{uuid.uuid4().hex}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return (
+        sorted(tracker.getJobIdsForGroup(group)),
+        set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    )
+
+
+def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
+    """Every job of one ``dedup_and_append_batch`` call — the five
+    overlapped writes on its thread pool included — and of one
+    ``build_dedup_index`` call carries the caller's job group."""
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
@@ -383,52 +535,54 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    hist = docs.filter(F.col("doc_id") % 3 == 0)
-    hist_texts = [r["text"] for r in hist.orderBy("doc_id").limit(2).collect()]
-    batches = [
-        docs.filter(F.col("doc_id") % 3 == 1),
-        local_df(
-            spark,
-            [
-                (None, hist_texts[0], "en", "b", 0),
-                (900_001, "fresh words that no history document has ever used", "en", "b", 0),
-                (900_002, hist_texts[1], "en", "b", 0),
-                (900_002, "another fresh sentence seen only in this batch", "en", "b", 0),
-            ],
-            docs.schema,
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    grouped, stray = _jobs_in_group(
+        spark, lambda: build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
+    )
+    assert stray == set()
+    assert len(grouped) >= 4  # the four overlapped index writes
+    grouped, stray = _jobs_in_group(
+        spark,
+        lambda: dedup_and_append_batch(
+            docs.filter(F.col("doc_id") % 3 == 1), 0, index, out, threshold=0.5
         ),
-        docs.limit(0),
-    ]
+    )
+    assert stray == set()
+    assert len(grouped) >= 5  # the five overlapped writes
+    assert grouped == list(range(grouped[0], grouped[-1] + 1))
 
-    def null_last(t):
-        return tuple((v is None, v or 0) for v in t)
 
-    results = {}
-    for tag, lim in (("small", 10_000), ("large", -1)):
-        base = str(tmp_path / tag)
-        index, out = base + "/idx", base + "/out"
-        build_dedup_index(hist, index)
-        counts = [
-            dedup_and_append_batch(b, k, index, out, threshold=0.5, pushdown_limit=lim)
-            for k, b in enumerate(batches)
-        ]
-        kept = sorted(
-            ((r["src_batch"], r["doc_id"]) for r in spark.read.parquet(out).collect()),
-            key=null_last,
-        )
-        hashes = sorted(
-            ((r["doc"],) for r in spark.read.parquet(index + "/hashes").collect()),
-            key=null_last,
-        )
-        buckets = sorted(
-            (r["doc"], r["band"], r["bucket"])
-            for r in spark.read.parquet(index + "/buckets").collect()
-        )
-        results[tag] = (counts, kept, hashes, buckets)
-    assert results["small"] == results["large"]
-    counts, kept = results["small"][:2]
-    assert counts[1:] == [(4, 2), (0, 0)]
-    assert [d for b, d in kept if b == 1] == [900_001, None]
+#: jobs of one small-regime ``dedup_and_append_batch`` on the sf0.01
+#: fixture: the feature materialize (3), the probe-set collect (1), the
+#: drop-set collect with its five broadcast exchanges (6) and the five
+#: slice writes (6). Five exchanges, not four: the bucket IN-filter is
+#: inferred onto the index leg's band-row broadcast, so that one no
+#: longer matches the within-batch broadcast and is not reused.
+DEDUP_BATCH_MAX_JOBS = 16
+
+
+def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
+    """A small batch decides its drops with one shuffle-free probe-set
+    collect and one drop-set query whose legs share their broadcasts.
+    The ceiling catches the drop-set DAG growing back (per-leg
+    distinct() shuffles and unshared exchanges, each its own AQE
+    job)."""
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_dedup_index,
+        dedup_and_append_batch,
+    )
+
+    docs = read_table(spark, sf_dir, "documents")
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
+    grouped, _ = _jobs_in_group(
+        spark,
+        lambda: dedup_and_append_batch(
+            docs.filter(F.col("doc_id") % 3 == 1), 0, index, out, threshold=0.5
+        ),
+    )
+    assert len(grouped) <= DEDUP_BATCH_MAX_JOBS, grouped
 
 
 def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
