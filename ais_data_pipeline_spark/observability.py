@@ -52,26 +52,6 @@ class OpCounter:
         return out
 
 
-class AccumulatorCounter:
-    """Executor-side counter: one Spark LongAccumulator per operation.
-
-    Use inside ``foreachPartition``/UDF-adjacent code where Python
-    threads on the driver can't see executor increments.
-    """
-
-    def __init__(self, spark, ops: list[str]) -> None:
-        sc = spark.sparkContext
-        self._accs = {op: sc.accumulator(0) for op in ops}
-
-    def incr(self, op: str, n: int = 1) -> None:
-        self._accs[op].add(n)
-
-    def snapshot(self) -> dict[str, int]:
-        out = {op: acc.value for op, acc in self._accs.items()}
-        out["total"] = sum(out.values())
-        return out
-
-
 class Stopwatch:
     """Wall-clock + throughput accounting (reference M5 cost math)."""
 

@@ -48,27 +48,6 @@ def exact_dedup(
     )
 
 
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of lower-cased text (array<string>).
-
-    Built from JVM higher-order functions (split → transform over an
-    index sequence → concat_ws → array_distinct): codegen'd, no Python.
-    Prefer ``word_shingle_hashes`` in join/signature pipelines — the
-    string form exists for debugging and displays.
-    """
-    from ais_data_pipeline_spark.functions.numeric import index_sequence
-
-    tokens = F.split(F.lower(F.trim(text_col)), r"\s+")
-    n_sh = F.size(tokens) - F.lit(n - 1)
-    idx = index_sequence(n_sh)  # EMPTY when fewer than n tokens —
-    # sequence(1, 0) is [1, 0], not [], so the clamped form crashed on
-    # short docs (round-10 review)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(tokens, i + j) for j in range(n)]
-    )
-    return F.array_distinct(F.transform(idx, gram))
-
-
 def tokens_lower(text_col: Column) -> Column:
     """Lower-cased whitespace token array (the shingle input)."""
     return F.split(F.lower(F.trim(text_col)), r"\s+")

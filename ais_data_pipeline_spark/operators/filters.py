@@ -1,8 +1,8 @@
-"""Filter / predicate operators (reference P3-P8).
+"""Filter predicates (reference P5-P8).
 
-All return lazy filtered DataFrames; the predicates are plain Catalyst
-expressions, so they push down to the Parquet scan (row-group stats) and
-stay inside whole-stage codegen.
+Each returns a plain Catalyst expression for ``DataFrame.filter``, so
+it pushes down to the Parquet scan (row-group stats) and stays inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -26,26 +26,10 @@ def any_horizontal(conditions: list[Column]) -> Column:
     return reduce(operator.or_, conditions)
 
 
-def filter_all(df: DataFrame, conditions: list[Column]) -> DataFrame:
-    """Keep rows satisfying EVERY condition (reference P3)."""
-    return df.filter(all_horizontal(conditions))
-
-
-def filter_any(df: DataFrame, conditions: list[Column]) -> DataFrame:
-    """Keep rows satisfying ANY condition — the quarantine select
-    (reference P4, notebooks/0_preprocessing.ipynb:3447-3454)."""
-    return df.filter(any_horizontal(conditions))
-
-
 def in_range(col: str, lo, hi) -> Column:
     """Closed-interval range predicate (reference P5
     ``is_between(..., closed="both")``)."""
     return F.col(col).between(lo, hi)
-
-
-def is_null(col: str) -> Column:
-    """Reference P6."""
-    return F.col(col).isNull()
 
 
 def fits_int32_or_null(col: str) -> Column:

@@ -18,11 +18,6 @@ def head(df: DataFrame, n: int) -> DataFrame:
     return df.limit(n)
 
 
-def sort_desc(df: DataFrame, column: str) -> DataFrame:
-    """Reference O2."""
-    return df.orderBy(F.desc(column))
-
-
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     """Reference O3: sort + limit → TakeOrderedAndProject."""
     return df.orderBy(*order_by).limit(k)
@@ -31,12 +26,6 @@ def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
 def random_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
     """Reference O4 (per-partition Bernoulli sample; no shuffle)."""
     return df.sample(fraction=fraction, seed=seed)
-
-
-def first_row_dict(df: DataFrame) -> dict:
-    """Reference O5: ``.row(0, named=True)``."""
-    row = df.first()
-    return row.asDict() if row is not None else {}
 
 
 def hash_sample(df, id_col: str, keep_hex_lt: str = "1999"):

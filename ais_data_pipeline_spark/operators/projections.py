@@ -7,18 +7,7 @@ read off disk.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
-
-
-def exclude_pattern(df: DataFrame, pattern: str) -> DataFrame:
-    """Drop columns whose NAME matches ``pattern`` (reference P1's
-    ``pl.exclude(r".*_ar$")``, notebooks/preprocessing_with_polars
-    .ipynb:1019)."""
-    rx = re.compile(pattern)
-    keep = [c for c in df.columns if not rx.fullmatch(c)]
-    return df.select(*keep)
 
 
 def exclude_substring(df: DataFrame, needle: str) -> DataFrame:

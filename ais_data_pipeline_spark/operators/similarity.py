@@ -1514,6 +1514,8 @@ def build_ivfpq_index(
     # LAST, after every write committed
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     writes = [
         lambda: (
             codes.repartition("list_id")
@@ -1528,8 +1530,10 @@ def build_ivfpq_index(
             spark, book_rows, "subspace int, centroid_id bigint, cvec array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "_codebooks"),
     ]
+    # one wrap per write: each pool thread keeps the caller's job group
+    # in its own copy of the local properties
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for fut in [pool.submit(w) for w in writes]:
+        for fut in [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]:
             fut.result()
     # stamp LAST — a crash between any of the three writes above
     # leaves a token mismatch the probe rejects loudly

@@ -23,24 +23,6 @@ def parse_date_lenient(df: DataFrame, columns: list[str], fmt: str | None = None
     return out
 
 
-def cast_columns(df: DataFrame, casts: dict[str, T.DataType | str]) -> DataFrame:
-    """Plain casts (reference T5); lenient under non-ANSI session."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
-
-
-def categorical_cast(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Reference T2/T3: dictionary-encode low-cardinality columns.
-
-    Spark has no runtime Categorical type (SURVEY §1.2): the logical
-    type stays StringType and the physical win comes free from Parquet
-    dictionary pages + Tungsten. Numeric inputs are stringified first
-    (the reference's 2-step int→string→categorical, notebooks/
-    preprocessing_with_polars.ipynb:2845-2849). For the explicit
-    dictionary-normalization rewrite see operators.dictionary.
-    """
-    return df.withColumns({c: F.col(c).cast("string") for c in columns})
-
-
 def ranged_downcast(col: str, target: T.DataType, lo: int, hi: int) -> Column:
     """Reference T4: ``when(in-range OR null) cast(target) otherwise
     null`` — out-of-range becomes null instead of erroring (reference
@@ -51,11 +33,6 @@ def ranged_downcast(col: str, target: T.DataType, lo: int, hi: int) -> Column:
         .otherwise(F.lit(None).cast(target))
         .alias(col)
     )
-
-
-def with_derived(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
-    """Reference T7: add derived arithmetic columns in one projection."""
-    return df.withColumns(exprs)
 
 
 def snapshot_diff(old, new, keys: list[str], compare_cols: list[str] | None = None):

@@ -93,8 +93,11 @@ def run_curation(
     # §2.6)
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     pool = ThreadPoolExecutor(max_workers=1)
-    measure_fut = pool.submit(measure, docs)
+    # wrapped so the pool thread keeps the caller's job group
+    measure_fut = pool.submit(inheritable_thread_target(spark)(measure), docs)
 
     # stage 1: exact — only the ~few-% non-min ids materialize
     hashed = docs.select(id_col, F.md5(F.col(text_col).cast("binary")).alias("__h"))

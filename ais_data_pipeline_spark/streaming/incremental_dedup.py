@@ -31,6 +31,20 @@ partition directories written with dynamic partition overwrite: a
 replayed micro-batch overwrites its own partition, making the sink
 idempotent (the same checkpoint+idempotence recipe as
 ``ingest.run_upsert_sink``).
+
+Index layout: two tables plus a statistic, each partitioned by
+``src_batch`` (history = -1, one slice per micro-batch):
+- ``docs`` (doc, text_hash, shingles): one row per indexed doc, with a
+  parquet bloom filter on ``text_hash``. The exact probe projects
+  ``text_hash`` and the near-dup verify projects ``shingles`` from the
+  same files, so column pruning keeps each leg's IO to its own column.
+- ``buckets`` (doc, band, bucket): the MinHash LSH band rows, bloom
+  filter on ``bucket``.
+- ``bucket_stats`` (band, bucket, n): per-slice hot-bucket counts read
+  by the ``max_bucket_size`` guard.
+Indexes written in the earlier layout (separate ``hashes`` and
+``shingles`` tables) are not read; rebuild them with
+``build_dedup_index``.
 """
 
 from __future__ import annotations
@@ -41,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ais_data_pipeline_spark import fsutil
-from ais_data_pipeline_spark.checkpointing import materialize
+from ais_data_pipeline_spark.checkpointing import materialize, materialize_counted
 from ais_data_pipeline_spark.operators.dedup import (
     minhash_band_rows_from_shingles,
     minhash_band_structs_sql,
@@ -52,9 +66,10 @@ from ais_data_pipeline_spark.operators.util import gated_broadcast, in_values_co
 
 # explicit read schemas: index partitions may be legitimately empty
 # (a batch where nothing survived), and schema inference fails there
-_HASHES_SCHEMA = "doc bigint, text_hash string, src_batch bigint"
+_DOCS_SCHEMA = (
+    "doc bigint, text_hash string, shingles array<bigint>, src_batch bigint"
+)
 _BUCKETS_SCHEMA = "doc bigint, band int, bucket bigint, src_batch bigint"
-_SHINGLES_SCHEMA = "doc bigint, shingles array<bigint>, src_batch bigint"
 _STATS_SCHEMA = "band int, bucket bigint, n bigint, src_batch bigint"
 
 HISTORY_BATCH = -1  # src_batch value for the bootstrap corpus
@@ -105,6 +120,11 @@ def _features(
 #: hash/shingles) is tens of MiB — well inside one writer task.
 SINGLE_FILE_MAX_ROWS = 2_000_000
 
+#: false-positive rate each slice's bloom filter is sized for (see
+#: ``_write_slice``): low enough that a 10 000-value IN-list
+#: (``pushdown_limit``) still skips a non-matching slice ~99 % of the time
+BLOOM_FPP = 1e-6
+
 
 def _write_slice(
     df: DataFrame,
@@ -132,13 +152,31 @@ def _write_slice(
     explicit ``single_file=True`` above that bound is overridden with
     an M1 warning rather than honored: no future history-sized caller
     can default into the funnel the round-9 shuffle gate caught.
-    ``single_file=False`` always keeps the input partitioning."""
+    ``single_file=False`` always keeps the input partitioning.
+
+    Bloom sizing: with a row bound in hand (``approx_rows``, or the
+    count the single-file decision took) the filter is sized for that
+    many distinct values at ``BLOOM_FPP``, instead of parquet-mr's
+    default 1 MiB bitset (sized for a million values; it was ~98 % of
+    an 880-doc hashes slice). Sizing never changes results: a bloom
+    filter has no false negatives at any size, so it only decides which
+    row groups a probe may skip, and every caller's bound is an upper
+    bound on the slice's distinct values. The rate must be that low
+    because a probe's IN-list skips a row group only if EVERY probed
+    value tests negative: at parquet's default 1 % a 10 000-value list
+    (``pushdown_limit``) makes every slice a false positive, while at
+    1e-6 a slice holding none of the values still skips with
+    probability (1 - 1e-6)^10 000 ≈ 0.99. The probed columns carry no
+    dictionary page (every hash is distinct), so the bloom filter is
+    the only way to skip a slice."""
     # an all-dropped batch writes no partition at all; pre-create the
     # table root so later schema-reads never hit a missing path
     # (local paths only — object-store 'directories' are prefixes)
     _ensure_local_dir(path)
+    n = approx_rows
     if single_file is not False:
-        n = approx_rows if approx_rows is not None else df.count()
+        if n is None:
+            n = df.count()
         if n > SINGLE_FILE_MAX_ROWS:
             if single_file is True:
                 from ais_data_pipeline_spark.observability import log
@@ -172,6 +210,10 @@ def _write_slice(
     )
     if bloom_col is not None:
         writer = writer.option(f"parquet.bloom.filter.enabled#{bloom_col}", "true")
+        if n:  # no rows, no row group, no filter to size
+            writer = writer.option(
+                f"parquet.bloom.filter.expected.ndv#{bloom_col}", str(n)
+            ).option(f"parquet.bloom.filter.fpp#{bloom_col}", str(BLOOM_FPP))
     writer.partitionBy("src_batch").parquet(path)
 
 
@@ -185,21 +227,24 @@ def build_dedup_index(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Bootstrap the index from the historical corpus: three parquet
-    tables under ``index_path`` — ``hashes`` (doc, text_hash),
-    ``buckets`` (doc, band, bucket), ``shingles`` (doc, shingles) —
-    each partitioned by ``src_batch`` (history = -1). The shingle table
-    is the candidate-verification store; at 100 TB it is the index's
-    dominant weight (~tokens-per-doc longs), still a fraction of the
-    text it replaces in the probe path."""
-    # written twice (hashes + shingles): pin once, or each write
-    # recomputes md5 + shingle split over the whole history
+    """Bootstrap the index from the historical corpus: the tables of
+    the layout in the module docstring under ``index_path`` — ``docs``
+    (doc, text_hash, shingles), ``buckets`` (doc, band, bucket) and
+    ``bucket_stats`` — each partitioned by ``src_batch`` (history =
+    -1). The shingles are the candidate-verification store; at 100 TB
+    they are the index's dominant weight (~tokens-per-doc longs), still
+    a fraction of the text they replace in the probe path. An index in
+    the earlier layout (separate ``hashes`` and ``shingles`` tables) is
+    rebuilt by this call."""
     # a (re)build writes the flat generation-0 layout: drop any
     # pointer a prior compaction published, or readers would resolve
     # to a generation this build never writes (r14)
     fsutil.reset_generations(index_path)
     root = fsutil.generation_root(index_path, 0)
-    feats = _features(docs, text_col, id_col, shingle_n).transform(materialize)
+    # read twice (docs write + band rows): pin once, or each read
+    # recomputes md5 + shingle split over the whole history. The count
+    # rides the pin and bounds the bloom filters of both slices.
+    feats, n_hist = materialize_counted(_features(docs, text_col, id_col, shingle_n))
     # written twice (buckets + stats): pin once, or each write re-runs
     # the 32-permutation minhash over every history shingle. r18: the
     # band rows derive from the PINNED shingle features instead of a
@@ -209,26 +254,18 @@ def build_dedup_index(
     bands_df = minhash_band_rows_from_shingles(
         feats, n_hashes, bands, seed
     ).transform(materialize)
-    # the four table writes are independent jobs over the two pinned
+    # the three table writes are independent jobs over the two pinned
     # frames — overlap them (guide §2.6, same shape as the batch
-    # append path)
+    # append path). History-sized: keep the input partitioning.
     _overlap(docs.sparkSession, [
         lambda: _write_slice(
-            feats.select("doc", "text_hash"),
-            os.path.join(root, "hashes"),
-            HISTORY_BATCH,
-            bloom_col="text_hash",
-            single_file=False,  # history-sized: keep partitioning
-        ),
-        lambda: _write_slice(
-            feats.select("doc", "shingles"),
-            os.path.join(root, "shingles"),
-            HISTORY_BATCH,
-            single_file=False,  # the corpus-dominant store — never funnel
+            feats, os.path.join(root, "docs"), HISTORY_BATCH,
+            bloom_col="text_hash", single_file=False, approx_rows=n_hist,
         ),
         lambda: _write_slice(
             bands_df, os.path.join(root, "buckets"), HISTORY_BATCH,
             bloom_col="bucket", single_file=False,
+            approx_rows=n_hist * bands,  # at most one row per doc per band
         ),
         lambda: _write_bucket_stats(bands_df, root, HISTORY_BATCH),
     ])
@@ -277,8 +314,6 @@ def _write_bucket_stats(
         .filter(F.col("n") >= 2)
     )
     if approx_rows is None:
-        from ais_data_pipeline_spark.checkpointing import materialize_counted
-
         # read twice (measure + write) without a bound in hand: pin it
         # so the write reuses the pinned result instead of re-running
         # the agg over a history-sized bands frame
@@ -388,7 +423,7 @@ def _dedup_batch_parts(
     When the batch is small (``n_in <= pushdown_limit``), its hash set
     — and its bucket set, when that too fits under ``pushdown_limit``
     — additionally pushes into the index scans as literal IN-filters:
-    the hashes and buckets tables are written with
+    the docs and buckets tables are written with
     parquet bloom filters on those columns, so the reader skips whole
     row groups holding none of the probed values — for a dup-free
     batch the "scan" touches footers and bloom bitsets, not data
@@ -432,7 +467,7 @@ def _dedup_batch_parts(
     # FOUND replay-forever poison pill): the probe reads carry explicit
     # schemas, so pre-created empty roots read as empty tables
     root = _index_root(index_path)
-    for t in ("hashes", "buckets", "shingles", "bucket_stats"):
+    for t in ("docs", "buckets", "bucket_stats"):
         _ensure_local_dir(os.path.join(root, t))
     # (1) exact, within batch: predecessor rule == keep min id per
     # hash. Computed FIRST: the hot-bucket guard below must count band
@@ -543,13 +578,15 @@ def _dedup_batch_parts(
     # side), so Spark's ReuseExchange plans about four exchanges.
     batch_sh = feats.select("doc", "shingles")
 
-    # (2) exact, vs index: the hash table scan (IN-filtered when small:
-    # bloom row-group skipping) against the broadcast batch hashes
-    hist_hashes = index_scan("hashes", _HASHES_SCHEMA)
+    # (2) exact, vs index: the docs scan projected to text_hash
+    # (IN-filtered when small: bloom row-group skipping) against the
+    # broadcast batch hashes
+    hist_docs = index_scan("docs", _DOCS_SCHEMA)
+    hist_hashes = hist_docs.select("text_hash")
     if batch_hashes is not None:
         hist_hashes = hist_hashes.filter(in_values_cond("text_hash", batch_hashes))
     exact_x = (
-        hist_hashes.select("text_hash")
+        hist_hashes
         .join(F.broadcast(feats.select("doc", "text_hash")), "text_hash")
         .select("doc")
     )
@@ -582,7 +619,8 @@ def _dedup_batch_parts(
     # (4) near-dup, vs index: the bucket table scan (IN-filtered on the
     # 64-bit bucket alone when small — the composite (band, bucket)
     # isn't IN-pushable) against the broadcast batch band rows, then
-    # the shingle table scan against the broadcast candidate pairs
+    # the docs scan projected to shingles against the broadcast
+    # candidate pairs
     hist_buckets = index_scan("buckets", _BUCKETS_SCHEMA)
     if batch_buckets is not None:
         hist_buckets = hist_buckets.filter(in_values_cond("bucket", batch_buckets))
@@ -592,8 +630,7 @@ def _dedup_batch_parts(
         .select("doc", "other")
     )
     near_x = _near_drops(
-        index_scan("shingles", _SHINGLES_SCHEMA)
-        .select(F.col("doc").alias("other"), F.col("shingles").alias("other_shingles"))
+        hist_docs.select(F.col("doc").alias("other"), F.col("shingles").alias("other_shingles"))
         .join(F.broadcast(cands_x), "other")
         .select("doc", "other_shingles"),
         batch_sh,
@@ -606,7 +643,7 @@ def _dedup_batch_parts(
     if pin_drops and small:
         # Small batch (n_in bounds the drop set): run the probe DAG as
         # ONE collect and hand every consumer the drop set as literal
-        # values — each of the five downstream writes then anti-joins
+        # values — each of the four downstream writes then anti-joins
         # via a plain NOT-IN filter instead of embedding a broadcast
         # exchange, which Spark executes as its own async job (r19).
         # A NULL id never matches the anti-join, so it leaves the set:
@@ -620,10 +657,6 @@ def _dedup_batch_parts(
             # feats AND bands_b: pin it once (dropped ids only), with
             # the count riding the same job. NULL ids leave it for the
             # same reason as above, so n_drops counts removable ids.
-            from ais_data_pipeline_spark.checkpointing import (
-                materialize_counted,
-            )
-
             drops, n_drops = materialize_counted(
                 drops.filter(F.col("doc").isNotNull()).distinct()
             )
@@ -844,8 +877,6 @@ def run_incremental_embedding_dedup(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from ais_data_pipeline_spark.checkpointing import materialize_counted
-
         survivors, n_kept = materialize_counted(
             dedup_embedding_batch_against_index(
                 batch_df, index_path, threshold, n_planes, seed, vec_col,
@@ -911,8 +942,7 @@ def compact_dedup_index(
     with the ingest sink. Returns per-table row counts."""
     io = io or fsutil.io_for(index_path)
     specs = [
-        ("hashes", _HASHES_SCHEMA, None, "text_hash"),
-        ("shingles", _SHINGLES_SCHEMA, None, None),
+        ("docs", _DOCS_SCHEMA, None, "text_hash"),
         ("buckets", _BUCKETS_SCHEMA, None, "bucket"),
         ("bucket_stats", _STATS_SCHEMA, "sum", None),
     ]
@@ -932,14 +962,15 @@ def compact_dedup_index(
         )
         if merge == "sum":
             df = df.groupBy("band", "bucket").agg(F.sum("n").alias("n"))
-        df = df.transform(materialize)  # one read of the live tables
-        counts[name] = df.count()
+        # one read of the live tables; the count rides the pin
+        df, counts[name] = materialize_counted(df)
         # the exact count is in hand, so the measured single-file
-        # default decides per table (round-10 review): the three
-        # history-sized tables keep parallel writers, while the tiny
-        # bucket_stats table (only n>=2 buckets) collapses to one file
-        # instead of shuffle-partition-many near-empty ones that every
-        # probe's _hot_buckets scan would have to list and open
+        # default decides per table (round-10 review) and sizes the
+        # bloom filters: the two history-sized tables keep parallel
+        # writers, while the tiny bucket_stats table (only n>=2
+        # buckets) collapses to one file instead of shuffle-partition-
+        # many near-empty ones that every probe's _hot_buckets scan
+        # would have to list and open
         _write_slice(
             df,
             os.path.join(dst_root, name),
@@ -964,7 +995,7 @@ def compact_dedup_index(
 #: cost per ingested byte is then bounded by ~1/ratio FOREVER while
 #: trigger points stretch with the corpus — or when the slice FILE
 #: count alone passes COMPACT_MAX_SLICE_FILES (listing/open cost guard
-#: for byte-light, file-heavy accretion: 4 tables × 1 file per
+#: for byte-light, file-heavy accretion: up to 3 tables × 1 file per
 #: micro-batch adds up even when the bytes don't).
 COMPACT_SLICE_RATIO = 0.25
 COMPACT_MAX_SLICE_FILES = 256
@@ -1210,7 +1241,7 @@ def dedup_and_append_batch(
         # bands_b already excludes exact-dropped docs; anti-joining the
         # full drop set leaves exactly the survivors' band rows
         surv_bands = bands_b.join(F.broadcast(drops), "doc", "left_anti")
-    # ALL FIVE writes (survivors + four index tables) are independent
+    # ALL FOUR writes (survivors + three index tables) are independent
     # jobs over PINNED inputs — overlap them from a thread pool (guide
     # §2.6; r19 folds the survivors write in, it used to serialize
     # ahead of the pool). bucket_stats reuses the surviving-band-row
@@ -1222,17 +1253,11 @@ def dedup_and_append_batch(
             surv_obs, out_path, batch_id, approx_rows=n_kept_est
         ),
         lambda: _write_slice(
-            feats_s.select("doc", "text_hash"),
-            os.path.join(root, "hashes"),
+            feats_s.select("doc", "text_hash", "shingles"),
+            os.path.join(root, "docs"),
             batch_id,
             bloom_col="text_hash",
             approx_rows=n_kept_est,  # features are 1:1 per surviving doc
-        ),
-        lambda: _write_slice(
-            feats_s.select("doc", "shingles"),
-            os.path.join(root, "shingles"),
-            batch_id,
-            approx_rows=n_kept_est,
         ),
         lambda: _write_slice(
             surv_bands, os.path.join(root, "buckets"), batch_id,

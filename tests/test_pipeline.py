@@ -355,8 +355,8 @@ def test_incremental_dedup_replay_idempotent(spark, sf_dir, tmp_path):
     # replay batch 1 from scratch (fresh checkpoint): same end state
     drain(base + "/ck1b")
     assert sorted(r["doc_id"] for r in spark.read.parquet(out).collect()) == [11]
-    hashes = spark.read.parquet(index + "/hashes").collect()
-    assert sorted(r["doc"] for r in hashes) == [0, 11]  # no duplicate slices
+    indexed = spark.read.parquet(index + "/docs").collect()
+    assert sorted(r["doc"] for r in indexed) == [0, 11]  # no duplicate slices
 
     mk({20, 21, 22}).write.mode("append").parquet(landing)
     drain(base + "/ck1b")  # continue from the replayed checkpoint
@@ -452,7 +452,7 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
             tables = [
                 _sorted_rows(spark.read.parquet(p))
                 for p in [out] + [
-                    f"{index}/{t}" for t in ("hashes", "shingles", "buckets", "bucket_stats")
+                    f"{index}/{t}" for t in ("docs", "buckets", "bucket_stats")
                 ]
             ]
             kept = sorted(
@@ -470,12 +470,14 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
 def test_incremental_dedup_single_file_estimate_is_upper_bound(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The single-file funnel sizes each of the five slice writes of a
+    """The single-file funnel sizes each of the four slice writes of a
     batch from ``n_kept_est = n_in - n_drops`` (times the band count for
-    the band and stats slices). That estimate must bound the rows each
-    write really produces, in both regimes: duplicate ids make it
-    over-estimate, and a NULL id (never removable by the anti-join)
-    must not make it under-estimate."""
+    the band and stats slices), and the same bound sizes the bloom
+    filters of the docs and buckets slices. That estimate must bound
+    the rows each write really produces, in both regimes: duplicate ids
+    make it over-estimate, and a NULL id (never removable by the
+    anti-join) must not make it under-estimate — an under-sized bloom
+    filter would raise the false-positive rate above ``BLOOM_FPP``."""
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming import incremental_dedup as mod
 
@@ -497,10 +499,90 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
         for k, b in enumerate(batches):
             mod.dedup_and_append_batch(b, k, index, out, threshold=0.5, pushdown_limit=lim)
         monkeypatch.setattr(mod, "_write_slice", write_slice)
-        assert len(written) == 5 * len(batches), tag
+        assert len(written) == 4 * len(batches), tag
         assert all(est >= n for _, _, est, n in written), (tag, written)
         # the duplicate-id batch over-estimates: one drop id, two rows
         assert any(k == 2 and est > n for _, k, est, n in written), (tag, written)
+
+
+def _scan_output_rows(df) -> int:
+    """Rows the file scans of ``df``'s last action produced, after
+    parquet row-group skipping (the scan nodes' ``numOutputRows``)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return sum(
+        leaves.apply(i).metrics().apply("numOutputRows").value()
+        for i in range(leaves.size())
+    )
+
+
+def test_incremental_dedup_bloom_filters_sized_and_skip(spark, sf_dir, tmp_path):
+    """Each index slice's bloom filter is sized from the writer's row
+    bound at ``BLOOM_FPP`` instead of parquet-mr's default 1 MiB
+    bitset, and still lets a ``pushdown_limit``-sized IN-list skip the
+    slices holding none of its values.
+
+    (a) In every docs and buckets slice file, the bytes that are
+    neither column-chunk data nor footer (bloom filters, page indexes,
+    magic) stay far below 1 MiB. (b) 16 slices of 880 hashes, probed
+    with 10 000 values of which only one slice holds any, scan at most
+    two slices' rows; at parquet's default 1 % rate every slice would
+    be a false positive."""
+    import glob as _glob
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    from ais_data_pipeline_spark.operators.util import in_values_cond
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    docs = read_table(spark, sf_dir, "documents")
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    k = F.col("doc_id")
+    mod.build_dedup_index(docs.filter(k % 4 == 0), index)
+    for b in (1, 2, 3):
+        mod.dedup_and_append_batch(docs.filter(k % 4 == b), b, index, out, threshold=0.5)
+
+    def non_data_bytes(path: str) -> int:
+        md = pq.ParquetFile(path).metadata
+        data = sum(
+            md.row_group(i).column(j).total_compressed_size
+            for i in range(md.num_row_groups)
+            for j in range(md.num_columns)
+        )
+        return os.path.getsize(path) - data - md.serialized_size
+
+    overhead = {
+        f: non_data_bytes(f)
+        for t in ("docs", "buckets")
+        for f in _glob.glob(f"{index}/{t}/src_batch=*/*.parquet")
+    }
+    # history + three batch slices of each table
+    assert len({os.path.dirname(f) for f in overhead}) == 8, overhead
+    assert max(overhead.values()) < 2**17, overhead
+
+    path = str(tmp_path / "probe")
+    for s in range(16):
+        mod._write_slice(
+            spark.range(s * 1000, s * 1000 + 880).select(
+                F.col("id").alias("doc"),
+                F.md5(F.col("id").cast("string")).alias("text_hash"),
+            ),
+            path, s, bloom_col="text_hash", approx_rows=880,
+        )
+    md5 = lambda ids: [hashlib.md5(str(i).encode()).hexdigest() for i in ids]  # noqa: E731
+    values = md5(range(3000, 3100)) + md5(range(10**7, 10**7 + 9900))
+    probe = (
+        spark.read.schema("doc bigint, text_hash string, src_batch bigint")
+        .parquet(path)
+        .filter(in_values_cond("text_hash", values))
+        .select("text_hash")
+    )
+    assert sorted(r[0] for r in probe.collect()) == sorted(values[:100])
+    assert _scan_output_rows(probe) <= 2 * 880
 
 
 def _jobs_in_group(spark, fn):
@@ -510,7 +592,7 @@ def _jobs_in_group(spark, fn):
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = f"incremental-dedup-under-test-{uuid.uuid4().hex}"
+    group = f"under-test-{uuid.uuid4().hex}"
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
     try:
@@ -525,7 +607,7 @@ def _jobs_in_group(spark, fn):
 
 
 def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
-    """Every job of one ``dedup_and_append_batch`` call — the five
+    """Every job of one ``dedup_and_append_batch`` call — the four
     overlapped writes on its thread pool included — and of one
     ``build_dedup_index`` call carries the caller's job group."""
     from ais_data_pipeline_spark.sources.parquet import read_table
@@ -540,7 +622,7 @@ def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path
         spark, lambda: build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
     )
     assert stray == set()
-    assert len(grouped) >= 4  # the four overlapped index writes
+    assert len(grouped) >= 3  # the three overlapped index writes
     grouped, stray = _jobs_in_group(
         spark,
         lambda: dedup_and_append_batch(
@@ -548,17 +630,79 @@ def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path
         ),
     )
     assert stray == set()
-    assert len(grouped) >= 5  # the five overlapped writes
+    assert len(grouped) >= 4  # the four overlapped writes
     assert grouped == list(range(grouped[0], grouped[-1] + 1))
+
+
+def test_web_ingest_jobs_stay_in_caller_job_group(spark, tmp_path):
+    """Every job of one ``ingest_web_batch`` call, its url and hash
+    index writes on the thread pool included, carries the caller's job
+    group."""
+    from ais_data_pipeline_spark.sources.warc import encode_warc_records
+    from ais_data_pipeline_spark.streaming.web_ingest import ingest_web_batch
+
+    def rec(i, uri, text):
+        return dict(
+            warc_type="conversion", record_id=f"<urn:uuid:{i:04x}>",
+            warc_date="2024-01-01T00:00:00Z", target_uri=uri,
+            content_type="text/plain", payload=text.encode(),
+        )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "b1.warc.gz").write_bytes(encode_warc_records([
+        rec(0, "http://e.com/a", "alpha body one"),
+        rec(1, "http://e.com/b", "beta body two"),
+        rec(2, "http://e.com/a", "refetch of a"),
+        rec(3, "http://e.com/c", "alpha body one"),
+    ]))
+    batch = spark.read.format("binaryFile").load(str(landing)).select("path", "content")
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    grouped, stray = _jobs_in_group(
+        spark, lambda: ingest_web_batch(batch, 0, index, out)
+    )
+    assert stray == set()
+    assert len(grouped) >= 3  # the three writes
+
+
+def test_curation_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
+    """Every job of one ``run_curation`` call, its input measurement on
+    the thread pool included, carries the caller's job group."""
+    from ais_data_pipeline_spark.plans.curation import run_curation
+    from ais_data_pipeline_spark.sources.parquet import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    grouped, stray = _jobs_in_group(
+        spark, lambda: run_curation(spark, docs, str(tmp_path / "kept"))
+    )
+    assert stray == set() and grouped
+
+
+def test_ivfpq_build_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
+    """Every job of one ``build_ivfpq_index`` call, its three overlapped
+    table writes included, carries the caller's job group."""
+    from ais_data_pipeline_spark.operators.similarity import build_ivfpq_index
+    from ais_data_pipeline_spark.sources.parquet import read_table
+
+    e = read_table(spark, sf_dir, "embeddings")
+    grouped, stray = _jobs_in_group(
+        spark,
+        lambda: build_ivfpq_index(
+            e, str(tmp_path / "ivfpq"), n_centroids=8, m=4, k=8, iters=2
+        ),
+    )
+    assert stray == set()
+    assert len(grouped) >= 3  # the three overlapped writes
 
 
 #: jobs of one small-regime ``dedup_and_append_batch`` on the sf0.01
 #: fixture: the feature materialize (3), the probe-set collect (1), the
-#: drop-set collect with its five broadcast exchanges (6) and the five
-#: slice writes (6). Five exchanges, not four: the bucket IN-filter is
-#: inferred onto the index leg's band-row broadcast, so that one no
-#: longer matches the within-batch broadcast and is not reused.
-DEDUP_BATCH_MAX_JOBS = 16
+#: drop-set collect with its five broadcast exchanges (6) and the four
+#: slice writes (5: the bucket_stats aggregate's shuffle is its own job).
+#: Five exchanges, not four: the bucket IN-filter is inferred onto the
+#: index leg's band-row broadcast, so that one no longer matches the
+#: within-batch broadcast and is not reused.
+DEDUP_BATCH_MAX_JOBS = 15
 
 
 def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
@@ -621,11 +765,11 @@ def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
     }
     assert first == {10, 11}
 
-    # simulated crash: ONLY the hashes slice of batch 0 was written
+    # simulated crash: ONLY the docs slice of batch 0 was written
     feats = _features(batch, "text", "doc_id", 3)
     _write_slice(
-        feats.select("doc", "text_hash"),
-        index + "/hashes",
+        feats,
+        index + "/docs",
         0,
         bloom_col="text_hash",
         approx_rows=2,
@@ -638,7 +782,7 @@ def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert replayed == first
-    # without it, the batch exact-matches its own attempt-1 hashes and
+    # without it, the batch exact-matches its own attempt-1 docs and
     # every survivor silently vanishes — the masked recall-loss bug
     unexcluded = dedup_batch_against_index(batch, index, threshold=0.5).count()
     assert unexcluded == 0
@@ -955,11 +1099,11 @@ def test_incremental_dedup_index_compaction(spark, sf_dir, tmp_path):
 
     probe_batch = docs.filter(k % 7 == 3).limit(40)
     before = {r["doc_id"] for r in dedup_batch_against_index(probe_batch, index).collect()}
-    pre_hashes = spark.read.parquet(index + "/hashes").count()
-    assert len(_glob.glob(index + "/hashes/src_batch=*")) == 3  # history + 2 batches
+    pre_docs = spark.read.parquet(index + "/docs").count()
+    assert len(_glob.glob(index + "/docs/src_batch=*")) == 3  # history + 2 batches
 
     counts = compact_dedup_index(spark, index)
-    assert counts["hashes"] == pre_hashes
+    assert counts["docs"] == pre_docs
     # r14: compaction commits by generation pointer — the consolidated
     # tables live under the published _gNNNNN root and no data
     # directory was ever renamed. r15 (deferred GC): the superseded
@@ -970,9 +1114,9 @@ def test_incremental_dedup_index_compaction(spark, sf_dir, tmp_path):
     assert _fsutil.current_generation(index) == 1
     root = _fsutil.current_root(index)
     assert root != index
-    assert _glob.glob(root + "/hashes/src_batch=*") == [root + "/hashes/src_batch=-1"]
-    assert _glob.glob(index + "/hashes/src_batch=*") != []  # kept one cycle
-    assert spark.read.parquet(root + "/hashes").count() == pre_hashes
+    assert _glob.glob(root + "/docs/src_batch=*") == [root + "/docs/src_batch=-1"]
+    assert _glob.glob(index + "/docs/src_batch=*") != []  # kept one cycle
+    assert spark.read.parquet(root + "/docs").count() == pre_docs
 
     after = {r["doc_id"] for r in dedup_batch_against_index(probe_batch, index).collect()}
     assert after == before
@@ -980,7 +1124,7 @@ def test_incremental_dedup_index_compaction(spark, sf_dir, tmp_path):
     # next maintenance entry collects the deferred legacy data and
     # probes stay identical through it
     compact_dedup_index(spark, index)
-    assert _glob.glob(index + "/hashes/src_batch=*") == []  # now collected
+    assert _glob.glob(index + "/docs/src_batch=*") == []  # now collected
     after2 = {r["doc_id"] for r in dedup_batch_against_index(probe_batch, index).collect()}
     assert after2 == before
 
@@ -1037,7 +1181,7 @@ def test_generation_commit_crash_windows_and_zero_renames(
         pass
     monkeypatch.undo()
     assert fsutil.current_generation(index) == 0
-    assert _glob.glob(index + "/_g00001/hashes/src_batch=*")  # stage exists
+    assert _glob.glob(index + "/_g00001/docs/src_batch=*")  # stage exists
     mid = {
         r["doc_id"] for r in dedup_batch_against_index(probe_batch, index).collect()
     }
@@ -1051,7 +1195,7 @@ def test_generation_commit_crash_windows_and_zero_renames(
     monkeypatch.setattr(_os, "rename", no_rename)
     counts = compact_dedup_index(spark, index)
     monkeypatch.undo()
-    assert counts["hashes"] > 0
+    assert counts["docs"] > 0
     assert fsutil.current_generation(index) == 1
     after = {
         r["doc_id"] for r in dedup_batch_against_index(probe_batch, index).collect()
@@ -1062,7 +1206,7 @@ def test_generation_commit_crash_windows_and_zero_renames(
     # swept by the next entry, which itself commits gen 2. r15
     # deferred GC: the JUST-superseded gen 1 is kept one cycle for
     # racing probes and collected by the entry after that.
-    stale = index + "/_g00007/hashes"
+    stale = index + "/_g00007/docs"
     _os.makedirs(stale)
     with open(stale + "/junk.parquet", "w") as f:
         f.write("x")
@@ -1084,7 +1228,7 @@ def test_generation_commit_crash_windows_and_zero_renames(
     build_dedup_index(docs.filter(k % 3 == 0), index)
     assert fsutil.current_generation(index) == 0
     assert not _glob.glob(index + "/_g*")
-    assert spark.read.parquet(index + "/hashes").count() > 0
+    assert spark.read.parquet(index + "/docs").count() > 0
 
 
 def test_generation_protocol_fake_remote_io():
@@ -1128,17 +1272,17 @@ def test_generation_protocol_fake_remote_io():
         sizes[f"{idx}/{rel}"] = size
 
     # flat gen-0 layout with history + accreted slices
-    put("hashes/src_batch=-1/part-0.parquet", 1000)
-    put("hashes/src_batch=0/part-0.parquet", 60)
-    put("shingles/src_batch=-1/part-0.parquet", 5000)
-    put("shingles/src_batch=0/part-0.parquet", 300)
+    put("docs/src_batch=-1/part-0.parquet", 1000)
+    put("docs/src_batch=0/part-0.parquet", 60)
+    put("buckets/src_batch=-1/part-0.parquet", 5000)
+    put("buckets/src_batch=0/part-0.parquet", 300)
     assert fsutil.current_generation(idx, io) == 0
     m = dedup_index_accretion(idx, io=io)
     assert m["history_bytes"] == 6000 and m["slice_bytes"] == 360
 
     # staged gen 1 + publish: census follows the pointer
-    put("_g00001/hashes/src_batch=-1/part-0.parquet", 1060)
-    put("_g00001/shingles/src_batch=-1/part-0.parquet", 5300)
+    put("_g00001/docs/src_batch=-1/part-0.parquet", 1060)
+    put("_g00001/buckets/src_batch=-1/part-0.parquet", 5300)
     fsutil.publish_generation(idx, 1, io)
     assert fsutil.current_generation(idx, io) == 1
     assert fsutil.current_root(idx, io).endswith("/_g00001")
@@ -1147,13 +1291,13 @@ def test_generation_protocol_fake_remote_io():
 
     # GC: legacy flat dirs (named mode) + a stale stage vanish, the
     # published generation survives
-    put("_g00002/hashes/src_batch=-1/part-0.parquet", 1)  # crashed stage
+    put("_g00002/docs/src_batch=-1/part-0.parquet", 1)  # crashed stage
     removed = fsutil.gc_generations(
-        idx, 1, legacy_names=["hashes", "shingles"], io=io
+        idx, 1, legacy_names=["docs", "buckets"], io=io
     )
     assert any(p.endswith("_g00002") for p in removed)
     assert not any("/_g00002/" in p for p in store)
-    assert not any("/hashes/" in p and "_g00001" not in p for p in store)
+    assert not any("/docs/" in p and "_g00001" not in p for p in store)
     assert any("/_g00001/" in p for p in store)
 
     # auto legacy mode (the IVF flat layout: list_id dirs + root files)
@@ -1218,7 +1362,7 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
     dedup_and_append_batch(b1, 0, index, out)
     m1 = dedup_index_accretion(index)
     assert m1["slice_bytes"] > 0 and m1["slice_files"] > 0
-    assert m1["n_slices"] >= 3  # hashes/shingles/buckets slices at least
+    assert m1["n_slices"] >= 2  # docs and buckets slices at least
     assert m1["history_bytes"] == m0["history_bytes"]  # history untouched
 
     # trigger math, all three knobs:
@@ -1247,14 +1391,14 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
     # accretion counters reset to zero
     assert maybe_compact_dedup_index(index_path=index, spark=spark,
                                      slice_ratio=hi, min_slice_bytes=0) is None
-    hashes_pre_compact = spark.read.parquet(index + "/hashes").count()
+    docs_pre_compact = spark.read.parquet(index + "/docs").count()
     res = maybe_compact_dedup_index(index_path=index, spark=spark,
                                     slice_ratio=0.01, min_slice_bytes=0)
     assert res is not None and res["trigger"] == "bytes"
     assert res["compact_sec"] >= 0
     # every slice row folded into history, none lost (bytes typically
     # SHRINK: one well-encoded file replaces many small ones)
-    assert res["row_counts"]["hashes"] == hashes_pre_compact
+    assert res["row_counts"]["docs"] == docs_pre_compact
     m2 = dedup_index_accretion(index)
     assert m2["slice_bytes"] == 0 and m2["slice_files"] == 0
     assert m2["history_bytes"] > 0
@@ -1266,11 +1410,11 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
 
     root = _fsutil.current_root(index)  # post-compaction generation
     kept_before = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    hashes_before = spark.read.parquet(root + "/hashes").count()
+    docs_before = spark.read.parquet(root + "/docs").count()
     n_in, n_kept = dedup_and_append_batch(b1, 0, index, out)
     assert n_kept == 0  # every doc is its own history duplicate
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == kept_before
-    assert spark.read.parquet(root + "/hashes").count() == hashes_before
+    assert spark.read.parquet(root + "/docs").count() == docs_before
 
 
 def test_incremental_embedding_dedup_semantics_and_replay(spark, tmp_path):
@@ -1651,11 +1795,11 @@ def test_accretion_listing_through_fs_adapter(spark, sf_dir, tmp_path):
     # index of this shape — history + two accreted slices per table
     def fake_s3_lister(root):
         assert root == "s3a://bucket/dedup-index"
-        for table in ("hashes", "shingles", "buckets"):
+        for table in ("docs", "buckets", "bucket_stats"):
             yield f"{table}/src_batch=-1/part-000.parquet", 400 * 2**20
             yield f"{table}/src_batch=0/part-000.parquet", 30 * 2**20
             yield f"{table}/src_batch=1/part-000.parquet", 30 * 2**20
-        yield "hashes/src_batch=0/_SUCCESS", 0  # non-parquet: ignored
+        yield "docs/src_batch=0/_SUCCESS", 0  # non-parquet: ignored
         yield "stray.parquet", 2**30  # wrong depth: ignored
 
     m_fake = dedup_index_accretion("s3a://bucket/dedup-index", lister=fake_s3_lister)
