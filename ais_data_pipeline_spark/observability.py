@@ -29,6 +29,23 @@ def log(event: str, level: str = "info", **fields: Any) -> dict[str, Any]:
     return record
 
 
+def overlap(spark, *thunks) -> list:
+    """Run independent thunks (writes, measurements) concurrently and
+    return their results in order, re-raising the first failure after
+    every thunk has finished. Each thunk is wrapped on its own so its
+    pool thread takes the caller's local properties (job group,
+    scheduler pool) and its jobs stay in the caller's group; one wrap
+    per thunk, since each write sets its own SQL execution id in the
+    copy it gets."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+        return [f.result() for f in futs]
+
+
 class OpCounter:
     """Thread-safe named counters (reference S3RequestCounter parity).
 

@@ -1512,11 +1512,10 @@ def build_ivfpq_index(
     # pinned residuals; two tiny local-relation sidecars) — overlap
     # them (guide §2.6); the consistency stamp still lands strictly
     # LAST, after every write committed
-    from concurrent.futures import ThreadPoolExecutor
+    from ais_data_pipeline_spark.observability import overlap
 
-    from pyspark import inheritable_thread_target
-
-    writes = [
+    overlap(
+        spark,
         lambda: (
             codes.repartition("list_id")
             .write.mode("overwrite")
@@ -1529,12 +1528,7 @@ def build_ivfpq_index(
         lambda: local_df(
             spark, book_rows, "subspace int, centroid_id bigint, cvec array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "_codebooks"),
-    ]
-    # one wrap per write: each pool thread keeps the caller's job group
-    # in its own copy of the local properties
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for fut in [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]:
-            fut.result()
+    )
     # stamp LAST — a crash between any of the three writes above
     # leaves a token mismatch the probe rejects loudly
     _stamp_index(

@@ -7,6 +7,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ais_data_pipeline_spark.checkpointing import materialize_counted
+from ais_data_pipeline_spark.localrel import local_df
+
 #: conservative broadcast-size estimate for an id-only drop-set row
 #: (one short string key + per-row overhead in the driver-built
 #: broadcast relation). Deliberately fat: the gate exists to AVOID
@@ -95,6 +98,71 @@ def gated_broadcast(
     if n_rows * bytes_per_row <= _auto_broadcast_bytes(df):
         return F.broadcast(df)
     return df
+
+
+#: key sets bounded by at most this many values collect to the driver
+#: and filter as literal IN / NOT-IN lists (a pushed IN-filter lets the
+#: index scans skip row groups by their parquet bloom filters); larger
+#: sets stay a pinned frame joined through ``gated_broadcast``. Read at
+#: call time, so setting it to -1 forces the large regime everywhere.
+PUSHDOWN_LIMIT = 10_000
+
+
+class KeySet:
+    """The distinct non-NULL values of one key column, held as driver
+    values when the caller's bound is at most ``PUSHDOWN_LIMIT``, or
+    else as a pinned frame. Either form gives the same results:
+    ``semi`` keeps the rows whose key is in the set, ``anti`` the rows
+    whose key is not, and a NULL key always passes ``anti`` (it never
+    matches, like a left_anti join)."""
+
+    def __init__(self, df: DataFrame, col: str, values: list | None, n: int):
+        self.col = col
+        # the pinned frame, or the lazy key projection whose schema and
+        # session build ``frame()``
+        self._df = df
+        self._values = values
+        self._n = n
+
+    @classmethod
+    def collect(cls, df: DataFrame, col: str, bound: int) -> "KeySet":
+        """Key set of ``df[col]``; ``bound`` is an upper bound on its
+        distinct values. A small set costs one shuffle-free collect,
+        deduplicated on the driver; a large one one pinned distinct."""
+        keys = df.select(col)
+        if bound <= PUSHDOWN_LIMIT:
+            values = sorted({r[0] for r in keys.collect()} - {None})
+            return cls(keys, col, values, len(values))
+        frame, n = materialize_counted(keys.filter(F.col(col).isNotNull()).distinct())
+        return cls(frame, col, None, n)
+
+    def __len__(self) -> int:
+        return self._n
+
+    def semi(self, scan: DataFrame) -> DataFrame:
+        """Rows of ``scan`` whose key is in the set."""
+        if self._values is not None:
+            return scan.filter(in_values_cond(self.col, self._values))
+        return scan.join(gated_broadcast(self._df, self._n), self.col, "leftsemi")
+
+    def anti(self, df: DataFrame, col: str | None = None) -> DataFrame:
+        """Rows of ``df`` whose key (``df[col]``, default the set's own
+        column name) is NULL or not in the set."""
+        col = col or self.col
+        if self._values is not None:
+            if not self._values:
+                return df
+            return df.filter(F.col(col).isNull() | ~in_values_cond(col, self._values))
+        keys = self._df.withColumnRenamed(self.col, col)
+        return df.join(gated_broadcast(keys, self._n), col, "left_anti")
+
+    def frame(self) -> DataFrame:
+        """The set as a one-column frame."""
+        if self._values is None:
+            return self._df
+        return local_df(
+            self._df.sparkSession, [(v,) for v in self._values], self._df.schema
+        )
 
 
 def spread_to_parallelism(df: DataFrame) -> DataFrame:

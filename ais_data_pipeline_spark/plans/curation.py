@@ -23,7 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ais_data_pipeline_spark.observability import log
+from ais_data_pipeline_spark.observability import log, overlap
 from ais_data_pipeline_spark.operators.dedup import minhash_near_dup
 from ais_data_pipeline_spark.operators.text import quality_col
 from ais_data_pipeline_spark.checkpointing import materialize
@@ -88,29 +88,24 @@ def run_curation(
         ).first()
         return row["n"], (row["t"] or 0)
 
+    def stage1() -> tuple[DataFrame, int]:
+        # stage 1: exact — only the ~few-% non-min ids materialize
+        hashed = docs.select(id_col, F.md5(F.col(text_col).cast("binary")).alias("__h"))
+        keep_min = hashed.groupBy("__h").agg(F.min(id_col).alias("__keep"))
+        drop_exact = (
+            hashed.join(keep_min, "__h")
+            .filter(F.col(id_col) != F.col("__keep"))
+            .select(id_col)
+            .transform(materialize)  # small: dup ids only
+        )
+        return drop_exact, drop_exact.count()
+
     # the input measurement and the stage-1 drop-set computation are
     # independent jobs over the same scan — overlap them (r18, guide
     # §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    # wrapped so the pool thread keeps the caller's job group
-    measure_fut = pool.submit(inheritable_thread_target(spark)(measure), docs)
-
-    # stage 1: exact — only the ~few-% non-min ids materialize
-    hashed = docs.select(id_col, F.md5(F.col(text_col).cast("binary")).alias("__h"))
-    keep_min = hashed.groupBy("__h").agg(F.min(id_col).alias("__keep"))
-    drop_exact = (
-        hashed.join(keep_min, "__h")
-        .filter(F.col(id_col) != F.col("__keep"))
-        .select(id_col)
-        .transform(materialize)  # small: dup ids only
+    (n_total, tok_total), (drop_exact, n_drop_exact) = overlap(
+        spark, lambda: measure(docs), stage1
     )
-    n_drop_exact = drop_exact.count()
-    n_total, tok_total = measure_fut.result()
-    pool.shutdown()
     # size-gated (r17): real corpora can carry drop-sets past broadcast
     # size; above the threshold AQE picks a keys-only shuffled anti-join
     s1 = docs.join(gated_broadcast(drop_exact, n_drop_exact), id_col, "left_anti")

@@ -24,12 +24,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ais_data_pipeline_spark.observability import Stopwatch, log
+from ais_data_pipeline_spark.observability import Stopwatch, log, overlap
 from ais_data_pipeline_spark.operators.aggregates import distinct_count_aggs, ratios_from
 from ais_data_pipeline_spark.operators.profiling import (
     TighteningPlan,
@@ -109,12 +108,6 @@ def run_pipeline(
     # of the table per sink at 100 TB.
     from pyspark.sql import Observation
 
-    # The main and quarantine writes are independent jobs over the
-    # same persisted parse — overlap them from a thread pool (guide
-    # §2.6) so the (tiny) quarantine write rides the main write's tail
-    # instead of serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
-
     obs_out = Observation("rows_out")
 
     def write_main() -> None:
@@ -141,16 +134,11 @@ def run_pipeline(
             .parquet(quarantine_path)
         )
 
-    # the pool threads take the caller's local properties (job group,
-    # scheduler pool), so the writes' jobs stay in the caller's group;
-    # one wrap per thunk, since each write sets its own SQL execution id
-    # in the copy it gets
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(inheritable_thread_target(spark)(write_main))]
-        if bad is not None:
-            futs.append(pool.submit(inheritable_thread_target(spark)(write_bad)))
-        for f in futs:
-            f.result()
+    # The main and quarantine writes are independent jobs over the
+    # same persisted parse — overlap them (guide §2.6) so the (tiny)
+    # quarantine write rides the main write's tail instead of
+    # serializing after it.
+    overlap(spark, write_main, *([write_bad] if bad is not None else []))
     metrics = obs_out.get
     result.rows_out = metrics["n"]
     if bad is not None:

@@ -56,13 +56,15 @@ from pyspark.sql import functions as F
 
 from ais_data_pipeline_spark import fsutil
 from ais_data_pipeline_spark.checkpointing import materialize, materialize_counted
+from ais_data_pipeline_spark.observability import overlap
 from ais_data_pipeline_spark.operators.dedup import (
     minhash_band_rows_from_shingles,
     minhash_band_structs_sql,
     shingle_hashes_from_tokens,
     tokens_lower,
 )
-from ais_data_pipeline_spark.operators.util import gated_broadcast, in_values_cond
+from ais_data_pipeline_spark.operators import util
+from ais_data_pipeline_spark.operators.util import KeySet, gated_broadcast, in_values_cond
 
 # explicit read schemas: index partitions may be legitimately empty
 # (a batch where nothing survived), and schema inference fails there
@@ -122,7 +124,7 @@ SINGLE_FILE_MAX_ROWS = 2_000_000
 
 #: false-positive rate each slice's bloom filter is sized for (see
 #: ``_write_slice``): low enough that a 10 000-value IN-list
-#: (``pushdown_limit``) still skips a non-matching slice ~99 % of the time
+#: (``util.PUSHDOWN_LIMIT``) still skips a non-matching slice ~99 % of the time
 BLOOM_FPP = 1e-6
 
 
@@ -164,7 +166,7 @@ def _write_slice(
     bound on the slice's distinct values. The rate must be that low
     because a probe's IN-list skips a row group only if EVERY probed
     value tests negative: at parquet's default 1 % a 10 000-value list
-    (``pushdown_limit``) makes every slice a false positive, while at
+    (``util.PUSHDOWN_LIMIT``) makes every slice a false positive, while at
     1e-6 a slice holding none of the values still skips with
     probability (1 - 1e-6)^10 000 ≈ 0.99. The probed columns carry no
     dictionary page (every hash is distinct), so the bloom filter is
@@ -257,7 +259,8 @@ def build_dedup_index(
     # the three table writes are independent jobs over the two pinned
     # frames — overlap them (guide §2.6, same shape as the batch
     # append path). History-sized: keep the input partitioning.
-    _overlap(docs.sparkSession, [
+    overlap(
+        docs.sparkSession,
         lambda: _write_slice(
             feats, os.path.join(root, "docs"), HISTORY_BATCH,
             bloom_col="text_hash", single_file=False, approx_rows=n_hist,
@@ -268,23 +271,7 @@ def build_dedup_index(
             approx_rows=n_hist * bands,  # at most one row per doc per band
         ),
         lambda: _write_bucket_stats(bands_df, root, HISTORY_BATCH),
-    ])
-
-
-def _overlap(spark: SparkSession, writes: list) -> None:
-    """Run independent writes concurrently and re-raise the first
-    failure. Each thunk is wrapped on its own so its pool thread takes
-    the caller's local properties (job group, scheduler pool) and its
-    jobs stay in the caller's group; one wrap per thunk, since each
-    write sets its own SQL execution id in the copy it gets."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futs = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
-        for fut in futs:
-            fut.result()
+    )
 
 
 def _write_bucket_stats(
@@ -379,15 +366,18 @@ def dedup_batch_against_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    pushdown_limit: int = 10_000,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    survivors = _dedup_batch_parts(
+    """Survivors of one batch under the drop rule in the module
+    docstring, as a lazy plan: the drop set stays an unpinned query,
+    so the plan exposes the broadcast probe of the index tables."""
+    _, _, drops, _, _ = _dedup_batch_parts(
         batch_df, index_path, threshold, n_hashes, bands, shingle_n,
-        seed, text_col, id_col, max_bucket_size, pushdown_limit,
-        exclude_batch, pin_drops=False,
-    )[0]
-    return survivors
+        seed, text_col, id_col, max_bucket_size, exclude_batch,
+    )
+    return batch_df.join(
+        F.broadcast(drops.withColumnRenamed("doc", id_col)), id_col, "left_anti"
+    )
 
 
 def _dedup_batch_parts(
@@ -401,11 +391,9 @@ def _dedup_batch_parts(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    pushdown_limit: int = 10_000,
     exclude_batch: int | None = None,
-    pin_drops: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, bool, int, int, list | None]:
-    """Survivors of one batch under the drop rule in the module
+) -> tuple[DataFrame, DataFrame, DataFrame, bool, int]:
+    """The drop set of one batch under the drop rule in the module
     docstring. The batch is the broadcast side (its within-batch
     self-join only while it fits the broadcast threshold); the index
     tables are scanned once each and streamed through broadcast joins
@@ -420,9 +408,9 @@ def _dedup_batch_parts(
     batch forever (round-10 review: silent recall loss masked by the
     clean-replay test). Partition pruning makes the filter free.
 
-    When the batch is small (``n_in <= pushdown_limit``), its hash set
-    — and its bucket set, when that too fits under ``pushdown_limit``
-    — additionally pushes into the index scans as literal IN-filters:
+    When the batch is small (``n_in <= util.PUSHDOWN_LIMIT``), its hash
+    set — and its bucket set, when that too fits under the limit —
+    additionally pushes into the index scans as literal IN-filters:
     the docs and buckets tables are written with
     parquet bloom filters on those columns, so the reader skips whole
     row groups holding none of the probed values — for a dup-free
@@ -438,27 +426,25 @@ def _dedup_batch_parts(
     as an Observation. Band rows are then a narrow explode of the
     pinned frame per consumer. A small batch then runs two more
     queries: one shuffle-free collect of (hash, bucket array) rows,
-    deduplicated into both probe sets on the driver, and the drop-set
-    collect. The drop-set DAG has no distinct() and no shuffle: the
-    index tables stream past broadcasts of the batch side, the legs
-    share one band-row broadcast and one (doc, shingles) verify
-    broadcast (ReuseExchange), and AQE runs each of its four or five
-    exchanges as one job. A large batch skips the probe-set collect
-    and pins one distinct drop set instead.
+    deduplicated into both probe sets on the driver; a large batch
+    skips that collect. The drop-set DAG has no distinct() and no
+    shuffle: the index tables stream past broadcasts of the batch
+    side, the legs share one band-row broadcast and one (doc,
+    shingles) verify broadcast (ReuseExchange), and AQE runs each of
+    its four or five exchanges as one job. The caller runs the drop
+    set: ``dedup_and_append_batch`` through one ``KeySet.collect`` (a
+    literal drop list for a small batch, a pinned distinct drop set
+    for a large one), ``dedup_batch_against_index`` as a lazy
+    broadcast anti-join.
 
-    Returns ``(survivors, enriched, bands_b, drops, bands_filtered,
-    n_in, n_drops, drop_ids)`` so the append path can REUSE the
-    batch's pinned features/band rows for the survivor index writes
-    instead of recomputing the md5/shingle/minhash passes (r18), plus
-    the already-observed accounting counts (r19; ``n_drops`` is -1
-    when ``pin_drops=False`` leaves the drop set lazy). ``drop_ids``
-    is the COLLECTED drop set when the batch is small enough
-    (``n_in <= pushdown_limit``) for consumers to filter by literal
-    NOT-IN values instead of broadcast anti-joins — one probe job, no
-    per-consumer broadcast-exchange jobs. ``bands_filtered`` is True
-    when a hot-bucket cap pruned ``bands_b`` — the reused band rows
-    are then NOT the survivors' complete band set and the caller must
-    recompute."""
+    Returns ``(enriched, bands_b, drops, bands_filtered, n_in)``:
+    the batch's pinned features and band rows, which the append path
+    REUSES for the survivor index writes instead of recomputing the
+    md5/shingle/minhash passes (r18); the lazy drop set, one ``doc``
+    column that may repeat an id; whether a hot-bucket cap pruned
+    ``bands_b`` — the reused band rows are then NOT the survivors'
+    complete band set and the caller must recompute; and the batch's
+    row count, observed on the pin (r19)."""
     from pyspark.sql import Observation
 
     spark = batch_df.sparkSession
@@ -541,10 +527,9 @@ def _dedup_batch_parts(
             F.broadcast(hot), ["band", "bucket"], "left_anti"
         ).transform(materialize)
 
-    small = 0 <= n_in <= pushdown_limit
     batch_hashes: list | None = None
     batch_buckets: list | None = None
-    if small:
+    if n_in <= util.PUSHDOWN_LIMIT:
         # Small batch: its probe sets come from ONE shuffle-free collect
         # of the pinned frame — (text_hash, this row's bucket array) —
         # deduplicated here on the driver, not by two distinct()
@@ -561,7 +546,7 @@ def _dedup_batch_parts(
                 hashes.add(h)
             buckets.update(bks or ())
         batch_hashes = sorted(hashes)
-        if len(buckets) <= pushdown_limit:
+        if len(buckets) <= util.PUSHDOWN_LIMIT:
             batch_buckets = sorted(buckets)
 
     def index_scan(table: str, schema: str) -> DataFrame:
@@ -638,51 +623,7 @@ def _dedup_batch_parts(
     )
 
     drops = exact_w.union(exact_x).union(near_w).union(near_x)
-    n_drops = -1
-    drop_ids: list | None = None
-    if pin_drops and small:
-        # Small batch (n_in bounds the drop set): run the probe DAG as
-        # ONE collect and hand every consumer the drop set as literal
-        # values — each of the four downstream writes then anti-joins
-        # via a plain NOT-IN filter instead of embedding a broadcast
-        # exchange, which Spark executes as its own async job (r19).
-        # A NULL id never matches the anti-join, so it leaves the set:
-        # a NULL inside NOT IN would make the filter drop every row.
-        drop_ids = sorted({r["doc"] for r in drops.collect()} - {None})
-        n_drops = len(drop_ids)
-        survivors = batch_df.filter(_keep_cond(id_col, drop_ids))
-    else:
-        if pin_drops:
-            # the append path anti-joins the drop set against batch_df,
-            # feats AND bands_b: pin it once (dropped ids only), with
-            # the count riding the same job. NULL ids leave it for the
-            # same reason as above, so n_drops counts removable ids.
-            drops, n_drops = materialize_counted(
-                drops.filter(F.col("doc").isNotNull()).distinct()
-            )
-        # without pin_drops (the public single-consumer probe) the drop
-        # set stays lazy, so the returned plan still EXPOSES the
-        # broadcast-probe shape (plan-gated in pytest)
-        survivors = batch_df.join(
-            F.broadcast(drops.withColumnRenamed("doc", id_col)),
-            id_col,
-            "left_anti",
-        )
-    return (
-        survivors, feats, bands_b, drops,
-        (max_bucket_size is not None), n_in, n_drops, drop_ids,
-    )
-
-
-def _keep_cond(col_name: str, drop_ids: list) -> "F.Column":
-    """NOT-IN-drop-set filter, bit-equivalent to the left_anti join on
-    the same ids: non-matching rows pass, NULL ids pass (a NULL key
-    never matches an anti-join probe). The IN list parses as ONE SQL
-    expression — not one py4j literal call per element."""
-    if not drop_ids:
-        return F.lit(True)
-    c = F.col(col_name)
-    return c.isNull() | ~in_values_cond(col_name, drop_ids)
+    return feats, bands_b, drops, (max_bucket_size is not None), n_in
 
 
 # -- semantic (embedding) incremental dedup --------------------------------
@@ -757,7 +698,6 @@ def dedup_embedding_batch_against_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     round_digits: int = 4,
-    pushdown_limit: int = 10_000,
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Semantic survivors of one batch: drop a vector iff a same-bucket
@@ -784,7 +724,7 @@ def dedup_embedding_batch_against_index(
     )
 
     spark = batch_df.sparkSession
-    os.makedirs(os.path.join(index_path, "vecs"), exist_ok=True)
+    _ensure_local_dir(os.path.join(index_path, "vecs"))
     # dim must come from a NON-NULL vector: one NULL embedding at the
     # head of a batch yielded dim NULL and killed the query (round-10
     # review poison pill)
@@ -837,9 +777,9 @@ def dedup_embedding_batch_against_index(
         hist = hist.filter(F.col("src_batch") != exclude_batch)
     batch_buckets = [
         r["bucket"]
-        for r in feats.select("bucket").distinct().limit(pushdown_limit + 1).collect()
+        for r in feats.select("bucket").distinct().limit(util.PUSHDOWN_LIMIT + 1).collect()
     ]
-    if len(batch_buckets) <= pushdown_limit:
+    if len(batch_buckets) <= util.PUSHDOWN_LIMIT:
         hist = hist.filter(in_values_cond("bucket", batch_buckets))
     cross = (
         hist.select(
@@ -1187,7 +1127,6 @@ def dedup_and_append_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    pushdown_limit: int = 10_000,
 ) -> tuple[int, int]:
     """One ingest step — dedup ``batch_df`` against the index, append
     survivors to ``out_path`` and their features to the index — shared
@@ -1198,15 +1137,20 @@ def dedup_and_append_batch(
     from pyspark.sql import Observation
 
     root = _index_root(index_path)
-    survivors, feats, bands_b, drops, bands_filtered, n_in, n_drops, drop_ids = (
-        _dedup_batch_parts(
-            batch_df, index_path, threshold, n_hashes, bands,
-            shingle_n, seed, text_col, id_col, max_bucket_size,
-            pushdown_limit,
-            exclude_batch=batch_id,  # replay after partial failure
-            # must not probe this batch's own attempt-1 slices
-        )
+    feats, bands_b, drops, bands_filtered, n_in = _dedup_batch_parts(
+        batch_df, index_path, threshold, n_hashes, bands,
+        shingle_n, seed, text_col, id_col, max_bucket_size,
+        exclude_batch=batch_id,  # replay after partial failure
+        # must not probe this batch's own attempt-1 slices
     )
+    # The drop set is bounded by the batch (n_in): a small batch runs
+    # the drop-set DAG as ONE collect and every consumer below filters
+    # by literal NOT-IN values instead of embedding a broadcast
+    # exchange, which Spark executes as its own async job (r19); a
+    # large batch pins one distinct drop set, the count riding the pin.
+    # Either way NULL ids leave the set (a NULL never matches the
+    # anti-join), so len(keys) counts removable ids.
+    keys = KeySet.collect(drops, "doc", n_in)
     # File-sizing estimate by set arithmetic: an UPPER bound on every
     # slice below, which the single-file funnel relies on. Each
     # non-NULL drop id removes at least one row, so it is exact when
@@ -1214,7 +1158,7 @@ def dedup_and_append_batch(
     # (only the single-file decision shifts, never the data). The RETURNED
     # n_kept is the exact written count, riding the survivors write as
     # an Observation (r19; closes the r18 ADVICE exactness caveat).
-    n_kept_est = n_in - n_drops
+    n_kept_est = n_in - len(keys)
     # Survivor features/band rows REUSE the probe pass's materialized
     # frames (r18): _features is deterministic per row, so filtering
     # the batch feats to survivors is value-identical to recomputing
@@ -1222,12 +1166,7 @@ def dedup_and_append_batch(
     # micro-batch. Same for the 32-permutation minhash band rows,
     # EXCEPT when a hot-bucket cap pruned bands_b (rows the survivor
     # index must still carry) — then recompute, as before.
-    if drop_ids is not None:
-        # small-batch regime: the collected drop set filters as literal
-        # NOT-IN values — no broadcast-exchange job per consumer (r19)
-        feats_s = feats.filter(_keep_cond("doc", drop_ids))
-    else:
-        feats_s = feats.join(F.broadcast(drops), "doc", "left_anti")
+    feats_s = keys.anti(feats)
     if bands_filtered:
         # the survivors' FULL band set (hot-pruned rows must still be
         # indexed) — derived from the survivor features, not a fresh
@@ -1235,20 +1174,21 @@ def dedup_and_append_batch(
         surv_bands = minhash_band_rows_from_shingles(
             feats_s, n_hashes, bands, seed
         ).transform(materialize)  # written twice: buckets + stats
-    elif drop_ids is not None:
-        surv_bands = bands_b.filter(_keep_cond("doc", drop_ids))
     else:
-        # bands_b already excludes exact-dropped docs; anti-joining the
+        # bands_b already excludes exact-dropped docs; removing the
         # full drop set leaves exactly the survivors' band rows
-        surv_bands = bands_b.join(F.broadcast(drops), "doc", "left_anti")
+        surv_bands = keys.anti(bands_b)
     # ALL FOUR writes (survivors + three index tables) are independent
     # jobs over PINNED inputs — overlap them from a thread pool (guide
     # §2.6; r19 folds the survivors write in, it used to serialize
     # ahead of the pool). bucket_stats reuses the surviving-band-row
     # bound instead of its own materialize+count (2 fewer jobs/batch).
     obs_kept = Observation()
-    surv_obs = survivors.observe(obs_kept, F.count(F.lit(1)).alias("n"))
-    _overlap(batch_df.sparkSession, [
+    surv_obs = keys.anti(batch_df, id_col).observe(
+        obs_kept, F.count(F.lit(1)).alias("n")
+    )
+    overlap(
+        batch_df.sparkSession,
         lambda: _write_slice(
             surv_obs, out_path, batch_id, approx_rows=n_kept_est
         ),
@@ -1271,6 +1211,6 @@ def dedup_and_append_batch(
             # slice (≤2M band rows) without the old materialize+count
             approx_rows=n_kept_est * bands,
         ),
-    ])
+    )
     n_kept = int(obs_kept.get["n"])
     return n_in, n_kept

@@ -10,10 +10,11 @@ appends survivors — so batch N+1 dedups against everything batch ≤N
 ingested without any corpus rescan. Built on the
 ``incremental_dedup`` conventions and sharing its slice writer:
 
-- **O(batch) probes**: the batch's distinct url / hash set broadcasts
-  into a semi-join against the index (index never shuffles; parquet
-  bloom filters on the probe columns let a dup-free batch's "scan"
-  touch footers, not data pages);
+- **O(batch) probes**: the batch's distinct url / hash set is a
+  ``KeySet`` probing the index — a pushed IN-filter for a small batch
+  (parquet bloom filters on the probe columns let a dup-free batch's
+  "scan" touch footers, not data pages), a broadcast semi-join for a
+  large one (the index never shuffles);
 - **idempotent replay**: every write is a ``src_batch=`` dynamic
   partition overwrite, and probes EXCLUDE the batch's own slices
   (``src_batch != batch_id``) so a crash-replayed batch cannot match
@@ -41,9 +42,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ais_data_pipeline_spark.checkpointing import materialize
+from ais_data_pipeline_spark.checkpointing import materialize, materialize_counted
 from ais_data_pipeline_spark.functions.url import canonical_url
-from ais_data_pipeline_spark.observability import log
+from ais_data_pipeline_spark.observability import log, overlap
+from ais_data_pipeline_spark.operators.util import KeySet, gated_broadcast
 from ais_data_pipeline_spark.streaming.incremental_dedup import (
     _ensure_local_dir,
     _write_slice,
@@ -165,35 +167,6 @@ def _read_index(spark, path: str, schema: str, exclude_batch: int) -> DataFrame:
     )
 
 
-#: batch-side key sets at or under this many distinct values collect
-#: to the driver and probe the index as pushed IN-filters (parquet
-#: bloom row-group skipping — the url/hash index tables are written
-#: with blooms on exactly these columns), with every downstream
-#: anti-join a literal NOT-IN filter instead of a broadcast-exchange
-#: job; above it the r18 gated-broadcast semi-join shape applies
-#: unchanged (same contract as incremental_dedup's pushdown_limit)
-PUSHDOWN_LIMIT = 10_000
-
-
-def _anti(df: DataFrame, col: str, seen: "list | DataFrame", bound: int):
-    """Anti-join ``df`` against a seen-key set: literal NOT-IN filter
-    when the set was collected (bit-equivalent — no NULL keys reach
-    these columns, and the guard keeps NULLs like left_anti would;
-    the IN list parses as ONE SQL expression, not one py4j literal
-    call per element), gated-broadcast left_anti otherwise."""
-    from ais_data_pipeline_spark.operators.util import (
-        gated_broadcast,
-        in_values_cond,
-    )
-
-    if isinstance(seen, list):
-        if not seen:
-            return df
-        c = F.col(col)
-        return df.filter(c.isNull() | ~in_values_cond(col, seen))
-    return df.join(gated_broadcast(seen, bound), col, "left_anti")
-
-
 def ingest_web_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -218,27 +191,23 @@ def ingest_web_batch(
     ``max_files_per_trigger``) degrades to a shuffled keys-only join
     instead of an over-limit broadcast.
 
-    Job shape (r19, guide §1.2 step 1): the parse pins ONCE with its
-    count riding the checkpoint job; the quality gate folds into that
-    same pinned frame as a flag column, so BOTH accounting counts ride
-    one more pinned materialize as Observations; small batches
-    (``n_in <= PUSHDOWN_LIMIT``) collect their distinct url/hash sets
-    and probe the indexes through pushed IN-filters (bloom row-group
-    skipping — the scan touches footers, not data pages, exactly like
-    incremental_dedup's probes), with the seen-sets collected back and
-    applied as literal NOT-IN filters; and all three writes (survivor
-    output + both index slices) overlap from one context-managed pool
-    with already-known row bounds, each keeping the caller's job group.
-    A 500-record batch runs 17 jobs, all in the caller's job group
-    (measured on ``local[4]`` with the ``_jobs_in_group`` helper of
-    ``tests/test_pipeline.py``)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
+    Job shape: the parse pins ONCE with its count riding the
+    checkpoint job; the quality gate folds into that same pinned frame
+    as a flag column, so BOTH accounting counts ride one more pinned
+    materialize as Observations. Each dedup stage probes its index
+    through two ``KeySet``s: the batch's keys, then the index keys
+    among them. A small batch (``n_in <= util.PUSHDOWN_LIMIT``)
+    collects each set with one shuffle-free job and probes through a
+    pushed IN-filter (bloom row-group skipping — the scan touches
+    footers, not data pages, exactly like incremental_dedup's probes),
+    then removes the seen keys by literal NOT-IN filters; a large one
+    pins both sets and joins through gated broadcasts. All three writes
+    (survivor output + both index slices) overlap with already-known
+    row bounds, each keeping the caller's job group. A batch against a
+    non-empty index runs 13 jobs, all in the caller's job group
+    (4- and 500-record batches alike, measured on ``local[4]`` with the
+    ``_jobs_in_group`` helper of ``tests/test_pipeline.py``)."""
     from pyspark.sql import Observation
-
-    from ais_data_pipeline_spark.checkpointing import materialize_counted
-    from ais_data_pipeline_spark.operators.util import gated_broadcast
 
     spark = batch_df.sparkSession
     url_idx = os.path.join(index_path, "urls")
@@ -249,7 +218,6 @@ def ingest_web_batch(
             F.col("url").isNotNull()
         )
     )  # micro-batch-sized; consumed 3+ times
-    small = n_in <= PUSHDOWN_LIMIT
 
     # URL stage: first fetch wins within the batch…
     first = docs.groupBy("url").agg(F.min("doc_key").alias("__keep"))
@@ -258,142 +226,101 @@ def ingest_web_batch(
         .filter(F.col("doc_key") == F.col("__keep"))
         .drop("__keep")
     )
-    # …then vs the index. Small batch: the distinct url set collects
-    # (≤ n_in values) and pushes into the index scan as an IN-filter —
-    # bloom row-group skipping keeps probe IO sub-linear in corpus
-    # size — and the seen-subset comes back as literal values. Large
-    # batch: the r18 broadcast semi-join shape (index never shuffles).
+    # …then vs the index: the batch's urls probe the index scan (an
+    # IN-filter for a small batch — bloom row-group skipping keeps probe
+    # IO sub-linear in corpus size — or a broadcast semi-join, the index
+    # never shuffling), and the urls found there drop.
+    batch_urls = KeySet.collect(docs, "url", n_in)
     idx_u = _read_index(spark, url_idx, URL_INDEX_SCHEMA, batch_id)
-    batch_urls = docs.select("url").distinct()
-    if small:
-        from ais_data_pipeline_spark.operators.util import in_values_cond
-
-        url_list = [r["url"] for r in batch_urls.collect()]
-        probed_u = idx_u.filter(in_values_cond("url", url_list))
-        seen_urls: "list | DataFrame" = [
-            r["url"] for r in probed_u.select("url").distinct().collect()
-        ]
-    else:
-        batch_urls = batch_urls.transform(materialize)
-        seen_urls = (
-            idx_u.join(gated_broadcast(batch_urls, n_in), "url", "leftsemi")
-            .select("url")
-            .distinct()
-            .transform(materialize)
-        )
-    s1 = _anti(s1, "url", seen_urls, n_in)
+    seen_urls = KeySet.collect(
+        batch_urls.semi(idx_u).select("url"), "url", len(batch_urls)
+    )
+    s1 = seen_urls.anti(s1)
     # the url index learns every url seen this batch that it did not
     # already know — INCLUDING urls whose doc was then dropped by
     # quality or body dedup (fetch dedup is about the fetch, not the
-    # content; refetches of a rejected page are still refetches).
-    # The write is independent of the hash stage below — overlap them.
-    new_urls = _anti(batch_urls, "url", seen_urls, n_in)
+    # content; refetches of a rejected page are still refetches)
+    new_urls = seen_urls.anti(batch_urls.frame())
 
-    # each pooled write is wrapped on its own (one property copy per
-    # write) so its thread keeps the caller's job group
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        url_write = pool.submit(
-            inheritable_thread_target(spark)(_write_slice),
+    # exact-body stage: same within-batch-then-index two-step on md5.
+    # The optional quality gate rides the SAME pinned frame as a flag
+    # column, so rows-after-url and rows-after-quality are two
+    # Observation aggregates on one materialize (r18 paid a second
+    # materialize + two count jobs for the split).
+    obs_s1 = Observation()
+    if quality_threshold is not None:
+        from ais_data_pipeline_spark.operators.text import quality_col
+
+        flagged = s1.withColumn(
+            "__q",
+            F.round(quality_col(F.col("text")), 5) >= quality_threshold,
+        ).withColumn(
+            "text_hash",
+            F.when(F.col("__q"), F.md5(F.col("text").cast("binary"))),
+        )
+        flagged = materialize(
+            flagged.observe(
+                obs_s1,
+                F.count(F.lit(1)).alias("n_url"),
+                F.count(F.when(F.col("__q"), 1)).alias("n_q"),
+            )
+        )
+        row = obs_s1.get
+        n_url, n_quality = int(row["n_url"]), int(row["n_q"])
+        hashed = flagged.filter("__q").drop("__q")
+    else:
+        hashed = materialize(
+            s1.withColumn(
+                "text_hash", F.md5(F.col("text").cast("binary"))
+            ).observe(obs_s1, F.count(F.lit(1)).alias("n_url"))
+        )
+        n_url = n_quality = int(obs_s1.get["n_url"])
+    keep_min = hashed.groupBy("text_hash").agg(
+        F.min("doc_key").alias("__keep")
+    )
+    s2 = (
+        hashed.join(gated_broadcast(keep_min, n_quality), "text_hash")
+        .filter(F.col("doc_key") == F.col("__keep"))
+        .drop("__keep")
+    )
+    batch_hashes = KeySet.collect(hashed, "text_hash", n_quality)
+    idx_h = _read_index(spark, hash_idx, HASH_INDEX_SCHEMA, batch_id)
+    seen_hashes = KeySet.collect(
+        batch_hashes.semi(idx_h).select("text_hash"),
+        "text_hash",
+        len(batch_hashes),
+    )
+    # survivors are consumed exactly once (the output write), over
+    # the PINNED hashed frame — the kept count rides the write
+    # itself via an Observation (r18, the quarantine-sink recipe).
+    # approx_rows uses the n_quality upper bound, which makes the
+    # identical single-file decision for any micro-batch-sized slice.
+    obs_kept = Observation(f"web_ingest_kept_{batch_id}")
+    survivors = seen_hashes.anti(s2).observe(
+        obs_kept, F.count(F.lit(1)).alias("n")
+    )
+    # the hash index learns the hashes of URL-stage survivors (kept or
+    # within-batch-exact-dropped — identical hash either way), so a
+    # later refetch of the same BODY under a new url still drops
+    new_hashes = seen_hashes.anti(batch_hashes.frame())
+    overlap(
+        spark,
+        lambda: _write_slice(
             new_urls, url_idx, batch_id, bloom_col="url",
             approx_rows=n_in,  # distinct urls ≤ parsed rows
-        )
-
-        # exact-body stage: same within-batch-then-index two-step on
-        # md5. The optional quality gate rides the SAME pinned frame
-        # as a flag column, so rows-after-url and rows-after-quality
-        # are two Observation aggregates on one materialize (r18 paid
-        # a second materialize + two count jobs for the split).
-        obs_s1 = Observation()
-        if quality_threshold is not None:
-            from ais_data_pipeline_spark.operators.text import quality_col
-
-            flagged = s1.withColumn(
-                "__q",
-                F.round(quality_col(F.col("text")), 5) >= quality_threshold,
-            ).withColumn(
-                "text_hash",
-                F.when(F.col("__q"), F.md5(F.col("text").cast("binary"))),
-            )
-            flagged = materialize(
-                flagged.observe(
-                    obs_s1,
-                    F.count(F.lit(1)).alias("n_url"),
-                    F.count(F.when(F.col("__q"), 1)).alias("n_q"),
-                )
-            )
-            row = obs_s1.get
-            n_url, n_quality = int(row["n_url"]), int(row["n_q"])
-            hashed = flagged.filter("__q").drop("__q")
-        else:
-            hashed = materialize(
-                s1.withColumn(
-                    "text_hash", F.md5(F.col("text").cast("binary"))
-                ).observe(obs_s1, F.count(F.lit(1)).alias("n_url"))
-            )
-            n_url = n_quality = int(obs_s1.get["n_url"])
-        keep_min = hashed.groupBy("text_hash").agg(
-            F.min("doc_key").alias("__keep")
-        )
-        s2 = (
-            hashed.join(gated_broadcast(keep_min, n_quality), "text_hash")
-            .filter(F.col("doc_key") == F.col("__keep"))
-            .drop("__keep")
-        )
-        idx_h = _read_index(spark, hash_idx, HASH_INDEX_SCHEMA, batch_id)
-        batch_hashes = hashed.select("text_hash").distinct()
-        if small:
-            from ais_data_pipeline_spark.operators.util import in_values_cond
-
-            hash_list = [r["text_hash"] for r in batch_hashes.collect()]
-            probed_h = idx_h.filter(in_values_cond("text_hash", hash_list))
-            seen_hashes: "list | DataFrame" = [
-                r["text_hash"]
-                for r in probed_h.select("text_hash").distinct().collect()
-            ]
-        else:
-            batch_hashes = batch_hashes.transform(materialize)
-            seen_hashes = (
-                idx_h.join(
-                    gated_broadcast(batch_hashes, n_quality),
-                    "text_hash",
-                    "leftsemi",
-                )
-                .select("text_hash")
-                .distinct()
-                .transform(materialize)
-            )
-        # survivors are consumed exactly once (the output write), over
-        # the PINNED hashed frame — the kept count rides the write
-        # itself via an Observation (r18, the quarantine-sink recipe).
-        # approx_rows uses the n_quality upper bound, which makes the
-        # identical single-file decision for any micro-batch-sized
-        # slice.
-        obs_kept = Observation(f"web_ingest_kept_{batch_id}")
-        survivors = _anti(s2, "text_hash", seen_hashes, n_quality).observe(
-            obs_kept, F.count(F.lit(1)).alias("n")
-        )
-
-        # the hash index learns the hashes of URL-stage survivors
-        # (kept or within-batch-exact-dropped — identical hash either
-        # way), so a later refetch of the same BODY under a new url
-        # still drops
-        new_hashes = _anti(batch_hashes, "text_hash", seen_hashes, n_quality)
-        hash_write = pool.submit(
-            inheritable_thread_target(spark)(_write_slice),
-            new_hashes, hash_idx, batch_id,
-            bloom_col="text_hash",
+        ),
+        lambda: _write_slice(
+            new_hashes, hash_idx, batch_id, bloom_col="text_hash",
             approx_rows=n_quality,  # new hashes ≤ gated rows
-        )
-        _write_slice(
+        ),
+        lambda: _write_slice(
             survivors.select("doc_key", "url", "text"),
             out_path,
             batch_id,
             approx_rows=n_quality,
-        )
-        n_kept = int(obs_kept.get["n"])
-        url_write.result()
-        hash_write.result()
-    return n_in, n_url, n_quality, n_kept
+        ),
+    )
+    return n_in, n_url, n_quality, int(obs_kept.get["n"])
 
 
 def run_web_ingest(

@@ -258,6 +258,46 @@ def test_materialize_counted_rides_the_checkpoint_job(spark):
     assert empty.count() == 0
 
 
+@pytest.mark.parametrize("lim", [10_000, -1], ids=["small", "large"])
+def test_key_set_both_regimes(spark, monkeypatch, lim):
+    """``KeySet`` gives the same answers whether it holds driver values
+    (a bound at most ``PUSHDOWN_LIMIT``) or a pinned frame: duplicate
+    and NULL keys leave the set, ``anti`` keeps NULL keys, quote and
+    backslash strings round-trip, and an empty set keeps everything
+    in ``anti`` and nothing in ``semi``."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.operators import util
+    from ais_data_pipeline_spark.operators.util import KeySet
+
+    monkeypatch.setattr(util, "PUSHDOWN_LIMIT", lim)
+    odd = ["it's", "back\\slash", "both'\\"]
+    keys = local_df(
+        spark,
+        [(k,) for k in odd + ["a", "a", None, "b"]],
+        "k string",
+    )
+    rows = local_df(
+        spark,
+        [(i, k) for i, k in enumerate(odd + ["a", "b", "c", None])],
+        "i int, k string",
+    )
+    ids = lambda df: sorted(r["i"] for r in df.collect())  # noqa: E731
+
+    ks = KeySet.collect(keys, "k", 7)
+    assert len(ks) == 5
+    assert sorted(r["k"] for r in ks.frame().collect()) == sorted(odd + ["a", "b"])
+    assert ids(ks.semi(rows)) == [0, 1, 2, 3, 4]
+    assert ids(ks.anti(rows)) == [5, 6]  # "c" and the NULL key
+    renamed = rows.withColumnRenamed("k", "other")
+    assert ids(ks.anti(renamed, "other")) == [5, 6]
+
+    empty = KeySet.collect(keys.filter(F.lit(False)), "k", 0)
+    assert len(empty) == 0
+    assert empty.frame().collect() == []
+    assert ids(empty.semi(rows)) == []
+    assert ids(empty.anti(rows)) == list(range(7))
+
+
 def test_simhash_properties(spark):
     from ais_data_pipeline_spark.operators.dedup import (
         simhash_fingerprints,

@@ -419,16 +419,19 @@ def _sorted_rows(df):
     return sorted(rows, key=repr)
 
 
-def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path):
-    """r19: batches at or under ``pushdown_limit`` collect their probe
-    and drop sets and filter by literal IN / NOT-IN values; larger
+def test_incremental_dedup_large_batch_regime_equivalent(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """r19: batches at or under ``util.PUSHDOWN_LIMIT`` collect their
+    probe and drop sets and filter by literal IN / NOT-IN values; larger
     batches probe through broadcast joins and pin a distinct drop set.
-    Force the LARGE regime (pushdown_limit=-1: no batch, not even an
+    Force the LARGE regime (PUSHDOWN_LIMIT=-1: no batch, not even an
     empty one, is small) on the same batches, with and without a
     hot-bucket cap — kept rows, accounting, and every index table must
     be bit-identical. Under the cap the small regime's collected bucket
     set is a superset of the hot-pruned band rows, which must not
     change what the composite-key join matches."""
+    from ais_data_pipeline_spark.operators import util
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
@@ -439,13 +442,13 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
     for cap in (None, 3):
         results = {}
         for tag, lim in (("small", 10_000), ("large", -1)):
+            monkeypatch.setattr(util, "PUSHDOWN_LIMIT", lim)
             base = str(tmp_path / f"{tag}-{cap}")
             index, out = base + "/idx", base + "/out"
             build_dedup_index(hist, index)
             counts = [
                 dedup_and_append_batch(
-                    b, k, index, out, threshold=0.5, pushdown_limit=lim,
-                    max_bucket_size=cap,
+                    b, k, index, out, threshold=0.5, max_bucket_size=cap,
                 )
                 for k, b in enumerate(batches)
             ]
@@ -478,12 +481,14 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
     make it over-estimate, and a NULL id (never removable by the
     anti-join) must not make it under-estimate — an under-sized bloom
     filter would raise the false-positive rate above ``BLOOM_FPP``."""
+    from ais_data_pipeline_spark.operators import util
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming import incremental_dedup as mod
 
     hist, batches = _regime_batches(spark, read_table(spark, sf_dir, "documents"))
     write_slice = mod._write_slice
     for tag, lim in (("small", 10_000), ("large", -1)):
+        monkeypatch.setattr(util, "PUSHDOWN_LIMIT", lim)
         base = str(tmp_path / tag)
         index, out = base + "/idx", base + "/out"
         mod.build_dedup_index(hist, index)
@@ -497,7 +502,7 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
 
         monkeypatch.setattr(mod, "_write_slice", recording)
         for k, b in enumerate(batches):
-            mod.dedup_and_append_batch(b, k, index, out, threshold=0.5, pushdown_limit=lim)
+            mod.dedup_and_append_batch(b, k, index, out, threshold=0.5)
         monkeypatch.setattr(mod, "_write_slice", write_slice)
         assert len(written) == 4 * len(batches), tag
         assert all(est >= n for _, _, est, n in written), (tag, written)
@@ -521,7 +526,7 @@ def _scan_output_rows(df) -> int:
 def test_incremental_dedup_bloom_filters_sized_and_skip(spark, sf_dir, tmp_path):
     """Each index slice's bloom filter is sized from the writer's row
     bound at ``BLOOM_FPP`` instead of parquet-mr's default 1 MiB
-    bitset, and still lets a ``pushdown_limit``-sized IN-list skip the
+    bitset, and still lets a ``PUSHDOWN_LIMIT``-sized IN-list skip the
     slices holding none of its values.
 
     (a) In every docs and buckets slice file, the bytes that are
@@ -634,10 +639,22 @@ def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path
     assert grouped == list(range(grouped[0], grouped[-1] + 1))
 
 
+#: jobs of one ``ingest_web_batch`` against a non-empty index, no
+#: quality gate: the parse materialize (1), the url key-set collect and
+#: the seen-url probe (2), the hash-stage materialize (3: the url
+#: stage's first-fetch aggregate and its broadcast are their own jobs),
+#: the hash key-set collect and the seen-hash probe (2), and the three
+#: overlapped writes (5: the same two jobs for the body stage's
+#: keep-min join).
+WEB_INGEST_BATCH_MAX_JOBS = 13
+
+
 def test_web_ingest_jobs_stay_in_caller_job_group(spark, tmp_path):
     """Every job of one ``ingest_web_batch`` call, its url and hash
     index writes on the thread pool included, carries the caller's job
-    group."""
+    group. A second batch, probing a non-empty index, stays under the
+    job ceiling: it catches the key-set probes growing back their
+    distinct() shuffles."""
     from ais_data_pipeline_spark.sources.warc import encode_warc_records
     from ais_data_pipeline_spark.streaming.web_ingest import ingest_web_batch
 
@@ -656,13 +673,24 @@ def test_web_ingest_jobs_stay_in_caller_job_group(spark, tmp_path):
         rec(2, "http://e.com/a", "refetch of a"),
         rec(3, "http://e.com/c", "alpha body one"),
     ]))
-    batch = spark.read.format("binaryFile").load(str(landing)).select("path", "content")
+    (landing / "b2.warc.gz").write_bytes(encode_warc_records([
+        rec(0, "http://e.com/b", "new body"),
+        rec(1, "http://e.com/d", "beta body two"),
+        rec(2, "http://e.com/e", "epsilon fresh"),
+    ]))
     index, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    grouped, stray = _jobs_in_group(
-        spark, lambda: ingest_web_batch(batch, 0, index, out)
-    )
-    assert stray == set()
-    assert len(grouped) >= 3  # the three writes
+    for k, name in enumerate(("b1.warc.gz", "b2.warc.gz")):
+        batch = (
+            spark.read.format("binaryFile")
+            .load(str(landing / name))
+            .select("path", "content")
+        )
+        grouped, stray = _jobs_in_group(
+            spark, lambda: ingest_web_batch(batch, k, index, out)
+        )
+        assert stray == set()
+        assert len(grouped) >= 3  # the three writes
+    assert len(grouped) <= WEB_INGEST_BATCH_MAX_JOBS, grouped
 
 
 def test_curation_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
@@ -1463,6 +1491,32 @@ def test_incremental_embedding_dedup_semantics_and_replay(spark, tmp_path):
     ).write.mode("append").parquet(landing)
     drain(base + "/ck1b")
     assert sorted(r["vec_id"] for r in spark.read.parquet(out).collect()) == [11, 21]
+
+
+def test_incremental_embedding_probe_through_uri_writes_no_local_dir(
+    spark, tmp_path, monkeypatch
+):
+    """An index addressed by URI (``file://``, ``s3a://``) is probed
+    without creating anything under the working directory: a plain
+    ``os.makedirs`` on the URI made a stray relative ``file:``
+    directory there."""
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_embedding_dedup_index,
+        dedup_embedding_batch_against_index,
+    )
+
+    schema = "vec_id bigint, embedding array<double>"
+    index = "file://" + str(tmp_path / "idx")
+    build_embedding_dedup_index(
+        spark.createDataFrame([(0, [1.0, 0.0, 0.0, 0.0])], schema), index
+    )
+    monkeypatch.chdir(tmp_path)
+    batch = spark.createDataFrame(
+        [(10, [2.0, 0.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0, 0.0])], schema
+    )
+    kept = dedup_embedding_batch_against_index(batch, index)
+    assert [r["vec_id"] for r in kept.collect()] == [11]
+    assert not (tmp_path / "file:").exists()
 
 
 def test_curation_plan_matches_registry_query(spark, sf_dir, tmp_path):
@@ -3267,28 +3321,101 @@ def test_web_ingest_quality_accounting_split(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
-    # r19: small batches collect their url/hash sets and probe the
-    # indexes through pushed IN-filters with literal NOT-IN anti
-    # filters; batches past PUSHDOWN_LIMIT keep the r18 broadcast
-    # semi-join shape. Force the LARGE path on the same fixture and
-    # the results must be bit-identical.
-    from ais_data_pipeline_spark.streaming import web_ingest as wi
 
-    prev_lim = wi.PUSHDOWN_LIMIT
-    wi.PUSHDOWN_LIMIT = -1
-    try:
-        index3, out3 = str(tmp_path / "idx3"), str(tmp_path / "out3")
-        counts3 = ingest_web_batch(
-            batch, 0, index3, out3, quality_threshold=0.5
+def test_web_ingest_large_batch_regime_equivalent(spark, tmp_path, monkeypatch):
+    """Batches at or under ``util.PUSHDOWN_LIMIT`` collect their url
+    and hash key sets and probe the indexes through pushed IN-filters
+    with literal NOT-IN anti filters; larger batches pin both sets and
+    probe through broadcast semi-joins. Force the LARGE regime
+    (PUSHDOWN_LIMIT=-1: no batch, not even an empty one, is small) on
+    the same batch sequence under the quality gate — counts, the output
+    and both index tables must be identical. The batches carry urls
+    with a quote and a backslash, a url refetch within and across
+    batches, a body copy under a new url within and across batches, a
+    quality reject, a record without a target URI (NULL url, filtered)
+    and a shard without conversion records (an empty batch)."""
+    from ais_data_pipeline_spark.operators import util
+    from ais_data_pipeline_spark.sources.warc import encode_warc_records
+    from ais_data_pipeline_spark.streaming.web_ingest import (
+        HASH_INDEX_SCHEMA,
+        OUT_SCHEMA,
+        URL_INDEX_SCHEMA,
+        ingest_web_batch,
+    )
+
+    good = (
+        "the cat sat on the mat and it is that for a while. "
+        "We think that the story of the house is good, and the "
+        "end of the day is near for all of the people in it."
+    )
+
+    def rec(i, uri, text, warc_type="conversion"):
+        return dict(
+            warc_type=warc_type, record_id=f"<urn:uuid:{i:04x}>",
+            warc_date="2024-01-01T00:00:00Z", target_uri=uri,
+            content_type="text/plain", payload=text.encode(),
         )
-        assert counts3 == counts
-        kept3 = {
-            (r["doc_key"], r["url"], r["text"])
-            for r in spark.read.schema(OUT_SCHEMA).parquet(out3).collect()
-        }
-        assert kept3 == kept
-    finally:
-        wi.PUSHDOWN_LIMIT = prev_lim
+
+    quote, backslash = "http://e.com/it's", "http://e.com/back\\slash"
+    shards = [
+        [
+            rec(0, quote, f"{good} quote page."),
+            rec(1, backslash, f"{good} backslash page."),
+            rec(2, "http://e.com/a", f"{good} page a."),
+            rec(3, "http://e.com/a", f"{good} refetch of a."),  # url dup
+            rec(4, "http://e.com/copy", f"{good} page a."),      # body dup
+            rec(5, None, f"{good} no target."),                  # NULL url
+            rec(6, "http://e.com/junk", "zz " * 40),             # quality
+        ],
+        [
+            rec(0, quote, f"{good} quote page, refetched."),     # index url
+            rec(1, backslash, f"{good} new body."),              # index url
+            rec(2, "http://e.com/new", f"{good} quote page."),   # index body
+            rec(3, "http://e.com/fresh", f"{good} fresh page."),
+            rec(4, "http://e.com/junk", f"{good} junk, fixed."), # index url
+        ],
+        [rec(0, None, "software: x", warc_type="warcinfo")],     # empty
+    ]
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for k, recs in enumerate(shards):
+        (landing / f"b{k}.warc.gz").write_bytes(encode_warc_records(recs))
+
+    results = {}
+    for tag, lim in (("small", 10_000), ("large", -1)):
+        monkeypatch.setattr(util, "PUSHDOWN_LIMIT", lim)
+        index, out = str(tmp_path / tag / "idx"), str(tmp_path / tag / "out")
+        counts = [
+            ingest_web_batch(
+                spark.read.format("binaryFile")
+                .load(str(landing / f"b{k}.warc.gz"))
+                .select("path", "content"),
+                k, index, out, quality_threshold=0.5,
+            )
+            for k in range(len(shards))
+        ]
+        tables = [
+            _sorted_rows(spark.read.schema(schema).parquet(path))
+            for schema, path in (
+                (OUT_SCHEMA, out),
+                (URL_INDEX_SCHEMA, index + "/urls"),
+                (HASH_INDEX_SCHEMA, index + "/hashes"),
+            )
+        ]
+        results[tag] = (counts, tables)
+    assert results["small"] == results["large"]
+    counts, (kept, urls, hashes) = results["small"]
+    assert counts == [(6, 5, 4, 3), (5, 2, 2, 1), (0, 0, 0, 0)]
+    assert sorted((r[1], r[3]) for r in kept) == [
+        ("http://e.com/a", 0), (backslash, 0), ("http://e.com/fresh", 1),
+        (quote, 0),
+    ]
+    assert sorted(urls) == sorted([
+        (quote, 0), (backslash, 0), ("http://e.com/a", 0),
+        ("http://e.com/copy", 0), ("http://e.com/junk", 0),
+        ("http://e.com/new", 1), ("http://e.com/fresh", 1),
+    ])
+    assert sorted(b for _, b in hashes) == [0, 0, 0, 1]
 
 
 def test_web_ingest_raw_warc_mode(spark, tmp_path):

@@ -57,7 +57,17 @@ MAX_FILES = int(os.environ.get("INCDEDUP_LONGRUN_MAX_FILES", 256))
 
 
 def _index_files(index_path: str) -> int:
-    return len(glob.glob(os.path.join(index_path, "**/*.parquet"), recursive=True))
+    """Parquet files of the live generation only: the superseded one a
+    compaction keeps for one cycle (``keep_prev``) is not read by any
+    probe."""
+    from ais_data_pipeline_spark import fsutil
+
+    root = fsutil.current_root(index_path)
+    return len(glob.glob(os.path.join(root, "**/*.parquet"), recursive=True))
+
+
+def _mean(xs: list[float]) -> float | None:
+    return round(sum(xs) / len(xs), 2) if xs else None
 
 
 def main() -> None:
@@ -76,7 +86,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     pool = SEED_DOCS + N_BATCHES * BATCH_DOCS
-    corpus_path = f"/tmp/ais_incdedup_longrun_corpus_{pool}"
+    corpus_path = os.path.join(
+        tempfile.gettempdir(), f"ais_incdedup_longrun_corpus_{pool}"
+    )
     if not glob.glob(os.path.join(corpus_path, "*.parquet")):
         generate_corpus(spark, corpus_path, pool)
     docs = spark.read.parquet(corpus_path)
@@ -157,8 +169,8 @@ def main() -> None:
                 },
                 "final_accretion": dedup_index_accretion(idx),
                 "index_build_sec": build_sec,
-                "probe_sec_first10_mean": round(sum(probe_secs[:10]) / 10, 2),
-                "probe_sec_last10_mean": round(sum(probe_secs[-10:]) / 10, 2),
+                "probe_sec_first10_mean": _mean(probe_secs[:10]),
+                "probe_sec_last10_mean": _mean(probe_secs[-10:]),
                 "max_index_files": max(x["index_files"] for x in batches),
                 "files_after_final_compaction": compactions[-1]["index_files"]
                 if compactions

@@ -8,7 +8,7 @@ fixed large index. This probe builds a 500k-doc index once, then times
 (half exact copies of history → exercise the drop path, half fresh →
 exercise the survive path) and reports per-batch seconds and MiB/s.
 
-Batch sizes straddle ``pushdown_limit`` (10k) deliberately: 1k/10k use
+Batch sizes straddle ``util.PUSHDOWN_LIMIT`` (10k) deliberately: 1k/10k use
 the literal IN-filter + bloom row-group-skip path, 100k flips to the
 broadcast-semi-join path — the probe prices both probe strategies.
 
