@@ -18,9 +18,11 @@ Drop rule (deterministic, oracle-expressible — no iteration):
   rule — kept or dropped; aggressive on chains, which is the standard
   greedy LSH-dedup behavior, and exactly keep-min on exact-dup groups).
 - near-dup candidates come from shared LSH band buckets and are
-  verified by exact Jaccard over stored shingle hashes — identical
+  verified by exact Jaccard over word-3-gram shingle hashes — identical
   parameters to ``minhash_near_dup``, whose brute-force oracle proves
-  banding recall on this corpus.
+  banding recall on this corpus. The batch's shingles come from its
+  pinned features; an index doc's shingles are rebuilt from its stored
+  text (with the probe's ``shingle_n``), and only for candidate pairs.
 
 Scale shape: the index side is never shuffled — the batch's features,
 band rows and candidate pairs are the BROADCAST side, so every index
@@ -33,18 +35,22 @@ idempotent (the same checkpoint+idempotence recipe as
 ``ingest.run_upsert_sink``).
 
 Index layout: two tables plus a statistic, each partitioned by
-``src_batch`` (history = -1, one slice per micro-batch):
-- ``docs`` (doc, text_hash, shingles): one row per indexed doc, with a
+``src_batch`` (history = -1, one slice per micro-batch), and a
+``_layout`` marker file:
+- ``docs`` (doc, text_hash, text): one row per indexed doc, with a
   parquet bloom filter on ``text_hash``. The exact probe projects
-  ``text_hash`` and the near-dup verify projects ``shingles`` from the
+  ``text_hash`` and the near-dup verify projects ``text`` from the
   same files, so column pruning keeps each leg's IO to its own column.
+  The text is stored rather than its shingle hashes: zstd compresses
+  text, while random 64-bit hashes do not compress at all.
 - ``buckets`` (doc, band, bucket): the MinHash LSH band rows, bloom
   filter on ``bucket``.
 - ``bucket_stats`` (band, bucket, n): per-slice hot-bucket counts read
   by the ``max_bucket_size`` guard.
-Indexes written in the earlier layout (separate ``hashes`` and
-``shingles`` tables) are not read; rebuild them with
-``build_dedup_index``.
+Indexes written in an earlier layout (a ``docs`` table of shingle
+hashes, or separate ``hashes`` and ``shingles`` tables) carry no
+marker: probes, appends and compaction refuse them with an error that
+says to rebuild them with ``build_dedup_index``.
 """
 
 from __future__ import annotations
@@ -68,11 +74,10 @@ from ais_data_pipeline_spark.operators.util import KeySet, gated_broadcast, in_v
 
 # explicit read schemas: index partitions may be legitimately empty
 # (a batch where nothing survived), and schema inference fails there
-_DOCS_SCHEMA = (
-    "doc bigint, text_hash string, shingles array<bigint>, src_batch bigint"
-)
+_DOCS_SCHEMA = "doc bigint, text_hash string, text string, src_batch bigint"
 _BUCKETS_SCHEMA = "doc bigint, band int, bucket bigint, src_batch bigint"
 _STATS_SCHEMA = "band int, bucket bigint, n bigint, src_batch bigint"
+_TABLES = ("docs", "buckets", "bucket_stats")
 
 HISTORY_BATCH = -1  # src_batch value for the bootstrap corpus
 
@@ -97,20 +102,58 @@ def _ensure_local_dir(path: str) -> None:
         os.makedirs(path, exist_ok=True)
 
 
+#: marker file at the root of every index generation, naming the docs
+#: table's layout. ``build_dedup_index`` and the first append to an
+#: empty index write it; compaction carries it into the new generation.
+LAYOUT_MARKER = "_layout"
+DOCS_LAYOUT = "docs(doc, text_hash, text)"
+
+
+def _check_layout(root: str, io: "fsutil.FsIO | None" = None) -> bool:
+    """True when the index generation at ``root`` carries the current
+    layout marker, False when it is empty (nothing to misread). Raises
+    when it holds tables of an earlier layout: read through
+    ``_DOCS_SCHEMA``, their docs have NULL text, so near-dup
+    verification against the index would silently never match. One
+    small-file read per call; only an unmarked root is listed."""
+    io = io or fsutil.io_for(root)
+    marker = io.read_text(os.path.join(root, LAYOUT_MARKER))
+    if marker is not None and marker.strip() == DOCS_LAYOUT:
+        return True
+    if marker is None and not any(
+        rel.endswith(".parquet") for rel, _ in fsutil.iter_files(root, io.lister)
+    ):
+        return False
+    raise ValueError(
+        f"dedup index at {root} was written in an earlier layout (its "
+        f"docs table stores no text, so near-duplicate verification "
+        f"against it would never match); rebuild it with build_dedup_index"
+    )
+
+
+def _write_layout(root: str, io: "fsutil.FsIO | None" = None) -> None:
+    io = io or fsutil.io_for(root)
+    io.write_text(os.path.join(root, LAYOUT_MARKER), DOCS_LAYOUT)
+
+
 def _features(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
-    """(doc, text_hash, shingles): the per-doc dedup features — md5
-    content hash + distinct word-n-gram xxhash64 shingles. One
-    projection, no shuffle."""
+    """(doc, text_hash, text, shingles): the per-doc dedup features —
+    md5 content hash, the text itself (what the index's docs table
+    stores) and distinct word-n-gram xxhash64 shingles. Two projections
+    (``shingle_hashes_from_tokens`` needs its tokens as a plain column),
+    no shuffle."""
     toked = df.select(
         F.col(id_col).alias("doc"),
         F.md5(F.col(text_col).cast("binary")).alias("text_hash"),
+        F.col(text_col).cast("string").alias("text"),
         tokens_lower(F.col(text_col)).alias("__tok"),
     )
     return toked.select(
         "doc",
         "text_hash",
+        "text",
         shingle_hashes_from_tokens(F.col("__tok"), shingle_n).alias("shingles"),
     )
 
@@ -119,7 +162,8 @@ def _features(
 #: batch; above it the repartition(1) funnel is the one-task-shuffle
 #: shape that cannot scale (the round-9 audit caught the bootstrap
 #: funneling the whole shingle store through it). 2M rows of (id,
-#: hash/shingles) is tens of MiB — well inside one writer task.
+#: hash, text) is a few hundred MiB of typical web text — still one
+#: writer task's work.
 SINGLE_FILE_MAX_ROWS = 2_000_000
 
 #: false-positive rate each slice's bloom filter is sized for (see
@@ -231,18 +275,25 @@ def build_dedup_index(
 ) -> None:
     """Bootstrap the index from the historical corpus: the tables of
     the layout in the module docstring under ``index_path`` — ``docs``
-    (doc, text_hash, shingles), ``buckets`` (doc, band, bucket) and
+    (doc, text_hash, text), ``buckets`` (doc, band, bucket) and
     ``bucket_stats`` — each partitioned by ``src_batch`` (history =
-    -1). The shingles are the candidate-verification store; at 100 TB
-    they are the index's dominant weight (~tokens-per-doc longs), still
-    a fraction of the text they replace in the probe path. An index in
-    the earlier layout (separate ``hashes`` and ``shingles`` tables) is
-    rebuilt by this call."""
+    -1), plus the layout marker. The stored text is the
+    candidate-verification store: a probe re-shingles it for candidate
+    pairs only. Compressed, it weighs about as much as the band rows,
+    where the shingle hashes it replaced weighed three times as much
+    (they are random longs and do not compress). Rebuilding replaces
+    whatever the path held, an index of an earlier layout included."""
     # a (re)build writes the flat generation-0 layout: drop any
     # pointer a prior compaction published, or readers would resolve
-    # to a generation this build never writes (r14)
-    fsutil.reset_generations(index_path)
+    # to a generation this build never writes (r14), and any flat
+    # table or marker of an earlier build, whose batch slices the
+    # history overwrite below would otherwise leave behind
+    io = fsutil.io_for(index_path)
+    fsutil.reset_generations(index_path, io)
     root = fsutil.generation_root(index_path, 0)
+    for name in (*_TABLES, LAYOUT_MARKER):
+        io.remove(os.path.join(root, name))
+    _write_layout(root, io)
     # read twice (docs write + band rows): pin once, or each read
     # recomputes md5 + shingle split over the whole history. The count
     # rides the pin and bounds the bloom filters of both slices.
@@ -262,7 +313,8 @@ def build_dedup_index(
     overlap(
         docs.sparkSession,
         lambda: _write_slice(
-            feats, os.path.join(root, "docs"), HISTORY_BATCH,
+            feats.select("doc", "text_hash", "text"),
+            os.path.join(root, "docs"), HISTORY_BATCH,
             bloom_col="text_hash", single_file=False, approx_rows=n_hist,
         ),
         lambda: _write_slice(
@@ -340,14 +392,19 @@ def _near_drops(
     threshold: float,
 ) -> DataFrame:
     """Batch docs whose exact Jaccard vs a candidate clears the
-    threshold — the verify half of LSH dedup, on stored shingle
-    hashes (array_intersect on longs, same as minhash_near_dup). Every
+    threshold — the verify half of LSH dedup, on shingle hashes
+    (array_intersect on longs, same as minhash_near_dup): the batch's
+    pinned ones, and an index candidate's as rebuilt from its text. Every
     verify leg broadcasts the same ``batch_sh``, so the legs share one
-    exchange. Duplicate pairs give duplicate docs; callers dedupe."""
+    exchange. Duplicate pairs give duplicate docs; callers dedupe.
+    Two docs too short to shingle share every band bucket and have an
+    empty union: their Jaccard is NULL, never a drop, and never a
+    division-by-zero error under ANSI mode."""
     n_inter = F.size(F.array_intersect("shingles", "other_shingles"))
-    jaccard = n_inter.cast("double") / (
-        F.size("shingles") + F.size("other_shingles") - n_inter
-    ).cast("double")
+    jaccard = F.try_divide(
+        n_inter.cast("double"),
+        (F.size("shingles") + F.size("other_shingles") - n_inter).cast("double"),
+    )
     return (
         pairs.join(F.broadcast(batch_sh), "doc")
         .filter(jaccard >= threshold)
@@ -431,7 +488,7 @@ def _dedup_batch_parts(
     shuffle: the index tables stream past broadcasts of the batch
     side, the legs share one band-row broadcast and one (doc,
     shingles) verify broadcast (ReuseExchange), and AQE runs each of
-    its four or five exchanges as one job. The caller runs the drop
+    its four exchanges as one job. The caller runs the drop
     set: ``dedup_and_append_batch`` through one ``KeySet.collect`` (a
     literal drop list for a small batch, a pinned distinct drop set
     for a large one), ``dedup_batch_against_index`` as a lazy
@@ -453,7 +510,8 @@ def _dedup_batch_parts(
     # FOUND replay-forever poison pill): the probe reads carry explicit
     # schemas, so pre-created empty roots read as empty tables
     root = _index_root(index_path)
-    for t in ("docs", "buckets", "bucket_stats"):
+    _check_layout(root)
+    for t in _TABLES:
         _ensure_local_dir(os.path.join(root, t))
     # (1) exact, within batch: predecessor rule == keep min id per
     # hash. Computed FIRST: the hot-bucket guard below must count band
@@ -498,15 +556,21 @@ def _dedup_batch_parts(
         .transform(materialize)
     )
     n_in = int(obs_in.get["n"])
-    feats = enriched  # (doc, text_hash, shingles) + batch-derived cols
+    feats = enriched  # (doc, text_hash, text, shingles) + batch-derived cols
     exact_w = enriched.filter("__xw").select("doc")
 
     # band rows are a NARROW explode of the pinned per-row array —
     # exact-dropped docs carry a NULL array, so explode skips them
-    # (the old anti-join-exact_w semantics; r19)
+    # (the old anti-join-exact_w semantics; r19). They carry the doc's
+    # text_hash for the index leg's exact-pair skip (see (4)).
     bands_b = enriched.select(
-        "doc", F.explode("__bands").alias("__bb")
-    ).select("doc", F.col("__bb.band").alias("band"), F.col("__bb.bucket").alias("bucket"))
+        "doc", "text_hash", F.explode("__bands").alias("__bb")
+    ).select(
+        "doc",
+        "text_hash",
+        F.col("__bb.band").alias("band"),
+        F.col("__bb.bucket").alias("bucket"),
+    )
     if max_bucket_size is not None:
         # quadratic-blowup guard: prune band rows in buckets hot either
         # WITHIN this batch (exact survivors only, see above) or across
@@ -548,6 +612,12 @@ def _dedup_batch_parts(
         batch_hashes = sorted(hashes)
         if len(buckets) <= util.PUSHDOWN_LIMIT:
             batch_buckets = sorted(buckets)
+            # This filter removes no row. The index leg's join would
+            # infer it onto its band-row broadcast alone from the
+            # IN-filtered bucket scan; stated here, both band-row
+            # broadcasts carry it and stay one exchange (one job fewer
+            # per batch).
+            bands_b = bands_b.filter(in_values_cond("bucket", batch_buckets))
 
     def index_scan(table: str, schema: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(os.path.join(root, table))
@@ -560,7 +630,8 @@ def _dedup_batch_parts(
     # semi- or anti-join does not care about duplicate keys, so the
     # drop set is deduplicated once, at the end. The legs share their
     # broadcasts (same bands_b relation, same (doc, shingles) verify
-    # side), so Spark's ReuseExchange plans about four exchanges.
+    # side), so Spark's ReuseExchange plans four exchanges: band rows,
+    # verify side, batch hashes, index candidate pairs.
     batch_sh = feats.select("doc", "shingles")
 
     # (2) exact, vs index: the docs scan projected to text_hash
@@ -587,7 +658,14 @@ def _dedup_batch_parts(
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket")),
         )
-        .filter(F.col("a.doc") < F.col("b.doc"))
+        # the text_hash test never removes a pair (exact copies carry
+        # no band rows, and NULL text never verifies); it keeps this
+        # broadcast on the same columns as the index leg's, so the two
+        # share one exchange
+        .filter(
+            (F.col("a.doc") < F.col("b.doc"))
+            & ~F.col("a.text_hash").eqNullSafe(F.col("b.text_hash"))
+        )
         .select(F.col("a.doc").alias("doc"), F.col("b.doc").alias("__later"))
     )
     # the smaller id's shingles become the "other" side; the rename
@@ -604,20 +682,35 @@ def _dedup_batch_parts(
     # (4) near-dup, vs index: the bucket table scan (IN-filtered on the
     # 64-bit bucket alone when small — the composite (band, bucket)
     # isn't IN-pushable) against the broadcast batch band rows, then
-    # the docs scan projected to shingles against the broadcast
-    # candidate pairs
+    # the docs scan projected to text against the broadcast candidate
+    # pairs. A pair whose two texts hash equal is skipped before any
+    # shingling: its batch doc is already an exact_x drop (an exact
+    # copy matches in every band, so these are most candidate rows),
+    # and NULL text never near-drops. The remaining index texts are
+    # shingled in projections BELOW the verify join: above a join the
+    # Jaccard filter is pushed into, the split would be inlined into
+    # the shingling lambda and re-run per token.
     hist_buckets = index_scan("buckets", _BUCKETS_SCHEMA)
     if batch_buckets is not None:
         hist_buckets = hist_buckets.filter(in_values_cond("bucket", batch_buckets))
     cands_x = (
         hist_buckets.withColumnRenamed("doc", "other")
         .join(F.broadcast(bands_b), ["band", "bucket"])
-        .select("doc", "other")
+        .select("doc", "other", "text_hash")
     )
     near_x = _near_drops(
-        hist_docs.select(F.col("doc").alias("other"), F.col("shingles").alias("other_shingles"))
+        hist_docs.select(
+            F.col("doc").alias("other"), F.col("text_hash").alias("__oh"), "text"
+        )
         .join(F.broadcast(cands_x), "other")
-        .select("doc", "other_shingles"),
+        .filter(~F.col("text_hash").eqNullSafe(F.col("__oh")))
+        .select("doc", tokens_lower(F.col("text")).alias("__tok"))
+        .select(
+            "doc",
+            shingle_hashes_from_tokens(F.col("__tok"), shingle_n).alias(
+                "other_shingles"
+            ),
+        ),
         batch_sh,
         threshold,
     )
@@ -862,7 +955,9 @@ def compact_dedup_index(
     every slice, so periodic compaction keeps probe latency flat in
     BATCH COUNT the way the broadcast design keeps it flat in corpus
     size. bucket_stats rows merge by summing per-(band, bucket) — the
-    statistic is mergeable by construction.
+    statistic is mergeable by construction. The layout marker is
+    checked on entry (an earlier layout raises) and carried into the
+    new generation.
 
     Commit protocol (round 14 — object-store-safe, zero renames of
     data directories): the consolidated tables stage under the NEXT
@@ -886,13 +981,16 @@ def compact_dedup_index(
         ("buckets", _BUCKETS_SCHEMA, None, "bucket"),
         ("bucket_stats", _STATS_SCHEMA, "sum", None),
     ]
-    names = [name for name, _, _, _ in specs]
+    names = [name for name, _, _, _ in specs] + [LAYOUT_MARKER]
     cur = fsutil.current_generation(index_path, io)
     # entry GC: a stage a prior crashed compaction left behind, or a
     # superseded generation its crash failed to collect
     fsutil.gc_generations(index_path, cur, legacy_names=names, io=io)
     src_root = fsutil.generation_root(index_path, cur)
     dst_root = fsutil.generation_root(index_path, cur + 1)
+    # folding an earlier layout would stamp its text-less docs current
+    _check_layout(src_root, io)
+    _write_layout(dst_root, io)
     counts: dict[str, int] = {}
     for name, schema, merge, bloom in specs:
         df = (
@@ -1177,7 +1275,10 @@ def dedup_and_append_batch(
     else:
         # bands_b already excludes exact-dropped docs; removing the
         # full drop set leaves exactly the survivors' band rows
-        surv_bands = keys.anti(bands_b)
+        surv_bands = keys.anti(bands_b).select("doc", "band", "bucket")
+    if not _check_layout(root):
+        # an empty index adopts the layout before its first slice lands
+        _write_layout(root)
     # ALL FOUR writes (survivors + three index tables) are independent
     # jobs over PINNED inputs — overlap them from a thread pool (guide
     # §2.6; r19 folds the survivors write in, it used to serialize
@@ -1193,7 +1294,7 @@ def dedup_and_append_batch(
             surv_obs, out_path, batch_id, approx_rows=n_kept_est
         ),
         lambda: _write_slice(
-            feats_s.select("doc", "text_hash", "shingles"),
+            feats_s.select("doc", "text_hash", "text"),
             os.path.join(root, "docs"),
             batch_id,
             bloom_col="text_hash",

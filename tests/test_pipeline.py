@@ -365,9 +365,10 @@ def test_incremental_dedup_replay_idempotent(spark, sf_dir, tmp_path):
 
 
 def _regime_batches(spark, docs):
-    """History (``doc_id % 3 == 0``) and four batches that between them
-    drive every drop leg — exact and near, within the batch and against
-    the index — plus the accounting edge cases:
+    """History (``doc_id % 3 == 0`` plus a NULL-text doc) and five
+    batches that between them drive every drop leg — exact and near,
+    within the batch and against the index — plus the accounting edge
+    cases:
 
     - batch 0: the sf0.01 ``doc_id % 3 == 1`` slice;
     - batch 1: a NULL-id exact copy of an index doc (a NULL in the
@@ -376,16 +377,24 @@ def _regime_batches(spark, docs):
       one-token edit of an index doc;
     - batch 2: a duplicate id whose one row is an exact copy of an
       index doc (both rows go, as with the anti-join), and a fresh doc;
-    - batch 3: empty.
+    - batch 3: the index's exact-pair skip. B (900_301) is a one-token
+      edit of an index doc X and drops through near-vs-index; A
+      (900_302 > B) is an exact copy of X, whose candidate pairs with X
+      are skipped before verification, and drops through the exact
+      probe. A NULL-text doc (900_303) shares every band bucket with
+      the history's NULL-text doc and survives;
+    - batch 4: empty.
 
     Batch 1 keeps the NULL-id row, 900_001 and 900_003; batch 2 keeps
-    900_201."""
+    900_201; batch 3 keeps 900_303."""
     from ais_data_pipeline_spark.localrel import local_df
 
-    hist = docs.filter(F.col("doc_id") % 3 == 0)
-    hist_texts = [r["text"] for r in hist.orderBy("doc_id").limit(3).collect()]
+    row = lambda i, t: (i, t, "en", "b", len(t) if t is not None else 0)  # noqa: E731
+    hist = docs.filter(F.col("doc_id") % 3 == 0).unionByName(
+        local_df(spark, [row(900_000, None)], docs.schema)
+    )
+    hist_texts = [r["text"] for r in hist.orderBy("doc_id").limit(4).collect()]
     fresh = "quick amber foxes leap over sleepy violet hounds beneath a silent harvest moon tonight again"
-    row = lambda i, t: (i, t, "en", "b", len(t))  # noqa: E731
     batches = [
         docs.filter(F.col("doc_id") % 3 == 1),
         local_df(
@@ -406,6 +415,15 @@ def _regime_batches(spark, docs):
                 row(900_201, "another fresh sentence seen only in this batch"),
                 row(900_202, hist_texts[1]),
                 row(900_202, "a different fresh sentence under a reused id"),
+            ],
+            docs.schema,
+        ),
+        local_df(
+            spark,
+            [
+                row(900_301, hist_texts[3].rsplit(" ", 1)[0] + " yak"),
+                row(900_302, hist_texts[3]),
+                row(900_303, None),
             ],
             docs.schema,
         ),
@@ -465,9 +483,10 @@ def test_incremental_dedup_large_batch_regime_equivalent(
             results[tag] = (counts, kept, tables)
         assert results["small"] == results["large"], cap
         counts, kept = results["small"][:2]
-        assert counts[1:] == [(6, 3), (3, 1), (0, 0)], cap
+        assert counts[1:] == [(6, 3), (3, 1), (3, 1), (0, 0)], cap
         assert [d for b, d in kept if b == 1] == [900_001, 900_003, None], cap
         assert [d for b, d in kept if b == 2] == [900_201], cap
+        assert [d for b, d in kept if b == 3] == [900_303], cap
 
 
 def test_incremental_dedup_single_file_estimate_is_upper_bound(
@@ -508,6 +527,84 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
         assert all(est >= n for _, _, est, n in written), (tag, written)
         # the duplicate-id batch over-estimates: one drop id, two rows
         assert any(k == 2 and est > n for _, k, est, n in written), (tag, written)
+
+
+def test_incremental_dedup_refuses_earlier_layout(spark, sf_dir, tmp_path):
+    """An index whose docs table holds shingle hashes and no text (the
+    earlier layout) reads NULL text through the current schema, so
+    near-vs-index verification would silently never match. The first
+    append, probe or compaction raises instead and names
+    ``build_dedup_index``; a rebuild over the same path drops the old
+    tables, batch slices included, and near duplicates drop again. A
+    never-built index takes the layout marker with its first append."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    docs = read_table(spark, sf_dir, "documents")
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    k = F.col("doc_id")
+    hist, batch = docs.filter(k % 3 == 0), docs.filter(k % 3 == 1)
+    for src_batch, part in ((mod.HISTORY_BATCH, hist), (0, batch)):
+        mod._write_slice(
+            mod._features(part, "text", "doc_id", 3).select("doc", "text_hash", "shingles"),
+            index + "/docs", src_batch, bloom_col="text_hash",
+        )
+    for call in (
+        lambda: mod.dedup_and_append_batch(batch, 1, index, out),
+        lambda: mod.dedup_batch_against_index(batch, index),
+        lambda: mod.compact_dedup_index(spark, index),
+    ):
+        with pytest.raises(ValueError, match="build_dedup_index"):
+            call()
+    assert not os.path.exists(out)
+    assert not os.path.exists(index + "/_g00001")
+
+    mod.build_dedup_index(hist, index)
+    assert sorted(os.listdir(index + "/docs")) == ["src_batch=-1"]
+    x = hist.orderBy("doc_id").first()["text"]
+    near = local_df(
+        spark, [(900_001, x.rsplit(" ", 1)[0] + " yak", "en", "b", len(x))], docs.schema
+    )
+    assert mod.dedup_batch_against_index(near, index, threshold=0.5).count() == 0
+
+    fresh = str(tmp_path / "fresh")
+    mod.dedup_and_append_batch(batch, 0, fresh, out)
+    with open(os.path.join(fresh, mod.LAYOUT_MARKER)) as f:
+        assert f.read() == mod.DOCS_LAYOUT
+    # the next batch probes the first one's slices without a raise
+    assert mod.dedup_and_append_batch(batch, 1, fresh, out) == (167, 0)
+
+
+def test_incremental_dedup_verify_shingles_below_join(spark, sf_dir, tmp_path):
+    """The near-vs-index verify rebuilds each candidate's shingles from
+    the index text in projections below the verify join. No join
+    condition of the drop-set plan may hold a ``transform(`` lambda:
+    with the shingling inlined into the Jaccard condition, the token
+    split re-runs per element (seconds per batch instead of tens of
+    milliseconds)."""
+    import io as _io
+    import re as _re
+    from contextlib import redirect_stdout
+
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    docs = read_table(spark, sf_dir, "documents")
+    index = str(tmp_path / "idx")
+    mod.build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
+    _, _, drops, _, _ = mod._dedup_batch_parts(
+        docs.filter(F.col("doc_id") % 3 == 1), index, threshold=0.5
+    )
+    buf = _io.StringIO()
+    with redirect_stdout(buf):
+        drops.explain("formatted")
+    plan = buf.getvalue()
+    conds = _re.findall(r"Join condition: (.*)", plan)
+    assert len(conds) >= 4, plan
+    assert not [c for c in conds if "transform(" in c], plan
+    # the index leg does shingle text: a projection holds the lambda
+    assert "transform(" in plan, plan
 
 
 def _scan_output_rows(df) -> int:
@@ -725,12 +822,12 @@ def test_ivfpq_build_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
 
 #: jobs of one small-regime ``dedup_and_append_batch`` on the sf0.01
 #: fixture: the feature materialize (3), the probe-set collect (1), the
-#: drop-set collect with its five broadcast exchanges (6) and the four
+#: drop-set collect with its four broadcast exchanges (5) and the four
 #: slice writes (5: the bucket_stats aggregate's shuffle is its own job).
-#: Five exchanges, not four: the bucket IN-filter is inferred onto the
-#: index leg's band-row broadcast, so that one no longer matches the
-#: within-batch broadcast and is not reused.
-DEDUP_BATCH_MAX_JOBS = 15
+#: Four exchanges, not five: the band rows carry the bucket IN-filter
+#: the index leg's join would otherwise infer onto its broadcast alone,
+#: so the within-batch and index legs reuse one band-row broadcast.
+DEDUP_BATCH_MAX_JOBS = 14
 
 
 def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
@@ -822,7 +919,10 @@ def test_incremental_dedup_edge_hardening(spark, sf_dir, tmp_path):
     index path with no bootstrap is a well-defined empty index, not a
     PATH_NOT_FOUND poison pill; (c) the hot-bucket guard counts
     exact-SURVIVOR band rows, so a burst of exact copies cannot smuggle
-    its kept representative past near-dup verification."""
+    its kept representative past near-dup verification; (d) two
+    different short docs share every band bucket with an empty shingle
+    union, which must not divide by zero under ANSI mode (the default
+    of a vanilla Spark 4 session)."""
     from pyspark.sql import functions as F
 
     from ais_data_pipeline_spark.localrel import local_df
@@ -883,6 +983,19 @@ def test_incremental_dedup_edge_hardening(spark, sf_dir, tmp_path):
         copies, index, threshold=0.5, max_bucket_size=10
     ).count()
     assert survivors == 0, "exact-copy burst smuggled a near-dup past the cap"
+
+    # (d) ANSI mode: the empty-union Jaccard is NULL, not an error
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        short = mk([(20, "hi there", "en", "b", 8), (21, "short one", "en", "b", 9)])
+        got = {
+            r["doc_id"]
+            for r in dedup_batch_against_index(short, index, threshold=0.5).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == {20, 21}
 
 
 def test_embedding_dedup_null_and_empty_hardening(spark, tmp_path):
