@@ -6,9 +6,9 @@ index compaction; round 15: the ``upsert_parquet`` /
 GENERATION-POINTER protocol below — hidden ``_gNNNNN`` stage dirs
 plus one small pointer write, zero renames of data directories — so
 the same code path runs on local disk and object stores through the
-injectable IO seam. The pre-r14 rename-based staged swap survives
-only as ``_legacy_staged_swap`` (local-FS, nothing in the engine may
-call it; see its docstring).
+injectable ``FsIO`` seam. The slice-compaction policy shared by the
+two accreting indexes (dedup and IVF) lives here too: it censuses the
+live generation through the same seam.
 """
 
 from __future__ import annotations
@@ -20,9 +20,7 @@ from typing import Callable, Iterable, Iterator
 
 #: A lister maps a root path/URI to ``(relative_path, size_bytes)``
 #: pairs for every file under it, with POSIX separators in the
-#: relative path regardless of backend. Injectable so the compaction
-#: trigger policy (and anything else that needs a footprint census)
-#: can run against object stores or test fakes without code changes.
+#: relative path regardless of backend; ``FsIO.lister`` holds one.
 Lister = Callable[[str], Iterable[tuple[str, int]]]
 
 
@@ -72,18 +70,6 @@ def hadoop_lister(root: str) -> Iterator[tuple[str, int]]:
         p = status.getPath().toString()
         rel = p[len(prefix) :] if p.startswith(prefix) else p
         yield rel, int(status.getLen())
-
-
-def iter_files(root: str, lister: Lister | None = None) -> Iterator[tuple[str, int]]:
-    """Yield ``(relative_posix_path, size_bytes)`` for every file under
-    ``root``, choosing the backend by scheme: an explicit ``lister``
-    wins, non-file URIs go through the Hadoop FileSystem gateway, and
-    bare paths / ``file://`` use ``os.walk``."""
-    if lister is None:
-        scheme_split = root.split("://", 1)
-        remote = len(scheme_split) == 2 and scheme_split[0] != "file"
-        lister = hadoop_lister if remote else local_lister
-    yield from lister(root)
 
 
 # -- Generation-pointer commits (round 14) ----------------------------------
@@ -393,51 +379,79 @@ def reset_generations(index_path: str, io: FsIO | None = None) -> None:
     io.remove(_join(index_path, GEN_POINTER))
 
 
-# -- Legacy rename-based swap (superseded by the generation pointer) --------
+# -- Slice-compaction policy (round 12) -------------------------------------
 #
-# Pre-round-14 protocol, kept ONLY so external local-FS tooling that
-# adopted it keeps a tested upgrade path. FORBIDDEN inside the engine:
-# every index/table maintenance op commits through publish_generation
-# (zero data-dir renames, object-store-safe). Do not add call sites —
-# os.rename does not exist on s3a://-class stores, and the two-rename
-# swap has a missing-directory instant the pointer protocol was built
-# to remove. A grep gate in tests/test_pipeline.py enforces zero
-# engine callers.
+# Both accreting indexes — the MinHash dedup index
+# (``<table>/src_batch=<n>/…``) and the IVF index
+# (``list_id=<l>/src_batch=<n>/…``) — append one ``src_batch=<n>`` slice
+# per micro-batch beside the ``src_batch=-1`` history and fold slices
+# into history through a generation commit. A fixed every-K-batches
+# cadence cannot amortize at 100 TB: each compaction rewrites the WHOLE
+# history, so a fixed interval spends ever more rewrite bytes per
+# ingested byte as history grows. The geometric trigger below is the
+# LSM/Iceberg shape: compact when accreted slice bytes reach
+# COMPACT_SLICE_RATIO of history bytes — total rewrite cost per
+# ingested byte is then bounded by ~1/ratio FOREVER while trigger
+# points stretch with the corpus — or when the slice FILE count alone
+# passes COMPACT_MAX_SLICE_FILES (listing/open cost guard for
+# byte-light, file-heavy accretion: one file per table or per touched
+# list per micro-batch adds up even when the bytes don't).
+COMPACT_SLICE_RATIO = 0.25
+COMPACT_MAX_SLICE_FILES = 256
+#: don't churn a tiny index: below this many accreted bytes the ratio
+#: trigger stays silent (the file-count guard still applies)
+COMPACT_MIN_SLICE_BYTES = 64 * 2**20
 
 
-def _legacy_recover_staged_swap(live: str, stage: str) -> None:
-    """Repair the aftermath of a crash during a prior ``_legacy_staged_swap``
-    of ``stage`` into ``live``. Crash windows:
-
-    - before step 1: live intact; a stale stage dir may exist → drop it.
-    - between the two renames: no live dir, but the COMPLETE stage and
-      the ``_old`` copy both exist → finish the swap, drop old.
-    - after step 2: live intact, ``_old`` leftover → drop ``_old``.
-
-    Idempotent. LEGACY — see the section comment; engine code must not
-    call this."""
-    old = live + "_old"
-    if not os.path.exists(live):
-        if os.path.exists(stage):
-            # crashed between the two renames: the stage dir was
-            # complete before step 1 ran, so it IS the new live table
-            os.rename(stage, live)
-        elif os.path.exists(old):
-            # stage lost but the pre-swap copy survives: restore it
-            os.rename(old, live)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(stage):
-        # stale stage from a crash before the swap — about to re-stage
-        shutil.rmtree(stage, ignore_errors=True)
+def slice_accretion(path: str, io: FsIO | None = None) -> dict[str, int]:
+    """History-vs-accreted footprint of an accreting index from one
+    listing of its LIVE generation (a not-yet-GC'd superseded
+    generation or an in-flight stage does not count): bytes of the
+    ``src_batch=-1`` history, and bytes and file count of the
+    per-batch slices. A file counts when it is ``*.parquet`` and its
+    second path component is ``src_batch=<n>``."""
+    io = io or io_for(path)
+    history_bytes = slice_bytes = slice_files = 0
+    for rel, size in io.lister(current_root(path, io)):
+        parts = rel.split("/")
+        if not rel.endswith(".parquet") or len(parts) < 3:
+            continue
+        if parts[1] == "src_batch=-1":
+            history_bytes += size
+        elif parts[1].startswith("src_batch="):
+            slice_bytes += size
+            slice_files += 1
+    return {
+        "history_bytes": history_bytes,
+        "slice_bytes": slice_bytes,
+        "slice_files": slice_files,
+    }
 
 
-def _legacy_staged_swap(live: str, stage: str) -> None:
-    """Swap a COMPLETE ``stage`` directory into ``live``'s place via
-    two ``os.rename`` calls. Single-writer, LOCAL FS ONLY, and LEGACY —
-    see the section comment; engine code must commit through
-    ``publish_generation`` instead."""
-    old = live + "_old"
-    os.rename(live, old)
-    os.rename(stage, live)
-    shutil.rmtree(old, ignore_errors=True)
+def should_compact(
+    path: str,
+    io: FsIO | None = None,
+    slice_ratio: float = COMPACT_SLICE_RATIO,
+    max_slice_files: int = COMPACT_MAX_SLICE_FILES,
+    min_slice_bytes: int = COMPACT_MIN_SLICE_BYTES,
+) -> dict:
+    """Pure trigger decision: the ``slice_accretion`` census plus a
+    ``compact`` bool and which trigger fired (``bytes`` / ``files`` /
+    None). The bytes trigger is geometric — ``slice_bytes >=
+    slice_ratio * history_bytes`` and at least ``min_slice_bytes`` —
+    and the files trigger is an absolute cap on accreted file count."""
+    m = slice_accretion(path, io)
+    # nothing accreted -> nothing to compact, whatever the knobs say
+    # (an empty/missing index with a zero floor would otherwise
+    # trigger on 0 >= 0 and hand the compactor nonexistent tables)
+    by_files = m["slice_files"] > 0 and m["slice_files"] >= max_slice_files
+    by_bytes = (
+        m["slice_bytes"] > 0
+        and m["slice_bytes"] >= min_slice_bytes
+        and m["slice_bytes"] >= slice_ratio * m["history_bytes"]
+    )
+    return {
+        **m,
+        "compact": bool(by_files or by_bytes),
+        "trigger": "files" if by_files else ("bytes" if by_bytes else None),
+    }

@@ -495,10 +495,14 @@ def minhash_near_dup(
         cands.join(a, "doc_a")
         .join(b, "doc_b")
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        # two docs too short to shingle share every bucket and have an
+        # empty union: NULL, never a pair, and no ANSI divide-by-zero
         .withColumn(
             "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")).cast("double"),
+            F.try_divide(
+                F.col("n_inter").cast("double"),
+                (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")).cast("double"),
+            ),
         )
         .filter(F.col("jaccard") >= threshold)
     )

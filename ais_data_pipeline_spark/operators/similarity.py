@@ -32,6 +32,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve from module g
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ais_data_pipeline_spark import fsutil
 from ais_data_pipeline_spark.localrel import local_df
 from ais_data_pipeline_spark.checkpointing import materialize
 
@@ -518,8 +519,6 @@ def build_ivf_index(
     # a rebuild writes the flat generation-0 layout: drop any pointer
     # a prior compaction published, or readers would resolve to a
     # generation this rebuild never writes (r14)
-    from ais_data_pipeline_spark import fsutil
-
     fsutil.reset_generations(path.rstrip("/"))
     cents = head_centroids(df, n_centroids, vec_col, id_col)
     (
@@ -562,8 +561,6 @@ def append_to_ivf_index(
     # live data root resolves through the generation pointer (r14:
     # compaction commits by pointer, not rename); the quantizer
     # sidecar stays keyed off the BASE path — it is never compacted
-    from ais_data_pipeline_spark import fsutil
-
     live = fsutil.current_root(base)
     _check_index_sidecars(live, base + "_centroids")
     # a compaction may have FOLDED this batch into the history slice
@@ -626,8 +623,6 @@ def compact_ivf_index(spark, path: str, io=None) -> int:
     Single-writer maintenance contract as before. List assignment is
     already stored, so compaction never recomputes distances.
     Returns the row count."""
-    from ais_data_pipeline_spark import fsutil
-
     base = path.rstrip("/")
     io = io or fsutil.io_for(base)
     cur = fsutil.current_generation(base, io)
@@ -674,110 +669,26 @@ def compact_ivf_index(spark, path: str, io=None) -> int:
     return n
 
 
-#: IVF compaction trigger knobs — same LSM-shaped geometric policy as
-#: the dedup index (streaming/incremental_dedup.py): compact when
-#: accreted slice bytes reach the ratio of history bytes (rewrite cost
-#: per ingested byte bounded by ~1/ratio while trigger points stretch)
-#: or when slice FILE count alone passes the cap (each micro-batch
-#: appends one file per touched list_id, so file count grows fast even
-#: when bytes don't).
-IVF_COMPACT_SLICE_RATIO = 0.25
-IVF_COMPACT_MAX_SLICE_FILES = 256
-IVF_COMPACT_MIN_SLICE_BYTES = 64 * 2**20
-
-
-def ivf_index_accretion(
-    path: str,
-    lister: "fsutil.Lister | None" = None,
-    io: "fsutil.FsIO | None" = None,
-) -> dict[str, int]:
-    """History-vs-accreted footprint of an IVF index from one recursive
-    listing: bytes/files split between ``src_batch=-1`` history and the
-    per-batch slices (layout ``list_id=*/src_batch=*``), plus the
-    distinct accreted batch count. Listing routes through
-    ``fsutil.iter_files`` — local walk, Hadoop FileSystem for
-    ``s3a://``-class URIs, or an injected fake — so the trigger policy
-    runs unchanged against object stores."""
-    from ais_data_pipeline_spark import fsutil
-
-    history_bytes = slice_bytes = slice_files = 0
-    batches: set[str] = set()
-    # census the LIVE generation only (r14 pointer commits); a bare
-    # injected lister (pre-r14 seam) lists the flat root unresolved
-    if io is not None:
-        root, lister = fsutil.current_root(path.rstrip("/"), io), io.lister
-    elif lister is not None:
-        root = path.rstrip("/")
-    else:
-        root = fsutil.current_root(path.rstrip("/"))
-    for rel, size in fsutil.iter_files(root, lister):
-        if not rel.endswith(".parquet"):
-            continue
-        parts = rel.split("/")
-        # layout: list_id=<l>/src_batch=<n>/*.parquet
-        if (
-            len(parts) != 3
-            or not parts[0].startswith("list_id=")
-            or not parts[1].startswith("src_batch=")
-        ):
-            continue
-        part = parts[1]
-        if part == "src_batch=-1":
-            history_bytes += size
-        else:
-            slice_bytes += size
-            slice_files += 1
-            batches.add(part)
-    return {
-        "history_bytes": history_bytes,
-        "slice_bytes": slice_bytes,
-        "slice_files": slice_files,
-        "n_slices": len(batches),
-    }
-
-
-def should_compact_ivf_index(
-    path: str,
-    slice_ratio: float = IVF_COMPACT_SLICE_RATIO,
-    max_slice_files: int = IVF_COMPACT_MAX_SLICE_FILES,
-    min_slice_bytes: int = IVF_COMPACT_MIN_SLICE_BYTES,
-    lister=None,
-    io=None,
-) -> dict:
-    """Pure trigger decision for ``compact_ivf_index`` — same contract
-    as ``should_compact_dedup_index``: geometric bytes trigger with a
-    floor, absolute file-count guard, nothing fires on an empty or
-    missing index."""
-    m = ivf_index_accretion(path, lister, io)
-    by_files = m["slice_files"] > 0 and m["slice_files"] >= max_slice_files
-    by_bytes = (
-        m["slice_bytes"] > 0
-        and m["slice_bytes"] >= min_slice_bytes
-        and m["slice_bytes"] >= slice_ratio * m["history_bytes"]
-    )
-    return {
-        **m,
-        "compact": bool(by_files or by_bytes),
-        "trigger": "files" if by_files else ("bytes" if by_bytes else None),
-    }
-
-
 def maybe_compact_ivf_index(
     spark,
     path: str,
-    slice_ratio: float = IVF_COMPACT_SLICE_RATIO,
-    max_slice_files: int = IVF_COMPACT_MAX_SLICE_FILES,
-    min_slice_bytes: int = IVF_COMPACT_MIN_SLICE_BYTES,
+    slice_ratio: float = fsutil.COMPACT_SLICE_RATIO,
+    max_slice_files: int = fsutil.COMPACT_MAX_SLICE_FILES,
+    min_slice_bytes: int = fsutil.COMPACT_MIN_SLICE_BYTES,
 ) -> dict | None:
-    """Run ``compact_ivf_index`` iff the threshold policy fires;
-    returns the decision record (+ wall-clock and row count) or None.
-    Same single-writer maintenance contract as the compactor itself."""
+    """Run ``compact_ivf_index`` iff the slice-compaction policy
+    (``fsutil.should_compact``) fires; returns the decision record
+    (+ wall-clock and row count) or None. Same single-writer
+    maintenance contract as the compactor itself."""
     import time as _time
 
     from ais_data_pipeline_spark.observability import log
 
-    decision = should_compact_ivf_index(
-        path, slice_ratio, max_slice_files, min_slice_bytes
+    decision = fsutil.should_compact(
+        path,
+        slice_ratio=slice_ratio,
+        max_slice_files=max_slice_files,
+        min_slice_bytes=min_slice_bytes,
     )
     if not decision["compact"]:
         return None
@@ -803,8 +714,6 @@ def ivf_probe_topk(
     """Probe an IVF index: rank centroids by cosine to the query
     (driver-side — the centroid table is tiny by construction), read
     the ``nprobe`` nearest ``list_id=`` partitions, exact re-rank."""
-    from ais_data_pipeline_spark import fsutil
-
     root = fsutil.current_root(index_path.rstrip("/"))
     _check_index_sidecars(root, index_path.rstrip("/") + "_centroids")
     cents = spark.read.parquet(index_path.rstrip("/") + "_centroids").collect()

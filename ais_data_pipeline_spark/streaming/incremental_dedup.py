@@ -88,8 +88,6 @@ def _index_root(index_path: str) -> str:
     reader/appender resolves the pointer first. Identity for flat
     pre-generation layouts and fresh indexes (pointer absent = gen 0),
     a hidden ``_gNNNNN`` child after the first compaction."""
-    from ais_data_pipeline_spark import fsutil
-
     return fsutil.current_root(index_path)
 
 
@@ -121,7 +119,7 @@ def _check_layout(root: str, io: "fsutil.FsIO | None" = None) -> bool:
     if marker is not None and marker.strip() == DOCS_LAYOUT:
         return True
     if marker is None and not any(
-        rel.endswith(".parquet") for rel, _ in fsutil.iter_files(root, io.lister)
+        rel.endswith(".parquet") for rel, _ in io.lister(root)
     ):
         return False
     raise ValueError(
@@ -1024,126 +1022,27 @@ def compact_dedup_index(
     return counts
 
 
-#: Threshold-driven compaction policy (round 12 — the fixed
-#: every-K-batches cadence cannot amortize at 100 TB: each compaction
-#: rewrites the WHOLE history, so a fixed interval spends ever more
-#: rewrite bytes per ingested byte as history grows). The geometric
-#: trigger below is the LSM/Iceberg shape: compact when accreted slice
-#: bytes reach COMPACT_SLICE_RATIO of history bytes — total rewrite
-#: cost per ingested byte is then bounded by ~1/ratio FOREVER while
-#: trigger points stretch with the corpus — or when the slice FILE
-#: count alone passes COMPACT_MAX_SLICE_FILES (listing/open cost guard
-#: for byte-light, file-heavy accretion: up to 3 tables × 1 file per
-#: micro-batch adds up even when the bytes don't).
-COMPACT_SLICE_RATIO = 0.25
-COMPACT_MAX_SLICE_FILES = 256
-#: don't churn a tiny index: below this many accreted bytes the ratio
-#: trigger stays silent (the file-count guard still applies)
-COMPACT_MIN_SLICE_BYTES = 64 * 2**20
-
-
-def dedup_index_accretion(
-    index_path: str,
-    lister: "fsutil.Lister | None" = None,
-    io: "fsutil.FsIO | None" = None,
-) -> dict[str, int]:
-    """Measure the index's history-vs-accreted footprint from one
-    recursive listing (the same listing every probe's multi-slice scan
-    pays, so the policy check adds no new I/O class): bytes and file
-    counts split between the ``src_batch=-1`` history partition and
-    the per-batch slices, plus the distinct accreted slice count.
-    The listing routes through ``fsutil.iter_files`` so the trigger
-    policy is runnable where 100 TB lives — local paths walk the OS,
-    ``s3a://``/``hdfs://`` URIs go through the Hadoop FileSystem
-    gateway (one recursive LIST), and tests inject a fake ``lister``."""
-    hist = f"src_batch={HISTORY_BATCH}"
-    history_bytes = slice_bytes = slice_files = 0
-    slices: set[tuple[str, str]] = set()
-    # census the LIVE generation only (r14 pointer commits): a
-    # not-yet-GC'd superseded generation or an in-flight stage must
-    # not count toward the trigger. With a full FsIO injected the
-    # pointer resolves through it; a bare injected lister (the
-    # pre-r14 seam) lists from the index root unresolved — correct
-    # for flat layouts, which is all that seam ever modeled.
-    if io is not None:
-        root, lister = fsutil.current_root(index_path, io), io.lister
-    elif lister is not None:
-        root = index_path
-    else:
-        root = _index_root(index_path)
-    for rel, size in fsutil.iter_files(root, lister):
-        if not rel.endswith(".parquet"):
-            continue
-        parts = rel.split("/")
-        # layout: <table>/src_batch=<n>/.../*.parquet
-        if len(parts) < 3 or not parts[1].startswith("src_batch="):
-            continue
-        table, part = parts[0], parts[1]
-        if part == hist:
-            history_bytes += size
-        else:
-            slice_bytes += size
-            slice_files += 1
-            slices.add((table, part))
-    return {
-        "history_bytes": history_bytes,
-        "slice_bytes": slice_bytes,
-        "slice_files": slice_files,
-        "n_slices": len(slices),
-    }
-
-
-def should_compact_dedup_index(
-    index_path: str,
-    slice_ratio: float = COMPACT_SLICE_RATIO,
-    max_slice_files: int = COMPACT_MAX_SLICE_FILES,
-    min_slice_bytes: int = COMPACT_MIN_SLICE_BYTES,
-    lister: "fsutil.Lister | None" = None,
-    io: "fsutil.FsIO | None" = None,
-) -> dict:
-    """Pure trigger decision: accretion measurements + ``compact``
-    bool + which trigger fired (``bytes`` / ``files`` / None). The
-    bytes trigger is geometric — ``slice_bytes >= slice_ratio *
-    history_bytes`` (and at least ``min_slice_bytes``) — so compaction
-    points stretch as history grows and rewrite cost stays a bounded
-    fraction of ingested bytes; the files trigger is an absolute cap
-    on accreted file count."""
-    m = dedup_index_accretion(index_path, lister, io)
-    # nothing accreted -> nothing to compact, whatever the knobs say
-    # (an empty/missing index with a zero floor would otherwise
-    # trigger on 0 >= 0 and hand compact_dedup_index nonexistent
-    # tables; round-12 hardening sweep)
-    by_files = m["slice_files"] > 0 and m["slice_files"] >= max_slice_files
-    by_bytes = (
-        m["slice_bytes"] > 0
-        and m["slice_bytes"] >= min_slice_bytes
-        and m["slice_bytes"] >= slice_ratio * m["history_bytes"]
-    )
-    return {
-        **m,
-        "compact": bool(by_files or by_bytes),
-        "trigger": "files" if by_files else ("bytes" if by_bytes else None),
-    }
-
-
 def maybe_compact_dedup_index(
     spark: SparkSession,
     index_path: str,
-    slice_ratio: float = COMPACT_SLICE_RATIO,
-    max_slice_files: int = COMPACT_MAX_SLICE_FILES,
-    min_slice_bytes: int = COMPACT_MIN_SLICE_BYTES,
+    slice_ratio: float = fsutil.COMPACT_SLICE_RATIO,
+    max_slice_files: int = fsutil.COMPACT_MAX_SLICE_FILES,
+    min_slice_bytes: int = fsutil.COMPACT_MIN_SLICE_BYTES,
 ) -> dict | None:
-    """Run ``compact_dedup_index`` iff the threshold policy says so;
-    returns the decision record (with per-table row counts and the
-    compaction wall-clock folded in) or None when no trigger fired.
-    Call it where the fixed cadence used to be — after a batch append,
+    """Run ``compact_dedup_index`` iff the slice-compaction policy
+    (``fsutil.should_compact``) fires; returns the decision record
+    (with per-table row counts and the compaction wall-clock folded
+    in) or None when no trigger fired. Call it between batch appends,
     under the same single-writer maintenance contract."""
     import time as _time
 
     from ais_data_pipeline_spark.observability import log
 
-    decision = should_compact_dedup_index(
-        index_path, slice_ratio, max_slice_files, min_slice_bytes
+    decision = fsutil.should_compact(
+        index_path,
+        slice_ratio=slice_ratio,
+        max_slice_files=max_slice_files,
+        min_slice_bytes=min_slice_bytes,
     )
     if not decision["compact"]:
         return None
@@ -1168,22 +1067,20 @@ def run_incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    auto_compact: bool = False,
 ) -> None:
     """foreachBatch sink: dedup each micro-batch against the index,
     append survivors to ``out_path`` AND their features to the index —
     so batch N+1 dedups against batch N's survivors without any
     full-corpus rescan. Exactly-once effect = checkpointed batch ids ×
     idempotent per-batch partition overwrite (same recipe as the CDC
-    sink). ``auto_compact=True`` runs the threshold-driven compaction
-    policy (``maybe_compact_dedup_index``) after each append — inside
-    foreachBatch the stream IS the single writer, so the maintenance
-    contract holds by construction. Replay safety: if the process dies
-    after a compaction but before batch N's checkpoint commit, the
-    replay finds batch N's features folded into history, so every doc
-    self-matches and drops — nothing is rewritten, the survivor
-    partition and index rows from the first run stand, and the final
-    state is identical to the no-crash run (pinned in pytest)."""
+    sink). Compact the index by calling ``maybe_compact_dedup_index``
+    between runs (as ``tools/incdedup_longrun.py`` does between
+    batches). Replay safety: if the process dies after a compaction
+    but before batch N's checkpoint commit, the replay finds batch N's
+    features folded into history, so every doc self-matches and drops
+    — nothing is rewritten, the survivor partition and index rows from
+    the first run stand, and the final state is identical to the
+    no-crash run (pinned in pytest)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from ais_data_pipeline_spark.observability import log
@@ -1200,8 +1097,6 @@ def run_incremental_dedup(
             rows_kept=n_kept,
             rows_dropped=n_in - n_kept,
         )
-        if auto_compact:
-            maybe_compact_dedup_index(batch_df.sparkSession, index_path)
 
     q = (
         stream_df.writeStream.foreachBatch(handle)

@@ -166,7 +166,7 @@ def test_minhash_broadcast_proxy_refinement(spark, capfd):
     16-doc cluster (240 ordered pairs -> 120 candidate pairs, 16 ids)
     with the budget between the two numbers must KEEP the broadcast
     (no fallback warning), with results identical to the unguarded
-    run."""
+    run. Docs too short to shingle score NULL under ANSI mode."""
     from ais_data_pipeline_spark.localrel import local_df
     from ais_data_pipeline_spark.operators.dedup import minhash_near_dup
 
@@ -205,6 +205,22 @@ def test_minhash_broadcast_proxy_refinement(spark, capfd):
     assert {
         (r["doc_a"], r["doc_b"], r["jaccard"]) for r in overflowed_df.collect()
     } == normal
+
+    # ANSI mode: two docs too short to shingle share every bucket and
+    # have an empty union; their Jaccard is NULL (no pair), not a
+    # DIVIDE_BY_ZERO that fails the whole query
+    short = local_df(
+        spark,
+        [(0, "hi there"), (1, "short one"), (2, "alpha beta gamma delta")],
+        "doc_id bigint, text string",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = minhash_near_dup(short, threshold=0.5).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == []
 
 
 def test_near_dup_clusters_match_union_find(spark, sf_dir):

@@ -3367,13 +3367,12 @@ def test_ivf_compaction_threshold_policy(spark, tmp_path):
     unchanged."""
     from pyspark.sql import functions as F
 
+    from ais_data_pipeline_spark.fsutil import should_compact, slice_accretion
     from ais_data_pipeline_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
-        ivf_index_accretion,
         ivf_probe_topk,
         maybe_compact_ivf_index,
-        should_compact_ivf_index,
     )
     from ais_data_pipeline_spark.sources.parquet import read_table
 
@@ -3382,30 +3381,30 @@ def test_ivf_compaction_threshold_policy(spark, tmp_path):
     k = F.col("vec_id")
     build_ivf_index(e.filter(k % 3 == 0), path, n_centroids=8)
 
-    m0 = ivf_index_accretion(path)
+    m0 = slice_accretion(path)
     assert m0["history_bytes"] > 0 and m0["slice_bytes"] == 0
     # empty accretion never fires, even with zero knobs
-    d0 = should_compact_ivf_index(path, slice_ratio=0.0, min_slice_bytes=0,
-                                  max_slice_files=0)
+    d0 = should_compact(path, slice_ratio=0.0, min_slice_bytes=0,
+                        max_slice_files=0)
     assert d0["compact"] is False and d0["trigger"] is None
-    assert should_compact_ivf_index(str(tmp_path / "nope"), slice_ratio=0.0,
-                                    min_slice_bytes=0, max_slice_files=0,
-                                    )["compact"] is False
+    assert should_compact(str(tmp_path / "nope"), slice_ratio=0.0,
+                          min_slice_bytes=0, max_slice_files=0,
+                          )["compact"] is False
 
     append_to_ivf_index(e.filter(k % 3 == 1), path, src_batch=0)
     append_to_ivf_index(e.filter(k % 3 == 2), path, src_batch=1)
-    m1 = ivf_index_accretion(path)
-    assert m1["slice_bytes"] > 0 and m1["n_slices"] == 2
+    m1 = slice_accretion(path)
+    assert m1["slice_bytes"] > 0
     # ratio respected on both sides of the boundary; floor respected
     hi = (m1["slice_bytes"] + 1) / m1["history_bytes"]
-    assert should_compact_ivf_index(path, slice_ratio=hi,
-                                    min_slice_bytes=0)["compact"] is False
-    assert should_compact_ivf_index(
+    assert should_compact(path, slice_ratio=hi,
+                          min_slice_bytes=0)["compact"] is False
+    assert should_compact(
         path, slice_ratio=0.0, min_slice_bytes=m1["slice_bytes"] + 1
     )["compact"] is False
-    fired = should_compact_ivf_index(path, slice_ratio=0.01, min_slice_bytes=0)
+    fired = should_compact(path, slice_ratio=0.01, min_slice_bytes=0)
     assert fired["compact"] is True and fired["trigger"] == "bytes"
-    byfiles = should_compact_ivf_index(
+    byfiles = should_compact(
         path, slice_ratio=1e9, min_slice_bytes=1 << 60,
         max_slice_files=m1["slice_files"],
     )
@@ -3418,7 +3417,7 @@ def test_ivf_compaction_threshold_policy(spark, tmp_path):
     res = maybe_compact_ivf_index(spark, path, slice_ratio=0.01,
                                   min_slice_bytes=0)
     assert res is not None and res["trigger"] == "bytes" and res["rows"] > 0
-    m2 = ivf_index_accretion(path)
+    m2 = slice_accretion(path)
     assert m2["slice_bytes"] == 0 and m2["slice_files"] == 0
     assert before == ivf_probe_topk(spark, path, qv, k=10, nprobe=2).collect()
 

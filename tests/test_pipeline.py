@@ -1381,9 +1381,6 @@ def test_generation_protocol_fake_remote_io():
     URIs with zero local-filesystem calls. This is the seam the real
     Hadoop-gateway ``FsIO`` plugs into."""
     from ais_data_pipeline_spark import fsutil
-    from ais_data_pipeline_spark.streaming.incremental_dedup import (
-        dedup_index_accretion,
-    )
 
     store: dict[str, str] = {}
     sizes: dict[str, int] = {}
@@ -1418,7 +1415,7 @@ def test_generation_protocol_fake_remote_io():
     put("buckets/src_batch=-1/part-0.parquet", 5000)
     put("buckets/src_batch=0/part-0.parquet", 300)
     assert fsutil.current_generation(idx, io) == 0
-    m = dedup_index_accretion(idx, io=io)
+    m = fsutil.slice_accretion(idx, io)
     assert m["history_bytes"] == 6000 and m["slice_bytes"] == 360
 
     # staged gen 1 + publish: census follows the pointer
@@ -1427,7 +1424,7 @@ def test_generation_protocol_fake_remote_io():
     fsutil.publish_generation(idx, 1, io)
     assert fsutil.current_generation(idx, io) == 1
     assert fsutil.current_root(idx, io).endswith("/_g00001")
-    m = dedup_index_accretion(idx, io=io)
+    m = fsutil.slice_accretion(idx, io)
     assert m["history_bytes"] == 6360 and m["slice_bytes"] == 0
 
     # GC: legacy flat dirs (named mode) + a stale stage vanish, the
@@ -1467,16 +1464,15 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
     per ingested byte is bounded while trigger points stretch) plus an
     absolute slice-file-count guard. Pins the trigger math, the reset
     after compaction, and the post-compaction replay convergence the
-    auto_compact docstring claims."""
+    ``run_incremental_dedup`` docstring claims."""
     from pyspark.sql import functions as F
 
+    from ais_data_pipeline_spark.fsutil import should_compact, slice_accretion
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
         dedup_and_append_batch,
-        dedup_index_accretion,
         maybe_compact_dedup_index,
-        should_compact_dedup_index,
     )
 
     docs = read_table(spark, sf_dir, "documents")
@@ -1485,15 +1481,15 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
     k = F.col("doc_id")
     build_dedup_index(docs.filter(k % 4 == 0), index)
 
-    m0 = dedup_index_accretion(index)
+    m0 = slice_accretion(index)
     assert m0["history_bytes"] > 0 and m0["slice_bytes"] == 0
-    assert m0["slice_files"] == 0 and m0["n_slices"] == 0
+    assert m0["slice_files"] == 0
     # empty accretion: neither trigger may fire, even with a 0 floor
-    d0 = should_compact_dedup_index(index, min_slice_bytes=0)
+    d0 = should_compact(index, min_slice_bytes=0)
     assert d0["compact"] is False and d0["trigger"] is None
     # round-12 hardening: an EMPTY/missing index with zero knobs must
     # not trigger on 0 >= 0 (compact would read nonexistent tables)
-    dempty = should_compact_dedup_index(
+    dempty = should_compact(
         base + "/nonexistent", slice_ratio=0.0, min_slice_bytes=0,
         max_slice_files=0,
     )
@@ -1501,28 +1497,27 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
 
     b1 = docs.filter(k % 4 == 1).localCheckpoint(eager=True)
     dedup_and_append_batch(b1, 0, index, out)
-    m1 = dedup_index_accretion(index)
+    m1 = slice_accretion(index)
     assert m1["slice_bytes"] > 0 and m1["slice_files"] > 0
-    assert m1["n_slices"] >= 2  # docs and buckets slices at least
     assert m1["history_bytes"] == m0["history_bytes"]  # history untouched
 
     # trigger math, all three knobs:
     # (a) bytes trigger respects the min_slice_bytes floor
-    assert should_compact_dedup_index(
+    assert should_compact(
         index, slice_ratio=0.0, min_slice_bytes=m1["slice_bytes"] + 1
     )["compact"] is False
     # (b) bytes trigger is the geometric ratio once past the floor
     hi = (m1["slice_bytes"] + 1) / m1["history_bytes"]
-    assert should_compact_dedup_index(
+    assert should_compact(
         index, slice_ratio=hi, min_slice_bytes=0
     )["compact"] is False
-    lo = should_compact_dedup_index(
+    lo = should_compact(
         index, slice_ratio=m1["slice_bytes"] / m1["history_bytes"] / 2,
         min_slice_bytes=0,
     )
     assert lo["compact"] is True and lo["trigger"] == "bytes"
     # (c) file-count guard fires alone, even when bytes never would
-    df = should_compact_dedup_index(
+    df = should_compact(
         index, slice_ratio=1e9, min_slice_bytes=1 << 60,
         max_slice_files=m1["slice_files"],
     )
@@ -1540,7 +1535,7 @@ def test_compaction_threshold_policy(spark, sf_dir, tmp_path):
     # every slice row folded into history, none lost (bytes typically
     # SHRINK: one well-encoded file replaces many small ones)
     assert res["row_counts"]["docs"] == docs_pre_compact
-    m2 = dedup_index_accretion(index)
+    m2 = slice_accretion(index)
     assert m2["slice_bytes"] == 0 and m2["slice_files"] == 0
     assert m2["history_bytes"] > 0
 
@@ -1812,58 +1807,6 @@ def test_reliable_checkpoint_switch(spark, sf_dir, tmp_path):
         assert _glob.glob(ckpt_dir2 + "/*/rdd-*"), "no checkpoint files at sf0.1"
 
 
-def test_staged_swap_crash_recovery(tmp_path):
-    """The LEGACY rename swap (kept for external local-FS tooling; the
-    engine commits via the generation pointer since r14) must still
-    repair every crash window: stale stage (pre-swap crash), missing
-    live with complete stage (mid-swap crash), and leftover _old
-    (post-swap crash)."""
-    import os
-
-    from ais_data_pipeline_spark.fsutil import (
-        _legacy_recover_staged_swap as recover_staged_swap,
-        _legacy_staged_swap as staged_swap,
-    )
-
-    def mk(path, marker):
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, marker), "w") as f:
-            f.write("x")
-
-    # window A: crash BEFORE the swap — live intact, stale stage
-    live, stage = str(tmp_path / "a"), str(tmp_path / "a_compact")
-    mk(live, "live"), mk(stage, "stage")
-    recover_staged_swap(live, stage)
-    assert os.path.exists(os.path.join(live, "live")) and not os.path.exists(stage)
-
-    # window B: crash BETWEEN the renames — no live, complete stage + _old
-    live, stage = str(tmp_path / "b"), str(tmp_path / "b_compact")
-    mk(live + "_old", "old"), mk(stage, "stage")
-    recover_staged_swap(live, stage)
-    assert os.path.exists(os.path.join(live, "stage"))  # stage promoted
-    assert not os.path.exists(live + "_old") and not os.path.exists(stage)
-
-    # window C: crash AFTER the swap — live intact, leftover _old
-    live, stage = str(tmp_path / "c"), str(tmp_path / "c_compact")
-    mk(live, "live"), mk(live + "_old", "old")
-    recover_staged_swap(live, stage)
-    assert os.path.exists(os.path.join(live, "live"))
-    assert not os.path.exists(live + "_old")
-
-    # degenerate: stage lost mid-swap — the pre-swap copy restores
-    live, stage = str(tmp_path / "d"), str(tmp_path / "d_compact")
-    mk(live + "_old", "old")
-    recover_staged_swap(live, stage)
-    assert os.path.exists(os.path.join(live, "old"))
-
-    # and the happy path still swaps
-    live, stage = str(tmp_path / "e"), str(tmp_path / "e_compact")
-    mk(live, "v1"), mk(stage, "v2")
-    staged_swap(live, stage)
-    assert os.path.exists(os.path.join(live, "v2"))
-    assert not os.path.exists(live + "_old") and not os.path.exists(stage)
-
-
 def test_readme_registry_counts_current():
     """README's registry-count line must match the live registry
     (regenerate with tools/readme_counts.py)."""
@@ -1916,26 +1859,23 @@ def test_accretion_listing_through_fs_adapter(spark, sf_dir, tmp_path):
     object-store-ready. Three backends, one contract:
 
     - the default local walk (already exercised above) equals an
-      explicit ``local_lister``;
-    - a ``file://`` URI routes through the Hadoop FileSystem gateway
-      (the exact code path s3a:// takes) and yields the same census;
-    - an injected FAKE remote lister — the synthetic listing of an
-      s3a:// index no local glob could see — drives both triggers to
-      the same decisions as a real on-disk layout of the same shape.
+      explicit ``LOCAL_IO``;
+    - the Hadoop FileSystem gateway ``hadoop_io()`` (the exact code
+      path s3a:// takes) yields the same census, and so does a
+      ``file://`` URI;
+    - an injected FAKE remote ``FsIO`` — the synthetic listing of an
+      s3a:// index no local glob could see — drives the trigger to
+      the same decisions as a real on-disk layout of the same shape,
+      for both the dedup and the IVF layout.
     """
     from pyspark.sql import functions as F
 
     from ais_data_pipeline_spark import fsutil
-    from ais_data_pipeline_spark.operators.similarity import (
-        ivf_index_accretion,
-        should_compact_ivf_index,
-    )
+    from ais_data_pipeline_spark.fsutil import should_compact, slice_accretion
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
         dedup_and_append_batch,
-        dedup_index_accretion,
-        should_compact_dedup_index,
     )
 
     docs = read_table(spark, sf_dir, "documents")
@@ -1946,17 +1886,21 @@ def test_accretion_listing_through_fs_adapter(spark, sf_dir, tmp_path):
     dedup_and_append_batch(b1, 0, index, str(tmp_path / "kept"))
 
     # backend equivalence on the real index: default walk == explicit
-    # local lister == hadoop gateway over file:// (same FileSystem API
-    # an s3a:// URI would hit; LocalFileSystem implements it)
-    m_default = dedup_index_accretion(index)
-    m_local = dedup_index_accretion(index, lister=fsutil.local_lister)
-    m_hadoop = dedup_index_accretion(index, lister=fsutil.hadoop_lister)
+    # local IO == hadoop gateway (same FileSystem API an s3a:// URI
+    # would hit; LocalFileSystem implements it)
+    m_default = slice_accretion(index)
+    m_local = slice_accretion(index, fsutil.LOCAL_IO)
+    m_hadoop = slice_accretion(index, fsutil.hadoop_io())
     assert m_default == m_local == m_hadoop
-    # scheme routing picks hadoop for file:// automatically? No —
     # file:// routes local by design (no JVM needed); the census must
     # still agree
-    assert dedup_index_accretion("file://" + index) == m_default
+    assert slice_accretion("file://" + index) == m_default
     assert m_default["slice_bytes"] > 0 and m_default["history_bytes"] > 0
+
+    def fake_io(lister):
+        """A read-only fake object store: the lister's files and no
+        generation pointer (a flat, never-compacted index)."""
+        return fsutil.FsIO(lister, lambda _path: None, None, None)
 
     # fake remote lister: what an s3a:// LIST would return for an
     # index of this shape — history + two accreted slices per table
@@ -1969,30 +1913,26 @@ def test_accretion_listing_through_fs_adapter(spark, sf_dir, tmp_path):
         yield "docs/src_batch=0/_SUCCESS", 0  # non-parquet: ignored
         yield "stray.parquet", 2**30  # wrong depth: ignored
 
-    m_fake = dedup_index_accretion("s3a://bucket/dedup-index", lister=fake_s3_lister)
+    s3 = fake_io(fake_s3_lister)
+    m_fake = slice_accretion("s3a://bucket/dedup-index", s3)
     assert m_fake == {
         "history_bytes": 3 * 400 * 2**20,
         "slice_bytes": 6 * 30 * 2**20,
         "slice_files": 6,
-        "n_slices": 6,
     }
     # 180 MiB accreted vs 1200 MiB history: 0.15 ratio — fires at 0.10,
     # quiet at 0.25, file guard fires alone at 6
-    d = should_compact_dedup_index(
-        "s3a://bucket/dedup-index", slice_ratio=0.10, lister=fake_s3_lister
-    )
+    d = should_compact("s3a://bucket/dedup-index", s3, slice_ratio=0.10)
     assert d["compact"] is True and d["trigger"] == "bytes"
-    d = should_compact_dedup_index(
-        "s3a://bucket/dedup-index", slice_ratio=0.25, lister=fake_s3_lister
-    )
+    d = should_compact("s3a://bucket/dedup-index", s3, slice_ratio=0.25)
     assert d["compact"] is False
-    d = should_compact_dedup_index(
-        "s3a://bucket/dedup-index", slice_ratio=1e9, min_slice_bytes=1 << 60,
-        max_slice_files=6, lister=fake_s3_lister,
+    d = should_compact(
+        "s3a://bucket/dedup-index", s3, slice_ratio=1e9,
+        min_slice_bytes=1 << 60, max_slice_files=6,
     )
     assert d["compact"] is True and d["trigger"] == "files"
 
-    # IVF twin: same adapter, its own layout (list_id=*/src_batch=*)
+    # IVF twin: same census, its own layout (list_id=*/src_batch=*)
     def fake_ivf_lister(root):
         for lid in range(4):
             yield f"list_id={lid}/src_batch=-1/part-000.parquet", 100 * 2**20
@@ -2000,20 +1940,16 @@ def test_accretion_listing_through_fs_adapter(spark, sf_dir, tmp_path):
         yield "list_id=0/src_batch=3/.part-000.parquet.crc", 8  # non-parquet name? ends .crc — ignored
         yield "centroids.parquet", 2**30  # wrong depth: ignored
 
-    m_ivf = ivf_index_accretion("s3a://bucket/ivf", lister=fake_ivf_lister)
+    ivf = fake_io(fake_ivf_lister)
+    m_ivf = slice_accretion("s3a://bucket/ivf", ivf)
     assert m_ivf == {
         "history_bytes": 4 * 100 * 2**20,
         "slice_bytes": 4 * 20 * 2**20,
         "slice_files": 4,
-        "n_slices": 1,
     }
-    d = should_compact_ivf_index(
-        "s3a://bucket/ivf", slice_ratio=0.15, lister=fake_ivf_lister
-    )
+    d = should_compact("s3a://bucket/ivf", ivf, slice_ratio=0.15)
     assert d["compact"] is True and d["trigger"] == "bytes"
-    d = should_compact_ivf_index(
-        "s3a://bucket/ivf", slice_ratio=0.30, lister=fake_ivf_lister
-    )
+    d = should_compact("s3a://bucket/ivf", ivf, slice_ratio=0.30)
     assert d["compact"] is False
 
 
@@ -2176,11 +2112,11 @@ def test_fsutil_hadoop_io_bulk_read_roundtrip(spark, tmp_path):
 
 
 def test_no_rename_swap_callers_in_engine():
-    """Grep gate (r15 brief item 5): the rename-based swap is legacy —
-    nothing in the engine may call it, and the maintenance modules
-    that commit via the generation pointer must stay free of
-    os.rename / rmtree on data directories (renames don't exist on
-    s3a://-class stores)."""
+    """Grep gate (r15 brief item 5): every maintenance op commits via
+    the generation pointer, so the package — ``fsutil`` included —
+    holds no rename-based swap and no ``os.rename`` (renames don't
+    exist on s3a://-class stores), and the maintenance modules stay
+    free of rmtree on data directories."""
     import glob as _glob
     import os
 
@@ -2189,16 +2125,15 @@ def test_no_rename_swap_callers_in_engine():
     for path in _glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         src = open(path).read()
         name = os.path.relpath(path, pkg)
-        if name != "fsutil.py" and "staged_swap" in src:
-            offenders.append((name, "staged_swap"))
+        for needle in ("staged_swap", "os.rename"):
+            if needle in src:
+                offenders.append((name, needle))
         if name in (
             os.path.join("sinks", "parquet.py"),
             os.path.join("streaming", "incremental_dedup.py"),
             os.path.join("operators", "similarity.py"),
-        ):
-            for needle in ("os.rename", "rmtree"):
-                if needle in src:
-                    offenders.append((name, needle))
+        ) and "rmtree" in src:
+            offenders.append((name, "rmtree"))
         if name == os.path.join("sinks", "snapshots.py"):
             # r16: the snapshot sink's manifest/pointer IO is entirely
             # behind the FsIO seam — no raw-os/local-only calls at all

@@ -6,7 +6,7 @@ axis, batch COUNT. A 100 TB ingest runs thousands of micro-batches;
 each appends one ``src_batch=`` slice per index table, every probe
 scans every slice, and the design claim is that periodic
 ``compact_dedup_index`` keeps BOTH probe latency and index file count
-flat over an arbitrarily long run (the crash-safe stage-and-swap
+flat over an arbitrarily long run (the crash-safe generation-commit
 contract, measured rather than pytest-only).
 
 Method: build a seed index, then drive ``dedup_and_append_batch`` (the
@@ -48,7 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 N_BATCHES = int(os.environ.get("INCDEDUP_LONGRUN_BATCHES", 50))
 BATCH_DOCS = int(os.environ.get("INCDEDUP_LONGRUN_DOCS", 2000))
 SEED_DOCS = int(os.environ.get("INCDEDUP_LONGRUN_SEED_DOCS", 20000))
-# threshold policy (production defaults in incremental_dedup.py use a
+# threshold policy (production defaults in fsutil.py use a
 # 64 MiB floor; the fixture index is ~tens of MiB so the floor scales
 # down to keep the GEOMETRIC trigger the active one being measured)
 RATIO = float(os.environ.get("INCDEDUP_LONGRUN_RATIO", 0.25))
@@ -73,11 +73,11 @@ def _mean(xs: list[float]) -> float | None:
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from ais_data_pipeline_spark.fsutil import slice_accretion
     from ais_data_pipeline_spark.session import get_spark
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
         dedup_and_append_batch,
-        dedup_index_accretion,
         maybe_compact_dedup_index,
     )
     from tools.curation_at_scale import generate_corpus
@@ -167,7 +167,7 @@ def main() -> None:
                     "min_slice_mib": MIN_MIB,
                     "max_slice_files": MAX_FILES,
                 },
-                "final_accretion": dedup_index_accretion(idx),
+                "final_accretion": slice_accretion(idx),
                 "index_build_sec": build_sec,
                 "probe_sec_first10_mean": _mean(probe_secs[:10]),
                 "probe_sec_last10_mean": _mean(probe_secs[-10:]),
