@@ -88,32 +88,3 @@ def salted_grouped(
         F.sum("__pn").alias(count_alias),
         *[F.sum(f"__ps_{a}").alias(a) for a in sum_cols.values()],
     )
-
-
-def zscore_per_group(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    out_col: str = "zscore",
-) -> DataFrame:
-    """Per-group z-score via applyInPandas (grouped-map Pandas API):
-    each group arrives as one pandas DataFrame, normalized with ddof=0.
-
-    The JVM-window equivalent is cheaper for plain z-scores; this is
-    the template for grouped transforms that need real Python (sklearn
-    scalers, per-group model scoring). One shuffle on the keys, groups
-    must fit executor memory — salt or pre-aggregate beyond that.
-    """
-    import pandas as pd
-
-    out_fields = df.schema.fields
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    schema += f", {out_col} double"
-
-    def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[value_col].astype("float64")
-        std = v.std(ddof=0)
-        pdf[out_col] = (v - v.mean()) / std if std > 0 else 0.0
-        return pdf
-
-    return df.groupBy(*key_cols).applyInPandas(normalize, schema)

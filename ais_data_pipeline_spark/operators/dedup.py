@@ -573,62 +573,6 @@ def simhash_fingerprints(
     return hashed.select(F.col(id_col), simhash64(F.col("__h")).alias("simhash"))
 
 
-def simhash_near_dup(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ max_hamming, found by
-    block-banding: split 64 bits into (max_hamming+1) blocks — any pair
-    within the distance budget agrees on ≥1 whole block (pigeonhole),
-    so an equi-join per block finds all of them without an all-pairs
-    scan."""
-    n_blocks = max_hamming + 1
-    width = 64 // n_blocks
-    fp = simhash_fingerprints(df, text_col, id_col, seed)
-    blocks = fp.select(
-        F.col(id_col).alias("doc"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.shiftrightunsigned(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", "bk.block", "bk.key")
-    # self-alias join: shared subtree → block shuffle computed once
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block")) & (F.col("a.key") == F.col("b.key")),
-        )
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col("b.simhash").alias("fp_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def embedding_near_dup_exact(
     df: DataFrame,
     threshold: float,
@@ -656,7 +600,8 @@ def embedding_near_dup_exact(
         F.col(id_col).alias("id_b"), F.col("__v").alias("rv"), F.col("__norm").alias("nb")
     )
     sim = F.round(
-        _dot(F.col("lv"), F.col("rv")) / (F.col("na") * F.col("nb")), round_digits
+        F.try_divide(_dot(F.col("lv"), F.col("rv")), F.col("na") * F.col("nb")),
+        round_digits,
     )
     return (
         left.join(right, F.col("id_a") < F.col("id_b"))

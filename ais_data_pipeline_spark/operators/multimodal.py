@@ -219,19 +219,6 @@ def _parse_bmp(data: bytes):
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """The PNG Paeth predictor (PNG spec §9, filter type 4): pick the
-    neighbor (left, up, upper-left) closest to ``a + b - c``, ties
-    broken left → up → upper-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _parse_png(data: bytes):
     """8-bit truecolor PNG → HxWx3 uint8 RGB array, pure stdlib
     (``zlib`` + ``struct``) + numpy. Real decoder: walks the chunk

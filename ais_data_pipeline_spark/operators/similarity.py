@@ -107,14 +107,16 @@ def cosine_similarity_col(vec_col: Column, query: list[float]) -> Column:
     """Cosine(vec, literal query) as a Catalyst expression.
 
     Mirrors the oracle formula exactly: dot/(sqrt(dot_aa)*sqrt(dot_qq)),
-    accumulation in array order — bit-identical across engines.
+    accumulation in array order — bit-identical across engines. A
+    zero-norm vector or query scores NULL (``try_divide``), under ANSI
+    too.
     """
     v = _as_double_array(vec_col)
     q = _lit_vec(query)
     qq = 0.0
     for x in query:
         qq += float(x) * float(x)
-    return _dot(v, q) / (F.sqrt(_dot(v, v)) * F.lit(math.sqrt(qq)))
+    return F.try_divide(_dot(v, q), F.sqrt(_dot(v, v)) * F.lit(math.sqrt(qq)))
 
 
 def cosine_topk(
@@ -143,32 +145,23 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_bucket_col(vec_col: "Column | str", planes: list[list[float]]) -> Column:
+def lsh_bucket_col(vec_col: str, planes: list[list[float]]) -> Column:
     """Pack sign(v·plane) bits into a long bucket id — pure JVM
     expression, usable as a join / partition key.
 
-    Pass the vector COLUMN NAME (str) where you have one: the whole
-    n_planes-term expression then builds as one parsed SQL string
-    (r18 — the Column form costs two HOF-lambda constructions per
-    plane, ~30 ms each on a slow py4j link). Identical parsed tree,
-    identical bit packing either way."""
-    if isinstance(vec_col, str):
-        v_sql = "CAST(`{}` AS ARRAY<DOUBLE>)".format(vec_col.replace("`", "``"))
-        terms = ["CAST(0 AS BIGINT)"]
-        for i, plane in enumerate(planes):
-            dot = _sql_dot(v_sql, _sql_vec(plane))
-            terms.append(
-                f"((CASE WHEN {dot} >= 0 THEN CAST(1 AS BIGINT) "
-                f"ELSE CAST(0 AS BIGINT) END) * CAST({2 ** i} AS BIGINT))"
-            )
-        return F.expr(" + ".join(terms))
-    v = _as_double_array(vec_col)
-    bucket = F.lit(0).cast("long")
+    Takes the vector COLUMN NAME: the whole n_planes-term expression
+    builds as one parsed SQL string (r18 — a Column-built tree costs
+    two HOF-lambda constructions per plane, ~30 ms each on a slow py4j
+    link)."""
+    v_sql = "CAST(`{}` AS ARRAY<DOUBLE>)".format(vec_col.replace("`", "``"))
+    terms = ["CAST(0 AS BIGINT)"]
     for i, plane in enumerate(planes):
-        p = _lit_vec(plane)
-        bit = F.when(_dot(v, p) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + (bit * F.lit(2**i).cast("long"))
-    return bucket
+        dot = _sql_dot(v_sql, _sql_vec(plane))
+        terms.append(
+            f"((CASE WHEN {dot} >= 0 THEN CAST(1 AS BIGINT) "
+            f"ELSE CAST(0 AS BIGINT) END) * CAST({2 ** i} AS BIGINT))"
+        )
+    return F.expr(" + ".join(terms))
 
 
 def bucket_of(vec: list[float], planes: list[list[float]]) -> int:
@@ -669,37 +662,6 @@ def compact_ivf_index(spark, path: str, io=None) -> int:
     return n
 
 
-def maybe_compact_ivf_index(
-    spark,
-    path: str,
-    slice_ratio: float = fsutil.COMPACT_SLICE_RATIO,
-    max_slice_files: int = fsutil.COMPACT_MAX_SLICE_FILES,
-    min_slice_bytes: int = fsutil.COMPACT_MIN_SLICE_BYTES,
-) -> dict | None:
-    """Run ``compact_ivf_index`` iff the slice-compaction policy
-    (``fsutil.should_compact``) fires; returns the decision record
-    (+ wall-clock and row count) or None. Same single-writer
-    maintenance contract as the compactor itself."""
-    import time as _time
-
-    from ais_data_pipeline_spark.observability import log
-
-    decision = fsutil.should_compact(
-        path,
-        slice_ratio=slice_ratio,
-        max_slice_files=max_slice_files,
-        min_slice_bytes=min_slice_bytes,
-    )
-    if not decision["compact"]:
-        return None
-    t0 = _time.perf_counter()
-    rows = compact_ivf_index(spark, path)
-    decision["compact_sec"] = round(_time.perf_counter() - t0, 2)
-    decision["rows"] = rows
-    log("ivf_index_compaction", **decision)
-    return decision
-
-
 def ivf_probe_topk(
     spark,
     index_path: str,
@@ -809,7 +771,7 @@ def pairwise_topk_per_vector(
         "__bucket",
     )
     pairs = left.join(right, "__bucket").filter(F.col("left_id") != F.col("right_id"))
-    sim = _dot(F.col("lv"), F.col("rv")) / (F.col("ln") * F.col("rn"))
+    sim = F.try_divide(_dot(F.col("lv"), F.col("rv")), F.col("ln") * F.col("rn"))
     scored = pairs.select("left_id", "right_id", F.round(sim, 6).alias("cos_sim"))
     w = Window.partitionBy("left_id").orderBy(F.desc("cos_sim"), F.asc("right_id"))
     return (
@@ -872,6 +834,26 @@ def cosine_topk_pandas(
     )
 
 
+def _centroid_scores(
+    cent_rows: list[tuple[int, list[float]]], metric: str
+) -> Column:
+    """The k-score array of ``__v`` (squared norm ``__vv``) against
+    driver-literal centroids, built as ONE SQL string (r18: one py4j
+    round-trip instead of ~50 per centroid; see _sql_dot). Cosine
+    divides with ``try_divide``: a zero vector or zero centroid scores
+    NULL under ANSI too, instead of raising DIVIDE_BY_ZERO."""
+    sims = []
+    for _cid, cvec in cent_rows:
+        if metric == "l2":
+            sims.append(f"(- {_sql_l2sq_pre('`__vv`', '`__v`', cvec)})")
+        else:
+            sims.append(
+                f"try_divide({_sql_dot('`__v`', _sql_vec(cvec))},"
+                f" SQRT(`__vv`) * {_sql_dbl(math.sqrt(_self_dot(cvec)))})"
+            )
+    return F.expr("array(" + ", ".join(sims) + ")")
+
+
 def kmeans_lloyd(
     df: DataFrame,
     k: int = 8,
@@ -923,19 +905,8 @@ def kmeans_lloyd(
         # dot(v,v) is identical across all k scores — materialize it
         # once per row (own projection), not k times inside the array.
         pre = e.select("__v", _dot(v, v).alias("__vv"))
-        # the k-score array builds as ONE SQL string (r18: one py4j
-        # round-trip instead of ~50 per centroid; identical parsed tree)
-        sims = []
-        for _cid, cvec in cent_rows:
-            if metric == "l2":
-                sims.append(f"(- {_sql_l2sq_pre('`__vv`', '`__v`', cvec)})")
-            else:
-                sims.append(
-                    f"({_sql_dot('`__v`', _sql_vec(cvec))}"
-                    f" / (SQRT(`__vv`) * {_sql_dbl(math.sqrt(_self_dot(cvec)))}))"
-                )
         staged = pre.select(
-            "__v", F.expr("array(" + ", ".join(sims) + ")").alias("__sims")
+            "__v", _centroid_scores(cent_rows, metric).alias("__sims")
         )
         ids = F.lit([int(cid) for cid, _ in cent_rows]).cast("array<bigint>")
         pos = F.array_position(F.col("__sims"), F.array_max(F.col("__sims")))
@@ -996,18 +967,8 @@ def kmeans_assign(
     pre = df.select(
         *cols, _as_double_array(F.col(vec_col)).alias("__v")
     ).select(*cols, "__v", _dot(F.col("__v"), F.col("__v")).alias("__vv"))
-    # one SQL string for the whole k-score array (r18; see _sql_dot)
-    sims = []
-    for _cid, cvec in cent_rows:
-        if metric == "l2":
-            sims.append(f"(- {_sql_l2sq_pre('`__vv`', '`__v`', cvec)})")
-        else:
-            sims.append(
-                f"({_sql_dot('`__v`', _sql_vec(cvec))}"
-                f" / (SQRT(`__vv`) * {_sql_dbl(math.sqrt(_self_dot(cvec)))}))"
-            )
     staged = pre.select(
-        *cols, "__v", F.expr("array(" + ", ".join(sims) + ")").alias("__sims")
+        *cols, "__v", _centroid_scores(cent_rows, metric).alias("__sims")
     )
     ids = F.lit([int(cid) for cid, _ in cent_rows]).cast("array<bigint>")
     pos = F.array_position(F.col("__sims"), F.array_max(F.col("__sims"))).cast("int")
@@ -1082,7 +1043,9 @@ def semdedup_clusters(
     )
     a = normed.alias("a")
     b = normed.alias("b")
-    cos = _dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.__n") * F.col("b.__n"))
+    cos = F.try_divide(
+        _dot(F.col("a.__v"), F.col("b.__v")), F.col("a.__n") * F.col("b.__n")
+    )
     pairs = a.join(
         b,
         (F.col("a.list_id") == F.col("b.list_id"))
@@ -1654,7 +1617,7 @@ def mmr_topk(
     local = local_df(spark, [tuple(r) for r in pool_df.collect()], pool_df.schema)
     a, b = local.alias("a"), local.alias("b")
     va, vb = F.col("a.__v"), F.col("b.__v")
-    sim = _dot(va, vb) / (F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb)))
+    sim = F.try_divide(_dot(va, vb), F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb)))
     sims_df = a.join(b, F.col(f"a.{id_col}") != F.col(f"b.{id_col}")).select(
         F.col(f"a.{id_col}").alias("ca"),
         F.col(f"b.{id_col}").alias("cb"),

@@ -14,12 +14,12 @@ from pyspark.sql import types as T
 def parse_date_lenient(df: DataFrame, columns: list[str], fmt: str | None = None) -> DataFrame:
     """String→Date with unparseable → null (reference T1,
     ``str.strptime(pl.Date, strict=False)``, notebooks/
-    preprocessing_with_polars.ipynb:1490-1494). Under the engine's
-    non-ANSI session ``to_date`` already nulls on failure; ``try_to_date``
-    semantics would be the ANSI-safe spelling."""
+    preprocessing_with_polars.ipynb:1490-1494). ``try_to_date`` nulls
+    on failure under ANSI too, where ``to_date`` raises
+    CAST_INVALID_INPUT; without ANSI both optimize to the same plan."""
     out = df
     for c in columns:
-        out = out.withColumn(c, F.to_date(F.col(c), fmt) if fmt else F.to_date(F.col(c)))
+        out = out.withColumn(c, F.try_to_date(F.col(c), fmt))
     return out
 
 

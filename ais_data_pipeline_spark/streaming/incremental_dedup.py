@@ -839,7 +839,9 @@ def dedup_embedding_batch_against_index(
 
     def verified_drops(pairs: DataFrame) -> DataFrame:
         # pairs: (vec_id, v, n, other_v, other_n) — drops on any match
-        c = _dot(F.col("v"), F.col("other_v")) / (F.col("n") * F.col("other_n"))
+        c = F.try_divide(
+            _dot(F.col("v"), F.col("other_v")), F.col("n") * F.col("other_n")
+        )
         return (
             pairs.withColumn("__c", F.round(c, round_digits))
             .filter(F.col("__c") >= threshold)

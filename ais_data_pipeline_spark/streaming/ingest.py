@@ -14,67 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def run_with_quarantine(
-    stream_df: DataFrame,
-    good_predicate,
-    main_path: str,
-    quarantine_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Streaming single-pass multi-sink: split each micro-batch on a
-    predicate and write passers → main, violators → quarantine.
-
-    Batch Spark needs persist + two filtered writes for K4 (SURVEY §7
-    'hard parts'); in streaming, ``foreachBatch`` hands every
-    micro-batch over as a bounded DataFrame, so the split happens once
-    per batch. Null predicate results quarantine, matching the batch
-    writer.
-
-    Exactly-once effect: foreachBatch delivery is AT-LEAST-once, so
-    both sinks write through the per-batch-partition overwrite
-    (``_write_slice`` — the incremental-dedup sink's idempotence
-    recipe): a replay rewrites exactly its own ``src_batch=``
-    directory. The previous plain ``mode("append")`` writes duplicated
-    the whole batch in ``main_path`` on any crash between the two
-    writes (round-11 review — the exact replay class the r10 sweep
-    fixed in the dedup/IVF sinks).
-
-    Sink-reuse hazard (same contract as the incremental-dedup sink):
-    ONE checkpoint per (main_path, quarantine_path) pair, forever. A
-    fresh checkpoint restarts batch ids at 0, so pointing it at an
-    existing sink silently OVERWRITES the old ``src_batch=0,1,...``
-    slices. Readers: both sinks carry a ``src_batch`` partition column
-    (the idempotence key); aggregate over it or drop it downstream.
-    """
-    from pyspark.sql import functions as F
-
-    from ais_data_pipeline_spark.streaming.incremental_dedup import _write_slice
-
-    def split_write(batch_df: DataFrame, batch_id: int) -> None:
-        tagged = batch_df.withColumn(
-            "__good", F.coalesce(good_predicate.cast("boolean"), F.lit(False))
-        ).persist()
-        try:
-            _write_slice(
-                tagged.filter(F.col("__good")).drop("__good"), main_path, batch_id
-            )
-            _write_slice(
-                tagged.filter(~F.col("__good")).drop("__good"),
-                quarantine_path,
-                batch_id,
-            )
-        finally:
-            tagged.unpersist()
-
-    q = (
-        stream_df.writeStream.foreachBatch(split_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_upsert_sink(
     stream_df: DataFrame,
     table_path: str,

@@ -99,8 +99,8 @@ EXTENDED = [
     "frame_pixel_stats",
     # r16: the WARC/WET ingest tier — fixture shard pack + the
     # streaming one-task-per-file record parse (gzip members + framed
-    # payloads through Arrow batches); tools/warc_throughput.py is the
-    # sizing probe, this leg keeps wall-clock regressions visible
+    # payloads through Arrow batches); this leg keeps wall-clock
+    # regressions visible
     "warc_record_stats",
     # r16: the CCNet-style bigram LM (train + score in two corpus
     # passes — vocab top-k, lag window, bigram self-join); the text

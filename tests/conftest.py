@@ -15,7 +15,12 @@ SMOKE_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="ais_data_pipeline_spark_tests", extra_conf={"spark.ui.enabled": "false"})
+    conf = {"spark.ui.enabled": "false"}
+    # SPARK_GRAFT_ANSI=1 runs the suite under ANSI mode, the default of a
+    # vanilla Spark 4 session (the engine's own session turns it off)
+    if os.environ.get("SPARK_GRAFT_ANSI") == "1":
+        conf["spark.sql.ansi.enabled"] = "true"
+    s = get_spark(app_name="ais_data_pipeline_spark_tests", extra_conf=conf)
     yield s
 
 

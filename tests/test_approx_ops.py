@@ -328,6 +328,7 @@ def test_similarity_null_zero_and_empty_hardening(spark, tmp_path):
     fix."""
     from pyspark.sql import functions as F  # noqa: F401
 
+    from ais_data_pipeline_spark.operators.dedup import embedding_near_dup_exact
     from ais_data_pipeline_spark.operators.similarity import (
         build_ann_index,
         build_ivf_index,
@@ -339,6 +340,11 @@ def test_similarity_null_zero_and_empty_hardening(spark, tmp_path):
         cosine_topk_pandas,
         pairwise_topk_per_vector,
         pq_train_codebooks,
+        semdedup_clusters,
+    )
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_embedding_dedup_index,
+        dedup_embedding_batch_against_index,
     )
 
     S = "vec_id bigint, embedding array<double>"
@@ -399,6 +405,35 @@ def test_similarity_null_zero_and_empty_hardening(spark, tmp_path):
     assert [
         r["vec_id"] for r in mmr_topk(dm, [1.0, 0.0], k=3, pool=10).collect()
     ] == [0, 1]
+
+    # ANSI mode: every cosine against the zero vector (or the zero
+    # centroid it trains) is NULL, not a DIVIDE_BY_ZERO that fails the
+    # query, so each operator returns what it returns without ANSI
+    def zero_vector_results(tag):
+        ivf, emb = f"{base}/ivf_{tag}", f"{base}/emb_{tag}"
+        build_ivf_index(z, ivf, n_centroids=2)
+        build_embedding_dedup_index(z, emb, n_planes=4)
+        z3 = spark.createDataFrame([(3, [0.0, 0.0])], S)
+        probed = ivf_probe_topk(spark, ivf, [1.0, 1.0], k=3, nprobe=2)
+        return (
+            sorted(spark.read.parquet(ivf).select("vec_id", "list_id").collect()),
+            sorted(r["vec_id"] for r in probed.collect()),
+            kmeans_lloyd(z, k=2, iters=1).collect(),
+            [r["vec_id"] for r in mmr_topk(dm, [1.0, 0.0], k=3, pool=10).collect()],
+            sorted(pairwise_topk_per_vector(z.union(z3), n_planes=4).collect()),
+            sorted(semdedup_clusters(z, k=2).collect()),
+            sorted(embedding_near_dup_exact(z, 0.5).collect()),
+            sorted(dedup_embedding_batch_against_index(z3, emb).collect()),
+        )
+
+    plain = zero_vector_results("plain")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        strict = zero_vector_results("ansi")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert strict == plain
 
 
 def test_ivf_index_protocol_hardening(spark, tmp_path):

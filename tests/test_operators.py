@@ -299,10 +299,7 @@ def test_key_set_both_regimes(spark, monkeypatch, lim):
 
 
 def test_simhash_properties(spark):
-    from ais_data_pipeline_spark.operators.dedup import (
-        simhash_fingerprints,
-        simhash_near_dup,
-    )
+    from ais_data_pipeline_spark.operators.dedup import simhash_fingerprints
 
     rows = [
         (0, "spark shuffle join aggregate window partition broadcast skew salt"),
@@ -315,11 +312,6 @@ def test_simhash_properties(spark):
     assert fp[0] == fp[3]  # identical text → identical fingerprint
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")  # noqa: E731
     assert ham(fp[0], fp[1]) < ham(fp[0], fp[2])  # near-dup closer than unrelated
-
-    pairs = {
-        (r["doc_a"], r["doc_b"]) for r in simhash_near_dup(df, max_hamming=3).collect()
-    }
-    assert (0, 3) in pairs
 
 
 def test_lsh_cosine_mechanism_and_recall(spark, sf_dir):
@@ -339,7 +331,7 @@ def test_lsh_cosine_mechanism_and_recall(spark, sf_dir):
     planes = random_hyperplanes(len(q), 4, seed=42)
     approx_rows = cosine_topk_lsh(rest, q, k=10, n_planes=4, multiprobe_bits=2).collect()
     approx = [r["vec_id"] for r in approx_rows]
-    bucketed = rest.withColumn("__b", lsh_bucket_col(F.col("embedding"), planes))
+    bucketed = rest.withColumn("__b", lsh_bucket_col("embedding", planes))
     cand_ids = {r["vec_id"] for r in bucketed.select("vec_id", "__b").collect()}
     assert set(approx) <= cand_ids  # candidates only
     # results are ranked by true cosine within candidates (same as exact on that subset)
@@ -505,7 +497,6 @@ def test_png_decode_filters_and_contracts(spark):
 
     from ais_data_pipeline_spark.localrel import local_df
     from ais_data_pipeline_spark.operators.multimodal import (
-        _paeth,
         _png_chunk,
         _PNG_SIG,
         decode_image_pixels,
@@ -516,12 +507,6 @@ def test_png_decode_filters_and_contracts(spark):
         png_dims,
         synth_pixel_value,
     )
-
-    # Paeth predictor spec vectors (PNG spec §9): tie-break order
-    # left → up → upper-left, and the |p - x| minimization
-    assert _paeth(3, 3, 0) == 3  # pa == pb: left wins
-    assert _paeth(100, 90, 95) == 95  # pc strictly smallest: upper-left
-    assert _paeth(0, 10, 0) == 10  # pb < pa: up
 
     def png_of(w, h, color_type, scanlines, interlace=0):
         ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, interlace)
@@ -1603,50 +1588,6 @@ def test_counters_and_log(capsys):
     assert json.loads(err.strip().splitlines()[-1])["event"] == "test_event"
 
 
-def test_streaming_quarantine_foreachbatch(spark, tmp_path):
-    """K4's single-pass multi-sink, streaming edition: each micro-batch
-    splits once into main + quarantine with checkpointed bookkeeping."""
-    from ais_data_pipeline_spark.streaming.ingest import run_with_quarantine
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [(1, 100), (2, 5_000_000_000), (3, 250), (4, None)],
-        "row_id long, amount long",
-    )
-    df.coalesce(1).write.parquet(str(src / "batch1"))
-
-    stream = spark.readStream.schema(df.schema).parquet(str(src / "*"))
-    main, quar = str(tmp_path / "main"), str(tmp_path / "quarantine")
-    run_with_quarantine(
-        stream,
-        F.col("amount").between(-(2**31), 2**31 - 1),
-        main,
-        quar,
-        str(tmp_path / "ckpt"),
-    )
-    main_ids = {r["row_id"] for r in spark.read.parquet(main).collect()}
-    quar_ids = {r["row_id"] for r in spark.read.parquet(quar).collect()}
-    assert main_ids == {1, 3}
-    assert quar_ids == {2, 4}  # overflow AND null-predicate rows quarantine
-
-    # replay idempotence (round-11 review): foreachBatch delivery is
-    # at-least-once — re-delivering the same data as the same batch id
-    # (fresh checkpoint, same sinks) must NOT duplicate rows; the old
-    # mode("append") writes doubled main on replay
-    run_with_quarantine(
-        stream,
-        F.col("amount").between(-(2**31), 2**31 - 1),
-        main,
-        quar,
-        str(tmp_path / "ckpt_replay"),
-    )
-    main_rows = spark.read.parquet(main).collect()
-    quar_rows = spark.read.parquet(quar).collect()
-    assert sorted(r["row_id"] for r in main_rows) == [1, 3]
-    assert sorted(r["row_id"] for r in quar_rows) == [2, 4]
-
-
 def test_observation_metrics(spark, sf_dir):
     """M2 parity, Spark-native: df.observe() collects named metrics on
     the executors during a normal action — counters without a second
@@ -1686,33 +1627,6 @@ def test_pandas_udf_topk_matches_jvm(spark, sf_dir):
     assert [i for i, _ in jvm] == [i for i, _ in pnd]
     for (_, a), (_, b) in zip(jvm, pnd):
         assert abs(a - b) <= 1e-4
-
-
-def test_apply_in_pandas_zscore_matches_window(spark, sf_dir):
-    """Grouped-map Pandas z-score must equal the JVM window z-score
-    (same ddof=0 definition) within float tolerance."""
-    from pyspark.sql import Window
-
-    from ais_data_pipeline_spark.operators.aggregates import zscore_per_group
-    from ais_data_pipeline_spark.sources.parquet import read_table
-
-    e = read_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    got = {
-        r["event_id"]: r["zscore"]
-        for r in zscore_per_group(e, ["event_type"], "value").collect()
-    }
-    w = Window.partitionBy("event_type")
-    mean = F.avg("value").over(w)
-    std = F.stddev_pop("value").over(w)
-    expect = {
-        r["event_id"]: r["z"]
-        for r in e.select(
-            "event_id", ((F.col("value") - mean) / std).alias("z")
-        ).collect()
-    }
-    assert set(got) == set(expect)
-    for k, v in got.items():
-        assert abs(v - expect[k]) <= 1e-9
 
 
 def test_schema_evolution_merge(spark, tmp_path):
@@ -1932,7 +1846,7 @@ def test_pairwise_auto_planes_subquadratic(spark):
         n_planes = max(4, _m.ceil(_m.log2(max(n, 2) / 64.0)))
         planes = random_hyperplanes(8, n_planes, 42)
         hist = (
-            df.select(lsh_bucket_col(F.col("embedding"), planes).alias("b"))
+            df.select(lsh_bucket_col("embedding", planes).alias("b"))
             .groupBy("b")
             .count()
             .collect()
@@ -3371,8 +3285,8 @@ def test_ivf_compaction_threshold_policy(spark, tmp_path):
     from ais_data_pipeline_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
+        compact_ivf_index,
         ivf_probe_topk,
-        maybe_compact_ivf_index,
     )
     from ais_data_pipeline_spark.sources.parquet import read_table
 
@@ -3412,11 +3326,7 @@ def test_ivf_compaction_threshold_policy(spark, tmp_path):
 
     qv = [float(x) for x in e.filter(k == 0).first()["embedding"]]
     before = ivf_probe_topk(spark, path, qv, k=10, nprobe=2).collect()
-    assert maybe_compact_ivf_index(spark, path, slice_ratio=hi,
-                                   min_slice_bytes=0) is None  # quiet policy
-    res = maybe_compact_ivf_index(spark, path, slice_ratio=0.01,
-                                  min_slice_bytes=0)
-    assert res is not None and res["trigger"] == "bytes" and res["rows"] > 0
+    assert compact_ivf_index(spark, path) > 0
     m2 = slice_accretion(path)
     assert m2["slice_bytes"] == 0 and m2["slice_files"] == 0
     assert before == ivf_probe_topk(spark, path, qv, k=10, nprobe=2).collect()

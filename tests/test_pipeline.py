@@ -110,6 +110,27 @@ def test_pipeline_invariants(spark, fixture_csv, tmp_path):
     quarantined = spark.read.parquet(quar)
     assert quarantined.filter("contract_amount > 2147483647").count() == 5
 
+    # ANSI mode (a vanilla Spark 4 session's default): the garbage dates
+    # still parse to null instead of failing the run with
+    # CAST_INVALID_INPUT
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        strict = run_pipeline(
+            spark, fixture_csv, str(tmp_path / "ansi_main"),
+            str(tmp_path / "ansi_quar"), schema=SCHEMA,
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert (strict.rows_out, strict.rows_quarantined) == (
+        res.rows_out, res.rows_quarantined
+    )
+    null_ends = "contract_end_date IS NULL"
+    assert (
+        spark.read.parquet(str(tmp_path / "ansi_main")).filter(null_ends).count()
+        == main.filter(null_ends).count()
+    )
+
 
 def test_pipeline_downcast_decisions(spark, fixture_csv, tmp_path):
     res = run_pipeline(
@@ -1647,56 +1668,6 @@ def test_curation_plan_matches_registry_query(spark, sf_dir, tmp_path):
     kept = spark.read.parquet(out)
     assert kept.count() == res.n_kept
     assert set(kept.columns) == set(docs.columns)
-
-
-def test_retrieval_plan_matches_direct_operators(spark, tmp_path):
-    """plans.build_vector_index / VectorIndex.topk must serve exactly
-    what the underlying (oracle-verified) operators serve — same
-    builds, same probes, row-for-row — for all three index kinds plus
-    the ivfpq rerank path. The plan layer adds build/probe M1 events
-    and a reconstructable handle, never different results."""
-    from pyspark.sql import functions as F
-
-    from ais_data_pipeline_spark.operators import similarity as S
-    from ais_data_pipeline_spark.plans.retrieval import build_vector_index
-    from ais_data_pipeline_spark.sources.parquet import read_table
-
-    e = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    root = str(tmp_path)
-
-    def rows(df):
-        return [tuple(r) for r in df.collect()]
-
-    ann = build_vector_index(spark, e, root + "/p_ann", kind="ann", n_planes=8)
-    S.build_ann_index(e, root + "/d_ann", n_planes=8)
-    assert rows(ann.topk(qv, k=5)) == rows(
-        S.cosine_topk_indexed(spark, root + "/d_ann", qv, k=5, n_planes=8)
-    )
-
-    ivf = build_vector_index(spark, e, root + "/p_ivf", kind="ivf", n_centroids=8)
-    S.build_ivf_index(e, root + "/d_ivf", n_centroids=8)
-    assert rows(ivf.topk(qv, k=5, nprobe=2)) == rows(
-        S.ivf_probe_topk(spark, root + "/d_ivf", qv, k=5, nprobe=2)
-    )
-
-    pq = build_vector_index(
-        spark, e, root + "/p_pq", kind="ivfpq", n_centroids=8, m=4, k_codes=8
-    )
-    S.build_ivfpq_index(e, root + "/d_pq", n_centroids=8, m=4, k=8)
-    assert rows(pq.topk(qv, k=5, nprobe=2)) == rows(
-        S.ivfpq_probe_topk(spark, root + "/d_pq", qv, k=5, nprobe=2)
-    )
-    assert rows(pq.topk(qv, k=5, nprobe=2, rerank=20, vectors_df=e)) == rows(
-        S.ivfpq_rerank_topk(spark, root + "/d_pq", e, qv, k=5, nprobe=2, n_candidates=20)
-    )
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        build_vector_index(spark, e, root + "/bad", kind="hnsw")
-    with _pytest.raises(ValueError):
-        pq.topk(qv, rerank=10)  # rerank without vectors_df
 
 
 def test_local_df_arrow_relation_contract(spark):

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Incremental-dedup LONG-HORIZON probe (round-10 verdict item 7): the
-flat-probe table proves O(batch) latency vs index SIZE and
-incdedup_throughput.py prices batch SIZE — this probe covers the third
-axis, batch COUNT. A 100 TB ingest runs thousands of micro-batches;
+flat-probe table proves O(batch) latency vs index SIZE and SCALING.md's
+throughput table prices batch SIZE — this probe covers the third axis,
+batch COUNT. A 100 TB ingest runs thousands of micro-batches;
 each appends one ``src_batch=`` slice per index table, every probe
 scans every slice, and the design claim is that periodic
 ``compact_dedup_index`` keeps BOTH probe latency and index file count
