@@ -43,8 +43,9 @@ Index layout: two tables plus a statistic, each partitioned by
   same files, so column pruning keeps each leg's IO to its own column.
   The text is stored rather than its shingle hashes: zstd compresses
   text, while random 64-bit hashes do not compress at all.
-- ``buckets`` (doc, band, bucket): the MinHash LSH band rows, bloom
-  filter on ``bucket``.
+- ``buckets`` (doc, band, bucket): the MinHash LSH band rows. No
+  bloom filter: the probe streams this table past the broadcast batch
+  band rows and never pushes a bucket IN-list into its scan.
 - ``bucket_stats`` (band, bucket, n): per-slice hot-bucket counts read
   by the ``max_bucket_size`` guard.
 Indexes written in an earlier layout (a ``docs`` table of shingle
@@ -317,8 +318,7 @@ def build_dedup_index(
         ),
         lambda: _write_slice(
             bands_df, os.path.join(root, "buckets"), HISTORY_BATCH,
-            bloom_col="bucket", single_file=False,
-            approx_rows=n_hist * bands,  # at most one row per doc per band
+            single_file=False,
         ),
         lambda: _write_bucket_stats(bands_df, root, HISTORY_BATCH),
     )
@@ -464,14 +464,17 @@ def _dedup_batch_parts(
     clean-replay test). Partition pruning makes the filter free.
 
     When the batch is small (``n_in <= util.PUSHDOWN_LIMIT``), its hash
-    set — and its bucket set, when that too fits under the limit —
-    additionally pushes into the index scans as literal IN-filters:
-    the docs and buckets tables are written with
-    parquet bloom filters on those columns, so the reader skips whole
-    row groups holding none of the probed values — for a dup-free
-    batch the "scan" touches footers and bloom bitsets, not data
-    pages. That is what keeps probe IO sub-linear in corpus size, on
-    top of staying shuffle-free.
+    set additionally pushes into the docs scan as a literal IN-filter:
+    the docs table is written with a parquet bloom filter on
+    ``text_hash``, so the reader skips whole row groups holding none
+    of the probed hashes — for a dup-free batch the exact probe
+    touches footers and bloom bitsets, not data pages. The buckets
+    scan takes no IN-filter at any batch size: a batch's bucket set is
+    sixteen times its doc count, and a batch that shares any bucket
+    with history cannot skip the large history row groups, so from
+    100 docs on the IN path measured slower than streaming the whole
+    table past the broadcast band rows (SCALING.md, "Bucket leg:
+    broadcast only").
 
     Job shape (the per-micro-batch job floor is the leg's dominant
     cost): ONE materialize pins everything the batch derives —
@@ -480,8 +483,8 @@ def _dedup_batch_parts(
     band array (``minhash_band_structs_sql``) — with ``n_in`` riding it
     as an Observation. Band rows are then a narrow explode of the
     pinned frame per consumer. A small batch then runs two more
-    queries: one shuffle-free collect of (hash, bucket array) rows,
-    deduplicated into both probe sets on the driver; a large batch
+    queries: one shuffle-free collect of its text hashes,
+    deduplicated into the probe set on the driver; a large batch
     skips that collect. The drop-set DAG has no distinct() and no
     shuffle: the index tables stream past broadcasts of the batch
     side, the legs share one band-row broadcast and one (doc,
@@ -589,34 +592,6 @@ def _dedup_batch_parts(
             F.broadcast(hot), ["band", "bucket"], "left_anti"
         ).transform(materialize)
 
-    batch_hashes: list | None = None
-    batch_buckets: list | None = None
-    if n_in <= util.PUSHDOWN_LIMIT:
-        # Small batch: its probe sets come from ONE shuffle-free collect
-        # of the pinned frame — (text_hash, this row's bucket array) —
-        # deduplicated here on the driver, not by two distinct()
-        # shuffles. The hashes always fit under the limit (at most n_in
-        # of them). The buckets are collected before any hot-bucket
-        # pruning, so under a cap they are a superset of bands_b's: the
-        # IN-filter only prunes the scan, and the join below still
-        # matches the composite key.
-        hashes, buckets = set(), set()
-        for h, bks in enriched.select(
-            "text_hash", F.col("__bands.bucket")
-        ).collect():
-            if h is not None:  # a NULL never matches the probe join
-                hashes.add(h)
-            buckets.update(bks or ())
-        batch_hashes = sorted(hashes)
-        if len(buckets) <= util.PUSHDOWN_LIMIT:
-            batch_buckets = sorted(buckets)
-            # This filter removes no row. The index leg's join would
-            # infer it onto its band-row broadcast alone from the
-            # IN-filtered bucket scan; stated here, both band-row
-            # broadcasts carry it and stay one exchange (one job fewer
-            # per batch).
-            bands_b = bands_b.filter(in_values_cond("bucket", batch_buckets))
-
     def index_scan(table: str, schema: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(os.path.join(root, table))
         if exclude_batch is not None:
@@ -632,13 +607,14 @@ def _dedup_batch_parts(
     # verify side, batch hashes, index candidate pairs.
     batch_sh = feats.select("doc", "shingles")
 
-    # (2) exact, vs index: the docs scan projected to text_hash
-    # (IN-filtered when small: bloom row-group skipping) against the
-    # broadcast batch hashes
+    # (2) exact, vs index: the docs scan projected to text_hash against
+    # the broadcast batch hashes. A small batch's hashes (at most n_in)
+    # also filter the scan as a literal IN-list, from one shuffle-free
+    # collect of the pinned frame: bloom row-group skipping.
     hist_docs = index_scan("docs", _DOCS_SCHEMA)
     hist_hashes = hist_docs.select("text_hash")
-    if batch_hashes is not None:
-        hist_hashes = hist_hashes.filter(in_values_cond("text_hash", batch_hashes))
+    if n_in <= util.PUSHDOWN_LIMIT:
+        hist_hashes = KeySet.collect(enriched, "text_hash", n_in).semi(hist_hashes)
     exact_x = (
         hist_hashes
         .join(F.broadcast(feats.select("doc", "text_hash")), "text_hash")
@@ -677,22 +653,18 @@ def _dedup_batch_parts(
         threshold,
     )
 
-    # (4) near-dup, vs index: the bucket table scan (IN-filtered on the
-    # 64-bit bucket alone when small — the composite (band, bucket)
-    # isn't IN-pushable) against the broadcast batch band rows, then
-    # the docs scan projected to text against the broadcast candidate
-    # pairs. A pair whose two texts hash equal is skipped before any
-    # shingling: its batch doc is already an exact_x drop (an exact
-    # copy matches in every band, so these are most candidate rows),
-    # and NULL text never near-drops. The remaining index texts are
-    # shingled in projections BELOW the verify join: above a join the
-    # Jaccard filter is pushed into, the split would be inlined into
-    # the shingling lambda and re-run per token.
-    hist_buckets = index_scan("buckets", _BUCKETS_SCHEMA)
-    if batch_buckets is not None:
-        hist_buckets = hist_buckets.filter(in_values_cond("bucket", batch_buckets))
+    # (4) near-dup, vs index: the whole bucket table scan streamed past
+    # the broadcast batch band rows (no IN-filter, see the docstring),
+    # then the docs scan projected to text against the broadcast
+    # candidate pairs. A pair whose two texts hash equal is skipped
+    # before any shingling: its batch doc is already an exact_x drop
+    # (an exact copy matches in every band, so these are most candidate
+    # rows), and NULL text never near-drops. The remaining index texts
+    # are shingled in projections BELOW the verify join: above a join
+    # the Jaccard filter is pushed into, the split would be inlined
+    # into the shingling lambda and re-run per token.
     cands_x = (
-        hist_buckets.withColumnRenamed("doc", "other")
+        index_scan("buckets", _BUCKETS_SCHEMA).withColumnRenamed("doc", "other")
         .join(F.broadcast(bands_b), ["band", "bucket"])
         .select("doc", "other", "text_hash")
     )
@@ -978,7 +950,7 @@ def compact_dedup_index(
     io = io or fsutil.io_for(index_path)
     specs = [
         ("docs", _DOCS_SCHEMA, None, "text_hash"),
-        ("buckets", _BUCKETS_SCHEMA, None, "bucket"),
+        ("buckets", _BUCKETS_SCHEMA, None, None),
         ("bucket_stats", _STATS_SCHEMA, "sum", None),
     ]
     names = [name for name, _, _, _ in specs] + [LAYOUT_MARKER]
@@ -1199,7 +1171,6 @@ def dedup_and_append_batch(
         ),
         lambda: _write_slice(
             surv_bands, os.path.join(root, "buckets"), batch_id,
-            bloom_col="bucket",
             approx_rows=n_kept_est * bands,  # one band row per doc per band
         ),
         lambda: _write_bucket_stats(

@@ -467,9 +467,7 @@ def test_incremental_dedup_large_batch_regime_equivalent(
     Force the LARGE regime (PUSHDOWN_LIMIT=-1: no batch, not even an
     empty one, is small) on the same batches, with and without a
     hot-bucket cap — kept rows, accounting, and every index table must
-    be bit-identical. Under the cap the small regime's collected bucket
-    set is a superset of the hot-pruned band rows, which must not
-    change what the composite-key join matches."""
+    be bit-identical."""
     from ais_data_pipeline_spark.operators import util
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
@@ -515,8 +513,8 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
 ):
     """The single-file funnel sizes each of the four slice writes of a
     batch from ``n_kept_est = n_in - n_drops`` (times the band count for
-    the band and stats slices), and the same bound sizes the bloom
-    filters of the docs and buckets slices. That estimate must bound
+    the band and stats slices), and the same bound sizes the docs
+    slice's bloom filter. That estimate must bound
     the rows each write really produces, in both regimes: duplicate ids
     make it over-estimate, and a NULL id (never removable by the
     anti-join) must not make it under-estimate — an under-sized bloom
@@ -642,17 +640,20 @@ def _scan_output_rows(df) -> int:
 
 
 def test_incremental_dedup_bloom_filters_sized_and_skip(spark, sf_dir, tmp_path):
-    """Each index slice's bloom filter is sized from the writer's row
+    """Each docs slice's bloom filter is sized from the writer's row
     bound at ``BLOOM_FPP`` instead of parquet-mr's default 1 MiB
     bitset, and still lets a ``PUSHDOWN_LIMIT``-sized IN-list skip the
-    slices holding none of its values.
+    slices holding none of its values. The buckets slices carry no
+    bloom filter at all: no probe pushes a bucket IN-list.
 
-    (a) In every docs and buckets slice file, the bytes that are
-    neither column-chunk data nor footer (bloom filters, page indexes,
-    magic) stay far below 1 MiB. (b) 16 slices of 880 hashes, probed
-    with 10 000 values of which only one slice holds any, scan at most
-    two slices' rows; at parquet's default 1 % rate every slice would
-    be a false positive."""
+    (a) In every slice file, the bytes that are neither column-chunk
+    data nor footer (bloom filters, page indexes, magic) stay far below
+    1 MiB for docs, and within the page indexes' few hundred bytes for
+    buckets — history, per-batch and compacted slices alike (a bucket
+    bloom filter sized for even these 2 000-row slices takes 16 KiB).
+    (b) 16 slices of 880 hashes, probed with 10 000 values of which
+    only one slice holds any, scan at most two slices' rows; at
+    parquet's default 1 % rate every slice would be a false positive."""
     import glob as _glob
     import hashlib
 
@@ -678,14 +679,21 @@ def test_incremental_dedup_bloom_filters_sized_and_skip(spark, sf_dir, tmp_path)
         )
         return os.path.getsize(path) - data - md.serialized_size
 
-    overhead = {
-        f: non_data_bytes(f)
-        for t in ("docs", "buckets")
-        for f in _glob.glob(f"{index}/{t}/src_batch=*/*.parquet")
-    }
+    def overhead(root: str, table: str) -> dict[str, int]:
+        return {
+            f: non_data_bytes(f)
+            for f in _glob.glob(f"{root}/{table}/src_batch=*/*.parquet")
+        }
+
+    docs_ovh, buckets_ovh = overhead(index, "docs"), overhead(index, "buckets")
     # history + three batch slices of each table
-    assert len({os.path.dirname(f) for f in overhead}) == 8, overhead
-    assert max(overhead.values()) < 2**17, overhead
+    assert len({os.path.dirname(f) for f in docs_ovh}) == 4, docs_ovh
+    assert len({os.path.dirname(f) for f in buckets_ovh}) == 4, buckets_ovh
+    assert max(docs_ovh.values()) < 2**17, docs_ovh
+    assert max(buckets_ovh.values()) < 2**10, buckets_ovh
+    mod.compact_dedup_index(spark, index)
+    compacted = overhead(mod._index_root(index), "buckets")
+    assert compacted and max(compacted.values()) < 2**10, compacted
 
     path = str(tmp_path / "probe")
     for s in range(16):
@@ -842,37 +850,48 @@ def test_ivfpq_build_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
 
 
 #: jobs of one small-regime ``dedup_and_append_batch`` on the sf0.01
-#: fixture: the feature materialize (3), the probe-set collect (1), the
+#: fixture: the feature materialize (3), the hash-set collect (1), the
 #: drop-set collect with its four broadcast exchanges (5) and the four
 #: slice writes (5: the bucket_stats aggregate's shuffle is its own job).
-#: Four exchanges, not five: the band rows carry the bucket IN-filter
-#: the index leg's join would otherwise infer onto its broadcast alone,
-#: so the within-batch and index legs reuse one band-row broadcast.
+#: Four exchanges, not five: the within-batch and index legs broadcast
+#: the same band-row relation, (doc, text_hash, band, bucket) keyed on
+#: (band, bucket), with no filter on either side (the buckets scan takes
+#: no IN-filter for a join to infer onto one of them), so Spark reuses
+#: one band-row broadcast for both.
 DEDUP_BATCH_MAX_JOBS = 14
 
 
 def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
-    """A small batch decides its drops with one shuffle-free probe-set
+    """A small batch decides its drops with one shuffle-free hash-set
     collect and one drop-set query whose legs share their broadcasts.
     The ceiling catches the drop-set DAG growing back (per-leg
     distinct() shuffles and unshared exchanges, each its own AQE
-    job)."""
+    job). The executed drop-set plan shows the sharing: four
+    broadcast exchanges, the band-row one reused by the index leg."""
+    import re as _re
+
     from ais_data_pipeline_spark.sources.parquet import read_table
-    from ais_data_pipeline_spark.streaming.incremental_dedup import (
-        build_dedup_index,
-        dedup_and_append_batch,
-    )
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
 
     docs = read_table(spark, sf_dir, "documents")
     index, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
+    batch = docs.filter(F.col("doc_id") % 3 == 1)
+    mod.build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
     grouped, _ = _jobs_in_group(
         spark,
-        lambda: dedup_and_append_batch(
-            docs.filter(F.col("doc_id") % 3 == 1), 0, index, out, threshold=0.5
-        ),
+        lambda: mod.dedup_and_append_batch(batch, 0, index, out, threshold=0.5),
     )
     assert len(grouped) <= DEDUP_BATCH_MAX_JOBS, grouped
+
+    _, _, drops, _, _ = mod._dedup_batch_parts(batch, index, 0.5, exclude_batch=0)
+    drops.collect()
+    plan = drops._jdf.queryExecution().executedPlan()
+    plan = plan.executedPlan().toString()  # AQE's final plan
+    fresh = _re.findall(r"\+- BroadcastExchange ", plan)
+    assert len(fresh) == 4, plan
+    assert _re.search(
+        r"ReusedExchange \[doc#\d+L, text_hash#\d+, band#\d+, bucket#\d+L\]", plan
+    ), plan
 
 
 def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
@@ -1142,11 +1161,12 @@ def test_incremental_dedup_probe_is_broadcast(spark, sf_dir, tmp_path):
     node = lambda n: len(_re.findall(rf"\(\d+\) {n}\b", plan))  # noqa: E731
     assert node("SortMergeJoin") == 0, plan
     assert node("BroadcastHashJoin") >= 3, plan
-    # the batch's hash and bucket sets reach the index scans as pushed
-    # IN-filters (bloom/row-group skipping), not post-scan filters
+    # the batch's hash set reaches the docs scan as a pushed IN-filter
+    # (bloom row-group skipping), not a post-scan filter; the buckets
+    # scan streams past the broadcast band rows with no IN-filter
     pushed = _re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("In(text_hash" in p for p in pushed), plan
-    assert any("In(bucket" in p for p in pushed), plan
+    assert not any("In(bucket" in p for p in pushed), plan
 
 
 def test_incremental_dedup_hot_bucket_cap(spark, sf_dir, tmp_path):
