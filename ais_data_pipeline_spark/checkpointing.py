@@ -24,6 +24,15 @@ losing an executor mid-iteration is a real event.
 Scope: the switch is process-global (a policy of the driver program,
 like the checkpoint dir itself). Streaming ``foreachBatch`` sinks read
 it at batch time, so it applies to incremental-dedup ingestion too.
+
+``materialize`` is the package's one pin mechanism: no module calls
+``persist``/``cache`` (a grep gate in the tests holds that). A pinned
+frame keeps its rows as they are — building and decoding the compressed
+columnar cache that ``persist`` makes cost the flagship CSV pipeline
+about a quarter of its executor time (SCALING.md "Flagship pin: rows,
+not a compressed columnar cache"). Most pins are small and are left to
+the GC; a pin as large as its input is given back with ``release`` as
+soon as its last reader returns.
 """
 
 from __future__ import annotations
@@ -80,3 +89,21 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     obs = Observation()
     pinned = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")))
     return pinned, int(obs.get["n"])
+
+
+def release(df: DataFrame) -> None:
+    """Give back what ``materialize`` pinned for ``df`` now, instead of
+    at whichever driver GC collects the frame: a local pin's executor
+    blocks are dropped, a reliable pin's checkpoint files are deleted.
+    ``df`` must be the frame ``materialize`` returned (its plan is the
+    pinned RDD), and nothing may read it, or a frame derived from it,
+    afterwards."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    sc = df.sparkSession.sparkContext
+    # the SparkContext call, not RDD.unpersist: that one warns on every
+    # local pin that its lineage cannot be recomputed — the point here
+    sc._jsc.sc().unpersistRDD(rdd.id(), False)
+    ckpt = rdd.getCheckpointFile()
+    if ckpt.isDefined():
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)

@@ -581,7 +581,9 @@ def append_to_ivf_index(
     )  # tiny; literal-ize (Arrow local relation — no pickled-RDD slices)
     (
         ivf_assign(df, cents, vec_col, id_col)
-        .withColumn("src_batch", F.lit(src_batch).cast("bigint"))
+        # a string literal keeps the generated code the same across
+        # batches (see incremental_dedup._write_slice)
+        .withColumn("src_batch", F.lit(str(src_batch)))
         .repartition("list_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -107,6 +107,15 @@ def gated_broadcast(
 #: call time, so setting it to -1 forces the large regime everywhere.
 PUSHDOWN_LIMIT = 10_000
 
+#: a write at or under this row count collapses to one tidy file (an
+#: index slice per micro-batch, the CSV pipeline's quarantine per run);
+#: above it the one-task funnel is the shape that cannot scale (the
+#: round-9 audit caught the dedup bootstrap funneling the whole shingle
+#: store through it). 2M rows of (id, hash, text) is a few hundred MiB
+#: of typical web text — still one writer task's work. Read at call
+#: time, so setting it to -1 forces the multi-file regime everywhere.
+SINGLE_FILE_MAX_ROWS = 2_000_000
+
 
 class KeySet:
     """The distinct non-NULL values of one key column, held as driver

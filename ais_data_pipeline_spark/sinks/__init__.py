@@ -4,7 +4,6 @@
 from ais_data_pipeline_spark.sinks.parquet import (
     write_parquet,
     write_date_partitioned,
-    write_with_quarantine,
 )
 
-__all__ = ["write_parquet", "write_date_partitioned", "write_with_quarantine"]
+__all__ = ["write_parquet", "write_date_partitioned"]

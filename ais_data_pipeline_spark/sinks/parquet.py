@@ -8,8 +8,9 @@
   (reference notebooks/preprocessing_with_polars.ipynb:4038-4039;
   deviation recorded in BASELINE.md).
 - K4 (quarantine side-output): Spark batch has no single-pass
-  multi-sink, so the engine persists once and writes main + quarantine
-  as two filtered writes (reference notebooks/0_preprocessing.ipynb:3457).
+  multi-sink, so the CSV pipeline (``plans.rent_contracts``) pins the
+  parse once and writes main + quarantine as two filtered writes
+  (reference notebooks/0_preprocessing.ipynb:3457).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import json
 import os
 import time
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ais_data_pipeline_spark import fsutil
@@ -89,50 +90,6 @@ def write_date_partitioned(
     stamped = df.withColumn(date_col, F.current_date()) if date_col not in df.columns else df
     write_parquet(stamped, path, mode=mode, partition_by=[date_col])
     return stamped
-
-
-def write_with_quarantine(
-    df: DataFrame,
-    good_predicate: Column,
-    main_path: str,
-    quarantine_path: str,
-    mode: str = "overwrite",
-) -> dict:
-    """Split rows on ``good_predicate``: passers → main, violators →
-    quarantine (reference K4 / P4). One persist, two filtered writes —
-    each write re-reads the cached partitions instead of the source, so
-    the scan happens once even at 100 TB (evict after with unpersist).
-
-    Null predicate results count as NOT good (they quarantine), matching
-    the reference's any_horizontal problem-row select
-    (reference notebooks/0_preprocessing.ipynb:3447-3454).
-    """
-    from pyspark.sql import Observation
-
-    good = F.coalesce(good_predicate.cast("boolean"), F.lit(False))
-    tagged = df.withColumn("__good", good).persist()
-    try:
-        # row accounting rides the writes (observe) — no post-write
-        # count() actions, not even cached-partition re-scans
-        obs_main = Observation("quarantine_main")
-        obs_bad = Observation("quarantine_bad")
-        main = (
-            tagged.filter(F.col("__good"))
-            .drop("__good")
-            .observe(obs_main, F.count(F.lit(1)).alias("n"))
-        )
-        bad = (
-            tagged.filter(~F.col("__good"))
-            .drop("__good")
-            .observe(obs_bad, F.count(F.lit(1)).alias("n"))
-        )
-        write_parquet(main, main_path, mode=mode)
-        write_parquet(bad, quarantine_path, mode=mode)
-        n_main = obs_main.get["n"]
-        n_bad = obs_bad.get["n"]
-    finally:
-        tagged.unpersist()
-    return {"rows_main": n_main, "rows_quarantined": n_bad, "rows_in": n_main + n_bad}
 
 
 def compact_parquet(

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ais_data_pipeline_spark.checkpointing import materialize
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -67,14 +69,13 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     quarantine keeps the raw malformed line for replay — the same
     side-output contract as the CSV pipeline's quarantine sink.
 
-    The input persists first: Spark refuses a query that reads ONLY
-    ``_corrupt_record`` from a raw JSON scan (the parser would need
-    the other columns to decide corruption), and the two outputs
-    share one parse this way — same persist-then-split shape as
-    ``sinks.parquet.write_with_quarantine``."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    The input is pinned first (``checkpointing.materialize``): Spark
+    refuses a query that reads ONLY ``_corrupt_record`` from a raw JSON
+    scan (the parser would need the other columns to decide
+    corruption), and the two outputs share one parse this way — the
+    same pin-then-split shape as the CSV pipeline's quarantine. The pin
+    is left to the GC, which reclaims it once both outputs are dropped."""
+    df = materialize(df)
     corrupt = F.col(CORRUPT_COL).isNotNull()
     clean = df.filter(~corrupt).drop(CORRUPT_COL)
     quarantine = df.filter(corrupt).select(F.col(CORRUPT_COL).alias("raw_line"))

@@ -157,14 +157,6 @@ def _features(
     )
 
 
-#: a slice at or under this row count collapses to one tidy file per
-#: batch; above it the repartition(1) funnel is the one-task-shuffle
-#: shape that cannot scale (the round-9 audit caught the bootstrap
-#: funneling the whole shingle store through it). 2M rows of (id,
-#: hash, text) is a few hundred MiB of typical web text — still one
-#: writer task's work.
-SINGLE_FILE_MAX_ROWS = 2_000_000
-
 #: false-positive rate each slice's bloom filter is sized for (see
 #: ``_write_slice``): low enough that a 10 000-value IN-list
 #: (``util.PUSHDOWN_LIMIT``) still skips a non-matching slice ~99 % of the time
@@ -193,7 +185,7 @@ def _write_slice(
     (``single_file=None``) is measured — ``approx_rows`` when the
     caller already has a row count in hand (every micro-batch sink
     does, for its accounting log), else one ``count()`` job — and the
-    funnel only engages at or under ``SINGLE_FILE_MAX_ROWS``. An
+    funnel only engages at or under ``util.SINGLE_FILE_MAX_ROWS``. An
     explicit ``single_file=True`` above that bound is overridden with
     an M1 warning rather than honored: no future history-sized caller
     can default into the funnel the round-9 shuffle gate caught.
@@ -222,7 +214,7 @@ def _write_slice(
     if single_file is not False:
         if n is None:
             n = df.count()
-        if n > SINGLE_FILE_MAX_ROWS:
+        if n > util.SINGLE_FILE_MAX_ROWS:
             if single_file is True:
                 from ais_data_pipeline_spark.observability import log
 
@@ -231,7 +223,7 @@ def _write_slice(
                     level="warning",
                     path=path,
                     rows=n,
-                    bound=SINGLE_FILE_MAX_ROWS,
+                    bound=util.SINGLE_FILE_MAX_ROWS,
                     hint=(
                         "slice exceeds the single-file bound; writing "
                         "with input partitioning instead of the "
@@ -241,10 +233,15 @@ def _write_slice(
             single_file = False
         else:
             single_file = True
-    out = df.withColumn("src_batch", F.lit(src_batch).cast("bigint"))
+    # the batch id goes in as a string literal: Spark inlines a bigint
+    # literal into the generated code, so every micro-batch compiled
+    # its own classes, while a string literal is passed by reference.
+    # The src_batch=<n> directory it names, the file bytes and the
+    # bigint read schema are the same.
+    out = df.withColumn("src_batch", F.lit(str(src_batch)))
     if single_file:
         # coalesce, not repartition: the funnel only engages on slices
-        # measured ≤ SINGLE_FILE_MAX_ROWS, where one task comfortably
+        # measured ≤ util.SINGLE_FILE_MAX_ROWS, where one task comfortably
         # computes the (narrow, pinned-input) slice plan — and the
         # repartition(1) added a whole shuffle + an AQE stage job per
         # write just to move rows it was about to funnel anyway (r19;

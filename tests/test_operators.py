@@ -1523,25 +1523,6 @@ def test_bounded_schema_inference(spark, tmp_path):
     assert dict(read_csv(spark, str(p2), infer_schema_length=10).dtypes)["ts"] == "timestamp"
 
 
-# -- quarantine sink --------------------------------------------------------
-
-
-def test_write_with_quarantine(spark, tmp_path):
-    from ais_data_pipeline_spark.sinks.parquet import write_with_quarantine
-
-    df = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 5_000_000_000), (4, 20)], "id long, v long"
-    )
-    counts = write_with_quarantine(
-        df,
-        F.col("v").isNotNull() & F.col("v").between(-(2**31), 2**31 - 1),
-        str(tmp_path / "main"),
-        str(tmp_path / "quar"),
-    )
-    assert counts == {"rows_main": 2, "rows_quarantined": 2, "rows_in": 4}
-    assert {r["id"] for r in spark.read.parquet(str(tmp_path / "quar")).collect()} == {2, 3}
-
-
 # -- streaming: stateful running totals ------------------------------------
 
 

@@ -265,6 +265,165 @@ def test_pipeline_jobs_stay_in_caller_job_group(spark, fixture_csv, tmp_path):
     assert grouped == list(range(grouped[0], grouped[-1] + 1))
 
 
+def _sql_plans(spark, fn):
+    """Physical plan descriptions of every SQL execution ``fn`` runs
+    (at most 100). The status store keeps only the latest executions,
+    so they are told apart by id, not by position."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def latest(n):
+        execs = store.executionsList(max(store.executionsCount() - n, 0), n)
+        return [execs.apply(i) for i in range(execs.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in latest(1)), default=-1)
+    fn()
+    bus.waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in latest(100) if e.executionId() > before]
+
+
+def test_pipeline_pins_rows_and_releases_them(spark, fixture_csv, tmp_path, monkeypatch):
+    """The parse is pinned as rows (``checkpointing.materialize``), not a
+    compressed columnar cache: no plan of the run holds an
+    ``InMemoryTableScan``. The pin is released once the writes return,
+    and also when a write raises."""
+    from ais_data_pipeline_spark.plans import rent_contracts
+
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    n0 = pinned().size()
+    plans = _sql_plans(
+        spark,
+        lambda: run_pipeline(
+            spark, fixture_csv, str(tmp_path / "m"), str(tmp_path / "q"), schema=SCHEMA
+        ),
+    )
+    assert len(plans) >= 3  # the pin, the profile and both writes
+    assert not [p for p in plans if "InMemoryTableScan" in p or "InMemoryRelation" in p]
+    assert pinned().size() == n0
+
+    def failing_writes(spark, *thunks):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(rent_contracts, "overlap", failing_writes)
+    with pytest.raises(RuntimeError, match="write failed"):
+        run_pipeline(
+            spark, fixture_csv, str(tmp_path / "m2"), str(tmp_path / "q2"), schema=SCHEMA
+        )
+    assert pinned().size() == n0
+
+
+def test_pipeline_release_under_reliable_checkpoints(spark, fixture_csv, tmp_path, monkeypatch):
+    """Under ``set_reliable_checkpoints`` the pin is a set of checkpoint
+    files, and the release deletes them: the files exist until the
+    writes return, the run leaves none behind, and its results equal a
+    local pin's."""
+    from ais_data_pipeline_spark import checkpointing
+    from ais_data_pipeline_spark.plans import rent_contracts
+
+    local = run_pipeline(
+        spark, fixture_csv, str(tmp_path / "m_local"), str(tmp_path / "q_local"), schema=SCHEMA
+    )
+    ckpt = tmp_path / "ckpt"
+
+    def files():
+        return [p for p in ckpt.rglob("*") if p.is_file()]
+
+    pinned_files = []
+
+    def recorded_release(df):
+        pinned_files.extend(files())
+        checkpointing.release(df)
+
+    monkeypatch.setattr(rent_contracts, "release", recorded_release)
+    checkpointing.set_reliable_checkpoints(spark, str(ckpt))
+    try:
+        reliable = run_pipeline(
+            spark, fixture_csv, str(tmp_path / "m_rel"), str(tmp_path / "q_rel"), schema=SCHEMA
+        )
+    finally:
+        checkpointing.set_local_checkpoints()
+    assert pinned_files, "the run wrote no reliable checkpoint"
+    assert files() == []
+    assert (reliable.rows_in, reliable.rows_out, reliable.rows_quarantined) == (
+        local.rows_in, local.rows_out, local.rows_quarantined
+    )
+    for a, b in (("m_local", "m_rel"), ("q_local", "q_rel")):
+        assert sorted(spark.read.parquet(str(tmp_path / a)).collect()) == sorted(
+            spark.read.parquet(str(tmp_path / b)).collect()
+        )
+
+
+@pytest.mark.parametrize("overflow", [True, False], ids=["quarantine", "empty_quarantine"])
+def test_pipeline_quarantine_file_regimes_agree(
+    spark, fixture_csv, tmp_path, monkeypatch, overflow
+):
+    """The quarantine is written as one file when the pin job counted at
+    most ``util.SINGLE_FILE_MAX_ROWS`` rows in, else with the pin's
+    partitioning; both regimes write the same rows and count them the
+    same. The input spans three CSV parts and holds NULL amounts (they
+    fit int32 and stay in the main output); with ``overflow`` False the
+    quarantine is empty."""
+    from ais_data_pipeline_spark.operators import util
+
+    with open(fixture_csv, newline="") as f:
+        header, *rows = list(csv.reader(f))
+    amount = header.index("contract_amount")
+    for i, row in enumerate(rows):
+        if i % 50 == 3:
+            row[amount] = ""
+        if not overflow and int(row[amount] or 0) > 2**31 - 1:
+            row[amount] = row[amount + 1] = "1"
+    src = tmp_path / "csv"
+    src.mkdir()
+    for part in range(3):
+        with open(src / f"part-{part}.csv", "w", newline="") as f:
+            w = csv.writer(f)
+            w.writerow(header)
+            w.writerows(rows[part::3])
+
+    def run(tag):
+        res = run_pipeline(
+            spark, str(src), str(tmp_path / f"m_{tag}"), str(tmp_path / f"q_{tag}"), schema=SCHEMA
+        )
+        files = list((tmp_path / f"q_{tag}").glob("part-*.parquet"))
+        main = sorted(spark.read.parquet(str(tmp_path / f"m_{tag}")).collect())
+        quar = sorted(spark.read.parquet(str(tmp_path / f"q_{tag}")).collect())
+        return res, files, main, quar
+
+    single, single_files, main_1, quar_1 = run("single")
+    monkeypatch.setattr(util, "SINGLE_FILE_MAX_ROWS", -1)
+    multi, multi_files, main_n, quar_n = run("multi")
+    assert len(single_files) == 1
+    if overflow:
+        assert len(multi_files) > 1
+    assert (main_1, quar_1) == (main_n, quar_n)
+    want_bad = 5 if overflow else 0
+    for res in (single, multi):
+        assert (res.rows_in, res.rows_out, res.rows_quarantined) == (
+            N_ROWS, N_ROWS - want_bad, want_bad
+        )
+    assert len(quar_1) == want_bad
+    assert sum(r["contract_amount"] is None for r in main_1) == N_ROWS // 50
+
+
+def test_pipeline_raises_on_lost_rows(spark, fixture_csv, tmp_path, monkeypatch):
+    """rows_in is counted on the pin job, not defined as the sum of the
+    writes' counts, so a row that no write accounts for raises."""
+    from ais_data_pipeline_spark.plans import rent_contracts
+
+    real_tightening = rent_contracts.apply_tightening
+
+    def lose_a_row(df, plan):
+        return real_tightening(df, plan).filter(F.col("contract_id") != "CRT00000001")
+
+    monkeypatch.setattr(rent_contracts, "apply_tightening", lose_a_row)
+    with pytest.raises(RuntimeError, match="row accounting"):
+        run_pipeline(
+            spark, fixture_csv, str(tmp_path / "m"), str(tmp_path / "q"), schema=SCHEMA
+        )
+
+
 def test_snapshot_time_travel(spark, tmp_path):
     """Versioned table: append/overwrite commits, historical reads,
     history metadata, and snapshot expiry with file GC."""
@@ -819,6 +978,70 @@ def test_web_ingest_jobs_stay_in_caller_job_group(spark, tmp_path):
     assert len(grouped) <= WEB_INGEST_BATCH_MAX_JOBS, grouped
 
 
+def test_micro_batches_reuse_generated_code(spark, sf_dir, tmp_path):
+    """A steady-state micro-batch compiles no new classes: a third
+    ``dedup_and_append_batch`` and a third ``ingest_web_batch``, each
+    over a batch of the same shape as the second, leave Spark's
+    code-generation compile count unchanged. It catches a per-batch
+    value (the batch id of the ``src_batch=`` slice) inlined into the
+    generated code, which made every batch compile its own classes."""
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.sources.warc import encode_warc_records
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+    from ais_data_pipeline_spark.streaming.web_ingest import ingest_web_batch
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    # each batch is a parquet directory of its own, so the batch frames'
+    # plans differ in their path only. Each carries 16 exact copies of
+    # history docs: a drop set of at most 10 ids stays a Spark In-list,
+    # whose literals are inlined (a benchmark batch drops about 120)
+    docs = read_table(spark, sf_dir, "documents")
+    history = docs.filter(F.col("doc_id") % 4 == 0)
+    mod.build_dedup_index(history, str(tmp_path / "idx"))
+    for k in range(3):
+        copies = history.orderBy("doc_id").limit(16).withColumn(
+            "doc_id", F.col("doc_id") + 1_000_000 * (k + 1)
+        )
+        docs.filter(F.col("doc_id") % 4 == k + 1).unionByName(copies).write.parquet(
+            str(tmp_path / f"docs{k}")
+        )
+    for k in range(3):
+        before = compiled.getCount()
+        mod.dedup_and_append_batch(
+            spark.read.parquet(str(tmp_path / f"docs{k}")), k,
+            str(tmp_path / "idx"), str(tmp_path / "out"), threshold=0.5,
+        )
+    assert compiled.getCount() == before
+
+    def rec(i, uri, text):
+        return dict(
+            warc_type="conversion", record_id=f"<urn:uuid:{i:04x}>",
+            warc_date="2024-01-01T00:00:00Z", target_uri=uri,
+            content_type="text/plain", payload=text.encode(),
+        )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for k in range(3):
+        (landing / f"b{k}.warc.gz").write_bytes(encode_warc_records([
+            rec(0, f"http://e.com/{k}a", f"body a of {k}"),
+            rec(1, f"http://e.com/{k}a", f"refetch of {k}a"),  # batch url dup
+            rec(2, f"http://e.com/{k}b", f"body a of {k}"),    # batch body dup
+            rec(3, f"http://e.com/{k - 1}a", f"new body {k}"),  # index url dup
+            rec(4, f"http://e.com/{k}c", f"body a of {k - 1}"),  # index body dup
+        ]))
+    for k in range(3):
+        batch = (
+            spark.read.format("binaryFile")
+            .load(str(landing / f"b{k}.warc.gz"))
+            .select("path", "content")
+        )
+        before = compiled.getCount()
+        ingest_web_batch(batch, k, str(tmp_path / "web_idx"), str(tmp_path / "web_out"))
+    assert compiled.getCount() == before
+
+
 def test_curation_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
     """Every job of one ``run_curation`` call, its input measurement on
     the thread pool included, carries the caller's job group."""
@@ -1094,9 +1317,10 @@ def test_write_slice_size_contract_is_structural(spark, tmp_path, capfd, monkeyp
     bound is overridden with the M1 warning instead of honored."""
     from pyspark.sql import functions as F
 
+    from ais_data_pipeline_spark.operators import util
     from ais_data_pipeline_spark.streaming import incremental_dedup as mod
 
-    monkeypatch.setattr(mod, "SINGLE_FILE_MAX_ROWS", 1000)
+    monkeypatch.setattr(util, "SINGLE_FILE_MAX_ROWS", 1000)
     big = spark.range(5000).repartition(8).select(
         F.col("id").alias("doc"), F.md5(F.col("id").cast("string")).alias("h")
     )
@@ -2100,6 +2324,23 @@ def test_fsutil_hadoop_io_bulk_read_roundtrip(spark, tmp_path):
     io.write_text(path, "päge — ünïcode")
     assert io.read_text(path) == "päge — ünïcode"
     assert io.read_text("file://" + str(tmp_path / "nope")) is None
+
+
+def test_no_persist_or_cache_in_engine():
+    """Grep gate: ``checkpointing.materialize`` is the package's one pin
+    mechanism (rows as they are, local or reliable by one switch), so
+    no module calls ``persist`` or ``cache``."""
+    import glob as _glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "ais_data_pipeline_spark")
+    offenders = []
+    for path in _glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        src = open(path).read()
+        for needle in (".persist(", ".cache()"):
+            if needle in src:
+                offenders.append((os.path.relpath(path, pkg), needle))
+    assert offenders == [], offenders
 
 
 def test_no_rename_swap_callers_in_engine():
