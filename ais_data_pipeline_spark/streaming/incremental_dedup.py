@@ -34,9 +34,8 @@ replayed micro-batch overwrites its own partition, making the sink
 idempotent (the same checkpoint+idempotence recipe as
 ``ingest.run_upsert_sink``).
 
-Index layout: two tables plus a statistic, each partitioned by
-``src_batch`` (history = -1, one slice per micro-batch), and a
-``_layout`` marker file:
+Index layout: two tables, each partitioned by ``src_batch`` (history
+= -1, one slice per micro-batch), and a ``_layout`` marker file:
 - ``docs`` (doc, text_hash, text): one row per indexed doc, with a
   parquet bloom filter on ``text_hash``. The exact probe projects
   ``text_hash`` and the near-dup verify projects ``text`` from the
@@ -45,9 +44,13 @@ Index layout: two tables plus a statistic, each partitioned by
   text, while random 64-bit hashes do not compress at all.
 - ``buckets`` (doc, band, bucket): the MinHash LSH band rows. No
   bloom filter: the probe streams this table past the broadcast batch
-  band rows and never pushes a bucket IN-list into its scan.
-- ``bucket_stats`` (band, bucket, n): per-slice hot-bucket counts read
-  by the ``max_bucket_size`` guard.
+  band rows and never pushes a bucket IN-list into its scan. The
+  ``max_bucket_size`` guard counts this table's rows in the batch's
+  buckets at probe time; no statistic is stored beside it.
+An index that still holds a table of ``_RETIRED_TABLES`` (the
+hot-bucket counts earlier layouts kept) probes, appends and compacts
+as it is: nothing reads that table, and compaction or a rebuild
+removes it.
 Indexes written in an earlier layout (a ``docs`` table of shingle
 hashes, or separate ``hashes`` and ``shingles`` tables) carry no
 marker: probes, appends and compaction refuse them with an error that
@@ -71,14 +74,16 @@ from ais_data_pipeline_spark.operators.dedup import (
     tokens_lower,
 )
 from ais_data_pipeline_spark.operators import util
-from ais_data_pipeline_spark.operators.util import KeySet, gated_broadcast, in_values_cond
+from ais_data_pipeline_spark.operators.util import KeySet, gated_broadcast
 
 # explicit read schemas: index partitions may be legitimately empty
 # (a batch where nothing survived), and schema inference fails there
 _DOCS_SCHEMA = "doc bigint, text_hash string, text string, src_batch bigint"
 _BUCKETS_SCHEMA = "doc bigint, band int, bucket bigint, src_batch bigint"
-_STATS_SCHEMA = "band int, bucket bigint, n bigint, src_batch bigint"
-_TABLES = ("docs", "buckets", "bucket_stats")
+_TABLES = ("docs", "buckets")
+#: tables earlier layouts wrote and nothing reads any more: a rebuild
+#: and a compaction remove them
+_RETIRED_TABLES = ("bucket_stats",)
 
 HISTORY_BATCH = -1  # src_batch value for the bootstrap corpus
 
@@ -168,7 +173,7 @@ def _write_slice(
     path: str,
     src_batch: int,
     bloom_col: str | None = None,
-    single_file: bool | None = None,
+    keep_partitioning: bool = False,
     approx_rows: int | None = None,
 ) -> None:
     """Append one src_batch= partition, idempotently: dynamic partition
@@ -181,15 +186,14 @@ def _write_slice(
     shuffle, parallel writer tasks — because a repartition(1) there is
     a corpus-sized shuffle into ONE writer task, the exact shape that
     cannot scale. Round-10 verdict item 4 made that contract
-    STRUCTURAL instead of caller discipline: the default
-    (``single_file=None``) is measured — ``approx_rows`` when the
-    caller already has a row count in hand (every micro-batch sink
-    does, for its accounting log), else one ``count()`` job — and the
-    funnel only engages at or under ``util.SINGLE_FILE_MAX_ROWS``. An
-    explicit ``single_file=True`` above that bound is overridden with
-    an M1 warning rather than honored: no future history-sized caller
-    can default into the funnel the round-9 shuffle gate caught.
-    ``single_file=False`` always keeps the input partitioning.
+    STRUCTURAL instead of caller discipline: the default is measured
+    — ``approx_rows`` when the caller already has a row count in hand
+    (every micro-batch sink does, for its accounting log), else one
+    ``count()`` job — and the funnel only engages at or under
+    ``util.SINGLE_FILE_MAX_ROWS``, so no caller can force a
+    history-sized slice into the funnel the round-9 shuffle gate
+    caught. ``keep_partitioning=True`` skips the measure and always
+    keeps the input partitioning.
 
     Bloom sizing: with a row bound in hand (``approx_rows``, or the
     count the single-file decision took) the filter is sized for that
@@ -211,28 +215,9 @@ def _write_slice(
     # (local paths only — object-store 'directories' are prefixes)
     _ensure_local_dir(path)
     n = approx_rows
-    if single_file is not False:
-        if n is None:
-            n = df.count()
-        if n > util.SINGLE_FILE_MAX_ROWS:
-            if single_file is True:
-                from ais_data_pipeline_spark.observability import log
-
-                log(
-                    "single_file_override",
-                    level="warning",
-                    path=path,
-                    rows=n,
-                    bound=util.SINGLE_FILE_MAX_ROWS,
-                    hint=(
-                        "slice exceeds the single-file bound; writing "
-                        "with input partitioning instead of the "
-                        "repartition(1) funnel"
-                    ),
-                )
-            single_file = False
-        else:
-            single_file = True
+    if not keep_partitioning and n is None:
+        n = df.count()
+    single_file = not keep_partitioning and n <= util.SINGLE_FILE_MAX_ROWS
     # the batch id goes in as a string literal: Spark inlines a bigint
     # literal into the generated code, so every micro-batch compiled
     # its own classes, while a string literal is passed by reference.
@@ -271,14 +256,14 @@ def build_dedup_index(
 ) -> None:
     """Bootstrap the index from the historical corpus: the tables of
     the layout in the module docstring under ``index_path`` — ``docs``
-    (doc, text_hash, text), ``buckets`` (doc, band, bucket) and
-    ``bucket_stats`` — each partitioned by ``src_batch`` (history =
-    -1), plus the layout marker. The stored text is the
-    candidate-verification store: a probe re-shingles it for candidate
-    pairs only. Compressed, it weighs about as much as the band rows,
-    where the shingle hashes it replaced weighed three times as much
-    (they are random longs and do not compress). Rebuilding replaces
-    whatever the path held, an index of an earlier layout included."""
+    (doc, text_hash, text) and ``buckets`` (doc, band, bucket), each
+    partitioned by ``src_batch`` (history = -1), plus the layout
+    marker. The stored text is the candidate-verification store: a
+    probe re-shingles it for candidate pairs only. Compressed, it
+    weighs about as much as the band rows, where the shingle hashes it
+    replaced weighed three times as much (they are random longs and do
+    not compress). Rebuilding replaces whatever the path held, an
+    index of an earlier layout or a retired table included."""
     # a (re)build writes the flat generation-0 layout: drop any
     # pointer a prior compaction published, or readers would resolve
     # to a generation this build never writes (r14), and any flat
@@ -287,97 +272,32 @@ def build_dedup_index(
     io = fsutil.io_for(index_path)
     fsutil.reset_generations(index_path, io)
     root = fsutil.generation_root(index_path, 0)
-    for name in (*_TABLES, LAYOUT_MARKER):
+    for name in (*_TABLES, *_RETIRED_TABLES, LAYOUT_MARKER):
         io.remove(os.path.join(root, name))
     _write_layout(root, io)
     # read twice (docs write + band rows): pin once, or each read
     # recomputes md5 + shingle split over the whole history. The count
-    # rides the pin and bounds the bloom filters of both slices.
-    feats, n_hist = materialize_counted(_features(docs, text_col, id_col, shingle_n))
-    # written twice (buckets + stats): pin once, or each write re-runs
-    # the 32-permutation minhash over every history shingle. r18: the
+    # rides the pin and bounds the docs slice's bloom filter. r18: the
     # band rows derive from the PINNED shingle features instead of a
     # second scan+tokenize+shingle pass over the corpus — bit-identical
     # signatures (min is duplicate-invariant; see
     # minhash_band_rows_from_shingles).
-    bands_df = minhash_band_rows_from_shingles(
-        feats, n_hashes, bands, seed
-    ).transform(materialize)
-    # the three table writes are independent jobs over the two pinned
-    # frames — overlap them (guide §2.6, same shape as the batch
+    feats, n_hist = materialize_counted(_features(docs, text_col, id_col, shingle_n))
+    bands_df = minhash_band_rows_from_shingles(feats, n_hashes, bands, seed)
+    # the two table writes are independent jobs over the pinned
+    # features — overlap them (guide §2.6, same shape as the batch
     # append path). History-sized: keep the input partitioning.
     overlap(
         docs.sparkSession,
         lambda: _write_slice(
             feats.select("doc", "text_hash", "text"),
             os.path.join(root, "docs"), HISTORY_BATCH,
-            bloom_col="text_hash", single_file=False, approx_rows=n_hist,
+            bloom_col="text_hash", keep_partitioning=True, approx_rows=n_hist,
         ),
         lambda: _write_slice(
             bands_df, os.path.join(root, "buckets"), HISTORY_BATCH,
-            single_file=False,
+            keep_partitioning=True,
         ),
-        lambda: _write_bucket_stats(bands_df, root, HISTORY_BATCH),
-    )
-
-
-def _write_bucket_stats(
-    bands_df: DataFrame,
-    root: str,
-    src_batch: int,
-    approx_rows: int | None = None,
-) -> None:
-    """Per-slice (band, bucket) membership counts, kept only where
-    n >= 2 — the mergeable hot-bucket statistic. Probes sum these
-    across slices to find buckets above ``max_bucket_size`` and prune
-    them BEFORE any join, so one boilerplate cluster in the corpus
-    can't turn an index probe quadratic. (A bucket that is singleton
-    in every slice can still sum hot undetected — acceptable: the
-    guard targets burst-shaped boilerplate, which lands heavy in few
-    slices.)
-
-    ``approx_rows`` (an upper bound is fine — stats rows ≤ input band
-    rows) skips the measure pass entirely: the micro-batch append path
-    passes its surviving-band-row bound, so the stats write is ONE job
-    (r19; the old materialize+count was 2 extra jobs per batch). When
-    absent (history-sized bootstraps), the count rides the materialize
-    as an Observation — still one job fewer than counting after."""
-    stats = (
-        bands_df.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-    )
-    if approx_rows is None:
-        # read twice (measure + write) without a bound in hand: pin it
-        # so the write reuses the pinned result instead of re-running
-        # the agg over a history-sized bands frame
-        stats, approx_rows = materialize_counted(stats)
-    _write_slice(
-        stats, os.path.join(root, "bucket_stats"), src_batch,
-        approx_rows=approx_rows,
-    )
-
-
-def _hot_buckets(
-    spark: SparkSession,
-    index_path: str,
-    cap: int,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """(band, bucket) pairs whose summed membership exceeds the cap —
-    tiny by construction (only >=2-per-slice buckets are recorded).
-    ``exclude_batch`` drops that batch's own slice (replay safety,
-    same contract as the probe reads)."""
-    stats = spark.read.schema(_STATS_SCHEMA).parquet(
-        os.path.join(_index_root(index_path), "bucket_stats")
-    )
-    if exclude_batch is not None:
-        stats = stats.filter(F.col("src_batch") != exclude_batch)
-    return (
-        stats.groupBy("band", "bucket")
-        .agg(F.sum("n").alias("n"))
-        .filter(F.col("n") > cap)
-        .select("band", "bucket")
     )
 
 
@@ -423,7 +343,7 @@ def dedup_batch_against_index(
     """Survivors of one batch under the drop rule in the module
     docstring, as a lazy plan: the drop set stays an unpinned query,
     so the plan exposes the broadcast probe of the index tables."""
-    _, _, drops, _, _ = _dedup_batch_parts(
+    _, _, drops, _ = _dedup_batch_parts(
         batch_df, index_path, threshold, n_hashes, bands, shingle_n,
         seed, text_col, id_col, max_bucket_size, exclude_batch,
     )
@@ -444,7 +364,7 @@ def _dedup_batch_parts(
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     exclude_batch: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, bool, int]:
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
     """The drop set of one batch under the drop rule in the module
     docstring. The batch is the broadcast side (its within-batch
     self-join only while it fits the broadcast threshold); the index
@@ -473,6 +393,16 @@ def _dedup_batch_parts(
     table past the broadcast band rows (SCALING.md, "Bucket leg:
     broadcast only").
 
+    ``max_bucket_size`` guards the pairing joins against quadratic
+    blowup: band rows in a bucket holding more than that many rows,
+    among the batch's exact survivors or in the index, are pruned
+    before any pairing. The index-side count is exact and taken at
+    probe time from the same buckets table the probe scans: the scan
+    left-semi joined to the batch's broadcast (band, bucket) pairs,
+    then grouped. So it sees a bucket filled one doc per slice as
+    well as one filled by a burst, and no statistic has to be kept
+    up to date beside the index.
+
     Job shape (the per-micro-batch job floor is the leg's dominant
     cost): ONE materialize pins everything the batch derives —
     features, the exact-keep representative (the keep-min groupBy +
@@ -492,14 +422,14 @@ def _dedup_batch_parts(
     for a large one), ``dedup_batch_against_index`` as a lazy
     broadcast anti-join.
 
-    Returns ``(enriched, bands_b, drops, bands_filtered, n_in)``:
-    the batch's pinned features and band rows, which the append path
-    REUSES for the survivor index writes instead of recomputing the
-    md5/shingle/minhash passes (r18); the lazy drop set, one ``doc``
-    column that may repeat an id; whether a hot-bucket cap pruned
-    ``bands_b`` — the reused band rows are then NOT the survivors'
-    complete band set and the caller must recompute; and the batch's
-    row count, observed on the pin (r19)."""
+    Returns ``(enriched, bands_b, drops, n_in)``: the batch's pinned
+    features and band rows, which the append path REUSES for the
+    survivor index writes instead of recomputing the md5/shingle/
+    minhash passes (r18) — except under ``max_bucket_size``, where
+    ``bands_b`` lacks the pruned rows and the caller must recompute
+    the survivors' complete band set; the lazy drop set, one ``doc``
+    column that may repeat an id; and the batch's row count, observed
+    on the pin (r19)."""
     from pyspark.sql import Observation
 
     spark = batch_df.sparkSession
@@ -569,31 +499,36 @@ def _dedup_batch_parts(
         F.col("__bb.band").alias("band"),
         F.col("__bb.bucket").alias("bucket"),
     )
-    if max_bucket_size is not None:
-        # quadratic-blowup guard: prune band rows in buckets hot either
-        # WITHIN this batch (exact survivors only, see above) or across
-        # the persisted index (summed bucket_stats) before any pairing
-        # join. Near-dup recall inside a capped bucket is sacrificed —
-        # only degenerate boilerplate clusters should hit the cap.
-        hot_w = (
-            bands_b.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        # no distinct(): the anti-join ignores duplicate keys
-        hot = hot_w.union(
-            _hot_buckets(spark, index_path, max_bucket_size, exclude_batch)
-        )
-        bands_b = bands_b.join(
-            F.broadcast(hot), ["band", "bucket"], "left_anti"
-        ).transform(materialize)
 
     def index_scan(table: str, schema: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(os.path.join(root, table))
         if exclude_batch is not None:
             df = df.filter(F.col("src_batch") != exclude_batch)
         return df
+
+    if max_bucket_size is not None:
+        # the hot-bucket guard (see the docstring). Near-dup recall
+        # inside a capped bucket is sacrificed — only degenerate
+        # boilerplate clusters should hit the cap.
+        def hot(rows: DataFrame) -> DataFrame:
+            return (
+                rows.groupBy("band", "bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") > max_bucket_size)
+                .select("band", "bucket")
+            )
+
+        index_rows = index_scan("buckets", _BUCKETS_SCHEMA).join(
+            F.broadcast(bands_b.select("band", "bucket")),
+            ["band", "bucket"],
+            "left_semi",
+        )
+        # no distinct(): the anti-join ignores duplicate keys
+        bands_b = bands_b.join(
+            F.broadcast(hot(bands_b).union(hot(index_rows))),
+            ["band", "bucket"],
+            "left_anti",
+        ).transform(materialize)
 
     # Drop-set DAG. The batch side is always broadcast and the index
     # tables are streamed: no index shuffle and no distinct() — a
@@ -683,7 +618,7 @@ def _dedup_batch_parts(
     )
 
     drops = exact_w.union(exact_x).union(near_w).union(near_x)
-    return feats, bands_b, drops, (max_bucket_size is not None), n_in
+    return feats, bands_b, drops, n_in
 
 
 # -- semantic (embedding) incremental dedup --------------------------------
@@ -734,7 +669,7 @@ def build_embedding_dedup_index(
         )
         _write_slice(
             empty, os.path.join(index_path, "vecs"), HISTORY_BATCH,
-            single_file=False,
+            keep_partitioning=True,
         )
         return
     planes = random_hyperplanes(head["d"], n_planes, seed)
@@ -745,7 +680,7 @@ def build_embedding_dedup_index(
     )
     _write_slice(
         rows, os.path.join(index_path, "vecs"), HISTORY_BATCH, bloom_col="bucket",
-        single_file=False,  # history-sized: keep partitioning, no shuffle
+        keep_partitioning=True,  # history-sized: keep partitioning, no shuffle
     )
 
 
@@ -769,8 +704,8 @@ def dedup_embedding_batch_against_index(
     NULL-embedding rows cannot be deduplicated — they pass through as
     survivors and the sink excludes them from the index.
 
-    Bucket-population guard: unlike the lexical half (persisted
-    hot-bucket stats), the lever here is ``n_planes`` — size it so the
+    Bucket-population guard: unlike the lexical half (the
+    ``max_bucket_size`` cap), the lever here is ``n_planes`` — size it so the
     expected bucket holds a bounded candidate count at the target
     corpus (each extra plane halves expected bucket population; see
     ``pairwise_topk_per_vector``'s auto-planes rule). Within-bucket
@@ -800,11 +735,13 @@ def dedup_embedding_batch_against_index(
     # per-vector norm computed ONCE here (and once per scanned history
     # row below), not per candidate pair — the verify's 3 array folds
     # per pair drop to 1; value-identical CSE, same ops as the oracle.
-    feats = batch_df.select(
-        F.col(id_col).alias("vec_id"),
-        _as_double_array(F.col(vec_col)).alias("v"),
-        lsh_bucket_col(vec_col, planes).alias("bucket"),
-    ).withColumn("n", F.sqrt(_dot(F.col("v"), F.col("v")))).transform(materialize)
+    feats, n_rows = materialize_counted(
+        batch_df.select(
+            F.col(id_col).alias("vec_id"),
+            _as_double_array(F.col(vec_col)).alias("v"),
+            lsh_bucket_col(vec_col, planes).alias("bucket"),
+        ).withColumn("n", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    )
 
     def verified_drops(pairs: DataFrame) -> DataFrame:
         # pairs: (vec_id, v, n, other_v, other_n) — drops on any match
@@ -833,16 +770,14 @@ def dedup_embedding_batch_against_index(
     )
     drops_w = verified_drops(within)
 
-    # vs index: IN-pruned bucket scan, broadcast batch join
+    # vs index: the bucket scan restricted to the batch's buckets (an
+    # IN-filter the vecs bloom filter prunes by while the set is
+    # small), broadcast batch join. A bucket id packs n_planes sign
+    # bits, so the set is bounded by 2**n_planes as well as the rows.
     hist = spark.read.schema(_VECS_SCHEMA).parquet(os.path.join(index_path, "vecs"))
     if exclude_batch is not None:
         hist = hist.filter(F.col("src_batch") != exclude_batch)
-    batch_buckets = [
-        r["bucket"]
-        for r in feats.select("bucket").distinct().limit(util.PUSHDOWN_LIMIT + 1).collect()
-    ]
-    if len(batch_buckets) <= util.PUSHDOWN_LIMIT:
-        hist = hist.filter(in_values_cond("bucket", batch_buckets))
+    hist = KeySet.collect(feats, "bucket", min(n_rows, 2**n_planes)).semi(hist)
     cross = (
         hist.select(
             F.col("v").alias("other_v"),
@@ -923,10 +858,10 @@ def compact_dedup_index(
     ingestion accretes one slice per micro-batch; each probe scans
     every slice, so periodic compaction keeps probe latency flat in
     BATCH COUNT the way the broadcast design keeps it flat in corpus
-    size. bucket_stats rows merge by summing per-(band, bucket) — the
-    statistic is mergeable by construction. The layout marker is
-    checked on entry (an earlier layout raises) and carried into the
-    new generation.
+    size. The layout marker is checked on entry (an earlier layout
+    raises) and carried into the new generation; a retired table the
+    old generation still holds is not carried, and is collected with
+    that generation.
 
     Commit protocol (round 14 — object-store-safe, zero renames of
     data directories): the consolidated tables stage under the NEXT
@@ -946,11 +881,10 @@ def compact_dedup_index(
     with the ingest sink. Returns per-table row counts."""
     io = io or fsutil.io_for(index_path)
     specs = [
-        ("docs", _DOCS_SCHEMA, None, "text_hash"),
-        ("buckets", _BUCKETS_SCHEMA, None, None),
-        ("bucket_stats", _STATS_SCHEMA, "sum", None),
+        ("docs", _DOCS_SCHEMA, "text_hash"),
+        ("buckets", _BUCKETS_SCHEMA, None),
     ]
-    names = [name for name, _, _, _ in specs] + [LAYOUT_MARKER]
+    names = [*_TABLES, *_RETIRED_TABLES, LAYOUT_MARKER]
     cur = fsutil.current_generation(index_path, io)
     # entry GC: a stage a prior crashed compaction left behind, or a
     # superseded generation its crash failed to collect
@@ -961,23 +895,17 @@ def compact_dedup_index(
     _check_layout(src_root, io)
     _write_layout(dst_root, io)
     counts: dict[str, int] = {}
-    for name, schema, merge, bloom in specs:
+    for name, schema, bloom in specs:
         df = (
             spark.read.schema(schema)
             .parquet(os.path.join(src_root, name))
             .drop("src_batch")
         )
-        if merge == "sum":
-            df = df.groupBy("band", "bucket").agg(F.sum("n").alias("n"))
         # one read of the live tables; the count rides the pin
         df, counts[name] = materialize_counted(df)
         # the exact count is in hand, so the measured single-file
         # default decides per table (round-10 review) and sizes the
-        # bloom filters: the two history-sized tables keep parallel
-        # writers, while the tiny bucket_stats table (only n>=2
-        # buckets) collapses to one file instead of shuffle-partition-
-        # many near-empty ones that every probe's _hot_buckets scan
-        # would have to list and open
+        # docs table's bloom filter
         _write_slice(
             df,
             os.path.join(dst_root, name),
@@ -1101,7 +1029,7 @@ def dedup_and_append_batch(
     from pyspark.sql import Observation
 
     root = _index_root(index_path)
-    feats, bands_b, drops, bands_filtered, n_in = _dedup_batch_parts(
+    feats, bands_b, drops, n_in = _dedup_batch_parts(
         batch_df, index_path, threshold, n_hashes, bands,
         shingle_n, seed, text_col, id_col, max_bucket_size,
         exclude_batch=batch_id,  # replay after partial failure
@@ -1131,13 +1059,11 @@ def dedup_and_append_batch(
     # EXCEPT when a hot-bucket cap pruned bands_b (rows the survivor
     # index must still carry) — then recompute, as before.
     feats_s = keys.anti(feats)
-    if bands_filtered:
+    if max_bucket_size is not None:
         # the survivors' FULL band set (hot-pruned rows must still be
         # indexed) — derived from the survivor features, not a fresh
         # text pass (bit-identical; r18)
-        surv_bands = minhash_band_rows_from_shingles(
-            feats_s, n_hashes, bands, seed
-        ).transform(materialize)  # written twice: buckets + stats
+        surv_bands = minhash_band_rows_from_shingles(feats_s, n_hashes, bands, seed)
     else:
         # bands_b already excludes exact-dropped docs; removing the
         # full drop set leaves exactly the survivors' band rows
@@ -1145,11 +1071,10 @@ def dedup_and_append_batch(
     if not _check_layout(root):
         # an empty index adopts the layout before its first slice lands
         _write_layout(root)
-    # ALL FOUR writes (survivors + three index tables) are independent
+    # ALL THREE writes (survivors + two index tables) are independent
     # jobs over PINNED inputs — overlap them from a thread pool (guide
     # §2.6; r19 folds the survivors write in, it used to serialize
-    # ahead of the pool). bucket_stats reuses the surviving-band-row
-    # bound instead of its own materialize+count (2 fewer jobs/batch).
+    # ahead of the pool).
     obs_kept = Observation()
     surv_obs = keys.anti(batch_df, id_col).observe(
         obs_kept, F.count(F.lit(1)).alias("n")
@@ -1169,13 +1094,6 @@ def dedup_and_append_batch(
         lambda: _write_slice(
             surv_bands, os.path.join(root, "buckets"), batch_id,
             approx_rows=n_kept_est * bands,  # one band row per doc per band
-        ),
-        lambda: _write_bucket_stats(
-            surv_bands, root, batch_id,
-            # stats rows ≤ surviving band rows; the bound makes the
-            # identical single-file decision for any micro-batch-sized
-            # slice (≤2M band rows) without the old materialize+count
-            approx_rows=n_kept_est * bands,
         ),
     )
     n_kept = int(obs_kept.get["n"])

@@ -651,7 +651,7 @@ def test_incremental_dedup_large_batch_regime_equivalent(
             tables = [
                 _sorted_rows(spark.read.parquet(p))
                 for p in [out] + [
-                    f"{index}/{t}" for t in ("docs", "buckets", "bucket_stats")
+                    f"{index}/{t}" for t in ("docs", "buckets")
                 ]
             ]
             kept = sorted(
@@ -670,10 +670,10 @@ def test_incremental_dedup_large_batch_regime_equivalent(
 def test_incremental_dedup_single_file_estimate_is_upper_bound(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The single-file funnel sizes each of the four slice writes of a
+    """The single-file funnel sizes each of the three slice writes of a
     batch from ``n_kept_est = n_in - n_drops`` (times the band count for
-    the band and stats slices), and the same bound sizes the docs
-    slice's bloom filter. That estimate must bound
+    the band slice), and the same bound sizes the docs slice's bloom
+    filter. That estimate must bound
     the rows each write really produces, in both regimes: duplicate ids
     make it over-estimate, and a NULL id (never removable by the
     anti-join) must not make it under-estimate — an under-sized bloom
@@ -701,7 +701,7 @@ def test_incremental_dedup_single_file_estimate_is_upper_bound(
         for k, b in enumerate(batches):
             mod.dedup_and_append_batch(b, k, index, out, threshold=0.5)
         monkeypatch.setattr(mod, "_write_slice", write_slice)
-        assert len(written) == 4 * len(batches), tag
+        assert len(written) == 3 * len(batches), tag
         assert all(est >= n for _, _, est, n in written), (tag, written)
         # the duplicate-id batch over-estimates: one drop id, two rows
         assert any(k == 2 and est > n for _, k, est, n in written), (tag, written)
@@ -771,7 +771,7 @@ def test_incremental_dedup_verify_shingles_below_join(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents")
     index = str(tmp_path / "idx")
     mod.build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
-    _, _, drops, _, _ = mod._dedup_batch_parts(
+    _, _, drops, _ = mod._dedup_batch_parts(
         docs.filter(F.col("doc_id") % 3 == 1), index, threshold=0.5
     )
     buf = _io.StringIO()
@@ -897,7 +897,7 @@ def _jobs_in_group(spark, fn):
 
 
 def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
-    """Every job of one ``dedup_and_append_batch`` call — the four
+    """Every job of one ``dedup_and_append_batch`` call — the three
     overlapped writes on its thread pool included — and of one
     ``build_dedup_index`` call carries the caller's job group."""
     from ais_data_pipeline_spark.sources.parquet import read_table
@@ -912,7 +912,7 @@ def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path
         spark, lambda: build_dedup_index(docs.filter(F.col("doc_id") % 3 == 0), index)
     )
     assert stray == set()
-    assert len(grouped) >= 3  # the three overlapped index writes
+    assert len(grouped) >= 3  # the pin and the two overlapped index writes
     grouped, stray = _jobs_in_group(
         spark,
         lambda: dedup_and_append_batch(
@@ -920,7 +920,7 @@ def test_incremental_dedup_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path
         ),
     )
     assert stray == set()
-    assert len(grouped) >= 4  # the four overlapped writes
+    assert len(grouped) >= 4  # the pin and the three overlapped writes
     assert grouped == list(range(grouped[0], grouped[-1] + 1))
 
 
@@ -1074,14 +1074,14 @@ def test_ivfpq_build_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
 
 #: jobs of one small-regime ``dedup_and_append_batch`` on the sf0.01
 #: fixture: the feature materialize (3), the hash-set collect (1), the
-#: drop-set collect with its four broadcast exchanges (5) and the four
-#: slice writes (5: the bucket_stats aggregate's shuffle is its own job).
+#: drop-set collect with its four broadcast exchanges (5) and the three
+#: slice writes (3).
 #: Four exchanges, not five: the within-batch and index legs broadcast
 #: the same band-row relation, (doc, text_hash, band, bucket) keyed on
 #: (band, bucket), with no filter on either side (the buckets scan takes
 #: no IN-filter for a join to infer onto one of them), so Spark reuses
 #: one band-row broadcast for both.
-DEDUP_BATCH_MAX_JOBS = 14
+DEDUP_BATCH_MAX_JOBS = 12
 
 
 def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
@@ -1106,7 +1106,7 @@ def test_incremental_dedup_small_batch_job_ceiling(spark, sf_dir, tmp_path):
     )
     assert len(grouped) <= DEDUP_BATCH_MAX_JOBS, grouped
 
-    _, _, drops, _, _ = mod._dedup_batch_parts(batch, index, 0.5, exclude_batch=0)
+    _, _, drops, _ = mod._dedup_batch_parts(batch, index, 0.5, exclude_batch=0)
     drops.collect()
     plan = drops._jdf.queryExecution().executedPlan()
     plan = plan.executedPlan().toString()  # AQE's final plan
@@ -1307,14 +1307,13 @@ def test_embedding_dedup_null_and_empty_hardening(spark, tmp_path):
     assert indexed == [2]  # the NULL row is never indexed
 
 
-def test_write_slice_size_contract_is_structural(spark, tmp_path, capfd, monkeypatch):
+def test_write_slice_size_contract_is_structural(spark, tmp_path, monkeypatch):
     """Round-10 verdict item 4: the single-file funnel must be a
     MEASURED default, not caller discipline — a history-sized slice
     written with the default args keeps its partitioning (parallel
     writer tasks, no repartition(1) one-task shuffle, the shape the
-    round-9 audit caught), a micro-batch-sized slice still collapses
-    to one tidy file, and an explicit single_file=True above the
-    bound is overridden with the M1 warning instead of honored."""
+    round-9 audit caught), and a micro-batch-sized slice still
+    collapses to one tidy file. No argument forces the funnel."""
     from pyspark.sql import functions as F
 
     from ais_data_pipeline_spark.operators import util
@@ -1345,16 +1344,9 @@ def test_write_slice_size_contract_is_structural(spark, tmp_path, capfd, monkeyp
     mod._write_slice(big, p3, 0, approx_rows=5000)
     assert n_files(p3) > 1
 
-    # explicit True above the bound: overridden + warned, not honored
-    capfd.readouterr()
-    p4 = str(tmp_path / "big_forced")
-    mod._write_slice(big, p4, 0, single_file=True, approx_rows=5000)
-    assert "single_file_override" in capfd.readouterr().err
-    assert n_files(p4) > 1
-
-    # explicit False never counts and never funnels
+    # keep_partitioning never counts and never funnels
     p5 = str(tmp_path / "big_false")
-    mod._write_slice(big, p5, 0, single_file=False)
+    mod._write_slice(big, p5, 0, keep_partitioning=True)
     assert n_files(p5) > 1
 
 
@@ -1396,8 +1388,8 @@ def test_incremental_dedup_probe_is_broadcast(spark, sf_dir, tmp_path):
 def test_incremental_dedup_hot_bucket_cap(spark, sf_dir, tmp_path):
     """max_bucket_size guards the quadratic blowup: a boilerplate
     burst whose band buckets exceed the cap is pruned from candidate
-    generation — within the batch AND, via the persisted bucket_stats
-    (mergeable per-slice counts), on later probes against the index.
+    generation — within the batch AND, counting the index's buckets
+    table at probe time, on later probes against the index.
     Capped docs survive (recall inside a degenerate cluster is
     sacrificed, by design); unique docs are unaffected."""
     from ais_data_pipeline_spark.sources.parquet import read_table
@@ -1441,8 +1433,8 @@ def test_incremental_dedup_hot_bucket_cap(spark, sf_dir, tmp_path):
     assert set(range(200, 205)) <= capped
 
     # index-side guard: an index whose HISTORY is the boilerplate
-    # cluster records its shared buckets as hot (25 > 10 in
-    # bucket_stats); a later boilerplate doc then drops without the
+    # cluster holds 25 > 10 rows in each shared bucket; a later
+    # boilerplate doc then drops without the
     # cap (it IS a near-dup of stored docs) but survives with it —
     # every bucket it shares with the cluster is pruned, and its
     # tail-perturbed buckets match nothing.
@@ -1454,8 +1446,8 @@ def test_incremental_dedup_hot_bucket_cap(spark, sf_dir, tmp_path):
         [(400 + i, boiler, "en", "h", 61) for i in range(25)], docs.schema
     )
     build_dedup_index(ident, index2)
-    stats = spark.read.parquet(index2 + "/bucket_stats")
-    assert stats.filter(F.col("n") > 10).count() > 0
+    sizes = spark.read.parquet(index2 + "/buckets").groupBy("band", "bucket").count()
+    assert sizes.filter(F.col("count") > 10).count() > 0
     late = spark.createDataFrame(
         [(300, f"{boiler} extra", "en", "b", 67)], docs.schema
     )
@@ -1473,9 +1465,101 @@ def test_incremental_dedup_hot_bucket_cap(spark, sf_dir, tmp_path):
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == capped
 
 
+def test_incremental_dedup_cap_counts_bucket_filled_one_per_batch(
+    spark, sf_dir, tmp_path
+):
+    """The index side of ``max_bucket_size`` counts the buckets table
+    itself, so a bucket whose members arrive one per micro-batch turns
+    hot once it holds more than the cap rows, however many slices they
+    are spread over. Docs too short to shingle share every band bucket
+    (their minhash signature is NULL) and never verify as near
+    duplicates, so each one survives into a slice of its own."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    schema = read_table(spark, sf_dir, "documents").schema
+    rows = lambda *docs: local_df(  # noqa: E731
+        spark, [(i, t, "en", "b", len(t)) for i, t in docs], schema
+    )
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    cap = 3
+    mod.build_dedup_index(rows((0, "an unrelated history document of several words")), index)
+    for k in range(cap + 1):
+        batch = rows((100 + k, f"short {k}"))
+        assert mod.dedup_and_append_batch(
+            batch, k, index, out, max_bucket_size=cap
+        ) == (1, 1)
+    probe = rows((200, "short probe"), (201, "a longer document with real shingles"))
+
+    def band_docs(cap):
+        _, bands_b, *_ = mod._dedup_batch_parts(probe, index, max_bucket_size=cap)
+        return sorted({r["doc"] for r in bands_b.collect()})
+
+    assert band_docs(None) == [200, 201]
+    assert band_docs(cap + 1) == [200, 201]  # cap + 1 rows: not over it
+    assert band_docs(cap) == [201]
+
+
+def test_incremental_dedup_index_with_retired_stats_table(spark, sf_dir, tmp_path):
+    """An index written while the hot-bucket counts were still kept
+    holds a ``bucket_stats`` (band, bucket, n) table beside docs and
+    buckets, under the same layout marker. It probes and appends
+    without a rebuild, deciding exactly as an index without that
+    table; compaction leaves the table out of the new generation and
+    collects it with the old one, and a rebuild removes it."""
+    from ais_data_pipeline_spark import fsutil
+    from ais_data_pipeline_spark.sources.parquet import read_table
+    from ais_data_pipeline_spark.streaming import incremental_dedup as mod
+
+    docs = read_table(spark, sf_dir, "documents")
+    k = F.col("doc_id")
+    hist, batch = docs.filter(k % 3 == 0), docs.filter(k % 3 == 1)
+    probe = docs.filter(k % 7 == 2).limit(40)
+
+    def with_stats(index):
+        stats = (
+            spark.read.parquet(index + "/buckets")
+            .groupBy("band", "bucket")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= 2)
+        )
+        mod._write_slice(stats, index + "/bucket_stats", mod.HISTORY_BATCH)
+
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    for index in (old, new):
+        mod.build_dedup_index(hist, index)
+    with_stats(old)
+
+    def kept(index, cap):
+        survivors = mod.dedup_batch_against_index(probe, index, max_bucket_size=cap)
+        return sorted(r["doc_id"] for r in survivors.collect())
+
+    for cap in (None, 3):
+        assert kept(old, cap) == kept(new, cap), cap
+    assert mod.dedup_and_append_batch(
+        batch, 0, old, str(tmp_path / "out-old"), max_bucket_size=3
+    ) == mod.dedup_and_append_batch(
+        batch, 0, new, str(tmp_path / "out-new"), max_bucket_size=3
+    )
+
+    assert sorted(mod.compact_dedup_index(spark, old)) == ["buckets", "docs"]
+    root = fsutil.current_root(old)
+    assert root != old and not os.path.exists(root + "/bucket_stats")
+    assert os.path.isdir(old + "/bucket_stats")  # the old generation, kept one cycle
+    for cap in (None, 3):
+        assert kept(old, cap) == kept(new, cap), cap
+    mod.compact_dedup_index(spark, old)
+    assert not os.path.exists(old + "/bucket_stats")
+
+    with_stats(new)
+    mod.build_dedup_index(hist, new)
+    assert not os.path.exists(new + "/bucket_stats")
+
+
 def test_incremental_dedup_index_compaction(spark, sf_dir, tmp_path):
     """Compaction folds per-batch slices into one history partition:
-    row counts preserved (bucket_stats merged by sum), slice dirs
+    row counts preserved, slice dirs
     reduced to src_batch=-1 only, and a post-compaction probe decides
     exactly as before."""
     import glob as _glob
@@ -1864,6 +1948,58 @@ def test_incremental_embedding_dedup_semantics_and_replay(spark, tmp_path):
     ).write.mode("append").parquet(landing)
     drain(base + "/ck1b")
     assert sorted(r["vec_id"] for r in spark.read.parquet(out).collect()) == [11, 21]
+
+
+def test_incremental_embedding_dedup_regimes_equivalent(spark, tmp_path, monkeypatch):
+    """The embedding probe restricts the vecs scan to the batch's
+    buckets through ``util.KeySet``: literal IN values while the bound
+    (the batch's rows, and at most 2**n_planes bucket ids) is at most
+    ``util.PUSHDOWN_LIMIT``, else a semi-join to a pinned distinct set.
+    Forcing the large regime (PUSHDOWN_LIMIT=-1) on the same batches,
+    with NULL embeddings, duplicate and NULL ids and an empty batch,
+    keeps the same survivors and writes the same index."""
+    from ais_data_pipeline_spark.operators import util
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_embedding_dedup_index,
+        run_incremental_embedding_dedup,
+    )
+
+    dim = 16
+
+    def vec(axis, scale):
+        v = [0.0] * dim
+        v[axis] = float(scale)
+        return v
+
+    schema = "vec_id bigint, embedding array<double>"
+    batches = [
+        # 10 copies history, 12 copies its predecessor 11, 13 is NULL
+        [(10, vec(0, 2.0)), (11, vec(1, 1.0)), (12, vec(1, 3.0)), (13, None)],
+        # 20 copies survivor 11; id 21 twice; 22 copies one of the 21s
+        [
+            (20, vec(1, 0.5)), (21, vec(2, 1.0)), (21, vec(3, 1.0)),
+            (22, vec(3, 4.0)), (None, vec(4, 1.0)),
+        ],
+        [],
+        # 41 copies an indexed 21
+        [(40, None), (41, vec(2, 7.0))],
+    ]
+    results = {}
+    for tag, lim in (("small", 10_000), ("large", -1)):
+        monkeypatch.setattr(util, "PUSHDOWN_LIMIT", lim)
+        base = str(tmp_path / tag)
+        index, out, landing = base + "/idx", base + "/kept", base + "/land"
+        build_embedding_dedup_index(
+            spark.createDataFrame([(0, vec(0, 1.0)), (1, None)], schema), index
+        )
+        for rows in batches:
+            spark.createDataFrame(rows, schema).write.mode("append").parquet(landing)
+            stream = spark.readStream.schema(schema).parquet(landing)
+            run_incremental_embedding_dedup(stream, index, out, base + "/ck")
+        results[tag] = [_sorted_rows(spark.read.parquet(p)) for p in (out, index + "/vecs")]
+    assert results["small"] == results["large"]
+    kept = [r["vec_id"] for r in spark.read.parquet(out).collect()]
+    assert sorted(kept, key=repr) == sorted([11, 13, 21, 21, None, 40], key=repr)
 
 
 def test_incremental_embedding_probe_through_uri_writes_no_local_dir(

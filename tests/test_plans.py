@@ -1107,9 +1107,11 @@ def test_shuffle_byte_ceilings():
     plan regression — the class of bug this audit caught in round 8
     (minhash verify re-shuffling the corpus text: +0.8x corpus bytes,
     which trips the minhash ceiling below) now fails CI instead of
-    waiting for a judge. Runs the audit tool in a subprocess because
-    the REST status-store needs spark.ui.enabled, which the shared
-    test session pins off."""
+    waiting for a judge. Runs the audit tool in a subprocess, in a
+    session of its own: the ceilings were measured on the engine's
+    default session, which the shared test session need not match
+    (it runs ANSI on in the ANSI lane), and the tool reads its
+    stage totals from the in-process status store of that session."""
     import json
     import os
     import subprocess

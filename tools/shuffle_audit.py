@@ -5,10 +5,14 @@ wire VOLUME. The scale question a plan audit can't answer is "the plan
 has 2 exchanges — but do they carry the table or just group keys?";
 this tool answers it with the Spark status-store numbers.
 
-Method: each query runs to completion under a session with the UI
-status store enabled; the per-stage `shuffleWriteBytes` total is
-snapshotted from the REST API before and after, and the delta
-attributed to the query. (The REST `inputBytes` counter is NOT used:
+Method: each query runs to completion; the per-stage
+`shuffleWriteBytes` total is read from the in-process status store
+(`statusStore().stageList`, kept with the UI off, the same store
+`perfbench/spans.py` reads) before and after, and the delta attributed
+to the query. A total over all stages, not over the query's job group:
+a streaming query runs its micro-batch jobs under its own run-id job
+group, so the streaming legs' shuffles would not be counted. (The
+status store's `inputBytes` counter is NOT used:
 for local-filesystem parquet it only captures footer reads —
 measured 17 KiB for a full 10 MiB lineitem scan — so the input base
 is the on-disk size of each query's declared source tables instead:
@@ -32,7 +36,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -85,9 +88,14 @@ AUDIT: dict[str, list[str]] = {
 }
 
 
-def _shuffle_total(api: str) -> int:
-    with urllib.request.urlopen(api + "/stages", timeout=10) as r:
-        return sum(s.get("shuffleWriteBytes", 0) for s in json.load(r))
+def _shuffle_total(spark) -> int:
+    """Shuffle bytes written by every stage the status store holds."""
+    sc = spark.sparkContext
+    stages = sc._jsc.sc().statusStore().stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0),
+        sc._jvm.java.util.ArrayList(),
+    )
+    return sum(stages.apply(i).shuffleWriteBytes() for i in range(stages.size()))
 
 
 def main() -> None:
@@ -99,17 +107,12 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
         extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4099",
             # the audit reads post-run totals; retention must outlive a
             # multi-job query like the curation plan
             "spark.ui.retainedStages": "5000",
             "spark.ui.retainedJobs": "5000",
         },
     )
-    app_id = spark.sparkContext.applicationId
-    ui = spark.sparkContext.uiWebUrl or "http://localhost:4099"
-    api = f"{ui}/api/v1/applications/{app_id}"
 
     from ais_data_pipeline_spark.queries import registry
 
@@ -122,11 +125,11 @@ def main() -> None:
             os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
             for t in AUDIT[name]
         )
-        before = _shuffle_total(api)
+        before = _shuffle_total(spark)
         rows = q.fn(spark, sf_dir).collect()
         assert rows is not None
         time.sleep(0.5)  # let the status store settle the last stage
-        d_sh = _shuffle_total(api) - before
+        d_sh = _shuffle_total(spark) - before
         out[name] = {
             "tables_mib": round(tables_b / 2**20, 2),
             "shuffle_write_mib": round(d_sh / 2**20, 2),
